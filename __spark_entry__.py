@@ -96,6 +96,18 @@ def _alias_names(spark: SparkSession, sf_dir: str) -> list[str]:
     return [r["text"].replace(" ", "_") for r in rows]
 
 
+def _kg_graph(spark: SparkSession, sf_dir: str):
+    """(linked, nodes, edges) of the KG pipeline over sf_dir: annotate
+    (cached), mentions (cached), the derived alias dict, build_graph."""
+    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
+    from phonlp_spark.pipeline.linking import build_alias_dict
+    from phonlp_spark.pipeline.materialize import build_graph
+    annotated = _annotated(spark, sf_dir).cache()
+    mentions = mentions_df(annotated).cache()
+    alias = build_alias_dict(spark, _alias_names(spark, sf_dir))
+    return build_graph(mentions, triples_df(annotated), alias)
+
+
 _CENTS_CACHE: dict[str, list] = {}
 
 
@@ -122,16 +134,8 @@ def _trained_cents(spark: SparkSession, sf_dir: str) -> list:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: documents -> annotate -> triples -> link -> canonical
     graph edges, on sf0.001."""
-    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-    from phonlp_spark.pipeline.linking import build_alias_dict
-    from phonlp_spark.pipeline.materialize import build_graph
-
     sf_dir = "/root/testdata/sf0.001"
-    annotated = _annotated(spark, sf_dir).cache()
-    mentions = mentions_df(annotated).cache()
-    alias = build_alias_dict(spark, _alias_names(spark, sf_dir))
-    _linked, _nodes, edges = build_graph(
-        mentions, triples_df(annotated), alias)
+    _linked, _nodes, edges = _kg_graph(spark, sf_dir)
     return edges.select("subj_id", "pred", "obj_id", "doc_id", "sent_id")
 
 
@@ -199,27 +203,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return triples_df(_annotated(s, d))
     q["kg_triples"] = kg_triples
 
-    def kg_nodes(s, d):
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, nodes, _e = build_graph(men, triples_df(ann), alias)
-        return nodes
-    q["kg_nodes"] = kg_nodes
-
-    def kg_edges(s, d):
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, _n, edges = build_graph(men, triples_df(ann), alias)
-        return edges
-    q["kg_edges"] = kg_edges
+    q["kg_nodes"] = lambda s, d: _kg_graph(s, d)[1]
+    q["kg_edges"] = lambda s, d: _kg_graph(s, d)[2]
 
     def kg_span_invariant(s, d):
         """Docs whose span sequence survives the pipeline unchanged —
@@ -385,13 +370,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ('E'|'X' + 12 hex, linking.py:62,161), node ids must be unique
         and canonicals non-null.  All violation columns oracle to the
         constant 0; the anchor (n_docs) comes from the input table."""
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, nodes, edges = build_graph(men, triples_df(ann), alias)
+        _l, nodes, edges = _kg_graph(s, d)
         nodes = nodes.cache()
         id_re = "^[EX][0-9a-f]{12}$"
         nid = nodes.select("entity_id")

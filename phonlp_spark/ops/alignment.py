@@ -28,6 +28,7 @@ tokens.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -197,6 +198,29 @@ def _base_rel(col) -> F.Column:
     return F.split(col, ":").getItem(0)
 
 
+def _cached_alignment(gold: DataFrame, system: DataFrame,
+                      cache_registry: list | None) -> DataFrame:
+    """align_tokens(gold, system), lazily persisted MEMORY_ONLY.
+
+    Every aligned metric references the alignment subtree 2-3 times
+    (e.g. via _aligned_arcs' head_map self-join), so an uncached plan
+    recomputes the applyInPandas walk per reference (the r5
+    regression).  Callers scoring many metrics over one alignment pass
+    ``cache_registry`` (a list) — the cached frame is appended so THEY
+    own unpersist timing (the build_graph convention); without a
+    registry the entry lives until Spark's LRU storage eviction.
+    MEMORY_ONLY (not the cache() default MEMORY_AND_DISK) keeps that
+    eviction real: disk-spilled blocks are never dropped by the storage
+    LRU, so a long-lived driver scoring many distinct (gold, system)
+    pairs without a registry would otherwise grow storage unboundedly
+    (ADVICE r6); an evicted block here just recomputes the walk.
+    """
+    aligned = align_tokens(gold, system).persist(StorageLevel.MEMORY_ONLY)
+    if cache_registry is not None:
+        cache_registry.append(aligned)
+    return aligned
+
+
 def _aligned_arcs(gold: DataFrame, system: DataFrame,
                   aligned: DataFrame) -> DataFrame:
     """Matched word pairs decorated with both sides' (head, base
@@ -228,24 +252,9 @@ def uas_las_aligned(gold: DataFrame, system: DataFrame,
 
     LAZY: returns a one-row plan; nothing is collected here
     (composition-safe — the caller decides when jobs run).  The
-    expensive cogrouped alignment is ALWAYS marked .cache() (lazy):
-    every metric references the alignment subtree 2-3 times via
-    _aligned_arcs' head_map self-join, so an uncached plan recomputes
-    the applyInPandas walk per reference (the r5 regression).  Callers
-    scoring many metrics over one alignment pass ``cache_registry``
-    (a list) — the cached frame is appended so THEY own unpersist
-    timing (the build_graph convention); without a registry the entry
-    lives until Spark's LRU storage eviction.  MEMORY_ONLY (not the
-    cache() default MEMORY_AND_DISK) keeps that eviction real: disk-
-    spilled blocks are never dropped by the storage LRU, so a
-    long-lived driver scoring many distinct (gold, system) pairs
-    without a registry would otherwise grow storage unboundedly
-    (ADVICE r6); an evicted block here just recomputes the walk.
+    alignment is cached lazily (see _cached_alignment).
     """
-    from pyspark import StorageLevel
-    aligned = align_tokens(gold, system).persist(StorageLevel.MEMORY_ONLY)
-    if cache_registry is not None:
-        cache_registry.append(aligned)
+    aligned = _cached_alignment(gold, system, cache_registry)
     # map each side's head index to its aligned counterpart: an arc is
     # correct when the head of the gold word aligns to the head of the
     # system word (root, head 0, matches root)
@@ -280,9 +289,7 @@ def aligned_field_score(gold: DataFrame, system: DataFrame,
     LAZY (see uas_las_aligned): pass cache_registry to cache the
     shared alignment and own its unpersist timing.
     """
-    aligned = align_tokens(gold, system).cache()
-    if cache_registry is not None:
-        cache_registry.append(aligned)
+    aligned = _cached_alignment(gold, system, cache_registry)
     g = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
                     F.col(field).alias("g_f"))
     s = system.select(*SENT_KEY, F.col("token_id").alias("system_token_id"),
@@ -338,9 +345,7 @@ def clas_aligned(gold: DataFrame, system: DataFrame,
     LAZY (see uas_las_aligned): pass cache_registry to cache the
     shared alignment and own its unpersist timing.
     """
-    aligned = align_tokens(gold, system).cache()
-    if cache_registry is not None:
-        cache_registry.append(aligned)
+    aligned = _cached_alignment(gold, system, cache_registry)
     j = _aligned_arcs(gold, system, aligned)
     content = F.col("g_rel").isin(*sorted(CONTENT_DEPRELS))
     ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
@@ -448,9 +453,7 @@ def mlas_aligned(gold: DataFrame, system: DataFrame,
     n_system, n_aligned, n_correct, precision_permille,
     recall_permille, f1_permille).  LAZY (see uas_las_aligned).
     """
-    aligned = align_tokens(gold, system).cache()
-    if cache_registry is not None:
-        cache_registry.append(aligned)
+    aligned = _cached_alignment(gold, system, cache_registry)
     j = _aligned_arcs(gold, system, aligned)
     g_attr = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
                          F.col("upos").alias("g_upos"),
@@ -513,9 +516,7 @@ def blex_aligned(gold: DataFrame, system: DataFrame,
     head, deprel, lemma).  One row, same shape as clas_aligned.
     LAZY (see uas_las_aligned).
     """
-    aligned = align_tokens(gold, system).cache()
-    if cache_registry is not None:
-        cache_registry.append(aligned)
+    aligned = _cached_alignment(gold, system, cache_registry)
     j = _aligned_arcs(gold, system, aligned)
     g_l = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
                       F.col("lemma").alias("g_lemma"))

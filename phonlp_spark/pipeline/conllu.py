@@ -78,30 +78,6 @@ def read_token_tag(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def annotations_to_conllu(ann: DataFrame, ner_in_misc: bool = True) -> DataFrame:
-    """Token-level annotation table -> one row per sentence of
-    CoNLL-U-formatted text (the reference's 10-col variant with NER in
-    the last column, annotate_model.py:300-322).  Write with
-    `df.select('block').write.text(...)`."""
-    line = F.concat_ws(
-        "\t",
-        F.col("token_id").cast("string"), F.col("word"), F.lit("_"),
-        F.lit("_"), F.col("upos"), F.lit("_"),
-        F.col("head").cast("string"), F.col("deprel"), F.lit("_"),
-        F.col("ner") if ner_in_misc else F.lit("_"),
-    )
-    return (
-        ann.withColumn("line", line)
-        .groupBy("doc_id", "sent_id")
-        .agg(F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("token_id", "line"))),
-                lambda s: s["line"],
-            ), "\n").alias("block"))
-        .orderBy("doc_id", "sent_id")
-    )
-
-
 def annotations_to_tsv6(ann: DataFrame) -> DataFrame:
     """The reference's 6-column output (index, word, posTag, nerLabel,
     headIndex, depLabel — annotate_model.py:323-337), one sentence

@@ -46,10 +46,6 @@ DOCUMENTS_SCHEMA = T.StructType([
 MEDIA_KINDS = ("image", "video", "audio")
 
 
-def read_flat_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def interleave_documents(flat: DataFrame) -> DataFrame:
     """flat (doc_id, text, ...) -> interleaved documents table.
 

@@ -11,6 +11,14 @@ doubles as snapshot metadata and resume checkpoint — SURVEY.md intro):
     out_dir/nodes/*.parquet              (global, rebuilt per run)
     out_dir/manifest/*.parquet           (append-only)
 
+Graph step (``build_graph``; ``run_kg`` shares its body): link the
+distinct mention surfaces against the broadcast alias dictionary, then
+canonicalize with ONE connected-components pass over the dictionary's
+same-as graph (``dict_canonical_names``).  That one result gives every
+surface its canonical id (edges, linked mentions) and every component
+its display name (nodes), in memory and, for ``run_kg``'s global nodes
+table, from disk.
+
 Buckets are `pmod(xxhash64(doc_id), n_buckets)` — content-derived, so
 a resumed run (or a differently-sized cluster) maps every document to
 the same bucket.  Resume = anti-join of buckets against manifest rows
@@ -21,12 +29,16 @@ idempotently via dynamic partition overwrite.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from phonlp_spark.pipeline.annotate import (
     annotate_sentences_df,
@@ -34,80 +46,76 @@ from phonlp_spark.pipeline.annotate import (
     mentions_df,
     triples_df,
 )
-from phonlp_spark.pipeline.cc import canonical_map
+from phonlp_spark.pipeline.cc import connected_components
 from phonlp_spark.pipeline.ingest import split_sentences
-from phonlp_spark.pipeline.linking import link_mentions, same_as_edges
+from phonlp_spark.pipeline.linking import same_as_edges
 
 MANIFEST_COLS = ("run_id", "bucket", "status", "docs", "sentences", "triples",
                  "wall_ms", "attempt", "input_fingerprint", "n_buckets")
+MANIFEST_SCHEMA = ", ".join(
+    f"{c} {'string' if c in ('run_id', 'status', 'input_fingerprint') else 'long'}"
+    for c in MANIFEST_COLS)
 
 
-def input_fingerprint(documents: DataFrame) -> str:
-    row = documents.select(
+def input_fingerprint(docs: DataFrame) -> tuple[str, dict[int, int]]:
+    """("n:hex" input fingerprint, {bucket: doc count}) from ONE
+    per-bucket aggregate over the bucketed documents.  bit_xor is
+    associative, so XOR-ing the per-bucket hashes on the driver gives
+    exactly the whole-table (count, bit_xor(xxhash64(doc_id))) string
+    that earlier manifests recorded — their resume still applies."""
+    rows = docs.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("doc_id")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h']:x}"
+        F.bit_xor(F.xxhash64("doc_id")).alias("h")).collect()
+    h = functools.reduce(operator.xor, (r["h"] for r in rows), 0)
+    return (f"{sum(r['n'] for r in rows)}:{h:x}",
+            {int(r["bucket"]): int(r["n"]) for r in rows})
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The manifest table, or None before the first run.  The schema is
+    given, not inferred (no footer-reading job); a manifest written
+    before n_buckets existed reads it as null and so never matches."""
     path = os.path.join(out_dir, "manifest")
     try:
-        return spark.read.parquet(path)
-    except Exception:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    except AnalysisException:  # no manifest directory yet
         return None
 
 
-def done_buckets(spark: SparkSession, out_dir: str, fingerprint: str,
-                 n_buckets: int) -> list[int]:
-    """Bucket ids safe to skip: done, same input, AND same bucketing.
-
-    A bucket id means a different document set under a different
-    n_buckets, so manifests written with another layout never satisfy
-    resume (they'd silently leave documents unprocessed)."""
-    mf = read_manifest(spark, out_dir)
-    if mf is None or "n_buckets" not in mf.columns:
-        return []
-    return [
-        r["bucket"]
-        for r in mf.filter((F.col("status") == "done")
-                           & (F.col("input_fingerprint") == fingerprint)
-                           & (F.col("n_buckets") == n_buckets))
-        .select("bucket").distinct().collect()
-    ]
-
-
 def dict_canonical_names(alias_dict: DataFrame) -> DataFrame:
-    """(cid, dict_canonical): canonical display name per alias-dict
-    component.  Depends ONLY on the alias dictionary (same-as edges are
-    dictionary-internal and singletons fall back to their own id), so a
-    resumed run computes the identical map without re-seeing every
-    mention surface."""
-    sa = same_as_edges(alias_dict)
-    ents = alias_dict.select(F.col("entity_id").alias("node")).distinct()
-    canon = canonical_map(sa, ents).withColumnRenamed("node", "entity_id")
+    """(entity_id, cid, dict_canonical), one row per dictionary entity:
+    its same-as component id and the component's canonical display
+    name.  The only connected-components pass of a KG run: same-as
+    edges are dictionary-internal, so the result depends ONLY on the
+    alias dictionary, and any id outside it (a minted X-id) or a
+    dictionary entity with no same-as edge is its own component."""
+    cc = connected_components(same_as_edges(alias_dict))
     return (
-        alias_dict.select("entity_id", "canonical")
-        .join(canon, "entity_id", "left")
+        alias_dict.groupBy("entity_id").agg(F.min("canonical").alias("canonical"))
+        .join(cc.withColumnRenamed("node", "entity_id"), "entity_id", "left")
         .withColumn("cid", F.coalesce("component", "entity_id"))
-        .groupBy("cid").agg(F.min("canonical").alias("dict_canonical"))
+        .select("entity_id", "cid", F.min("canonical").over(
+            Window.partitionBy("cid")).alias("dict_canonical"))
     )
 
 
-def nodes_from_linked(linked_mentions: DataFrame, canon_text: DataFrame) -> DataFrame:
+def nodes_from_linked(linked_mentions: DataFrame, canon: DataFrame) -> DataFrame:
     """Aggregate the canonical-entity node table from linked mentions.
 
-    canon_text is bounded by the alias dictionary (small by contract)
-    -> broadcast; the mention aggregate is a plain hash-agg on
-    canonical_id.
+    canon (dict_canonical_names) is bounded by the alias dictionary
+    (small by contract) -> broadcast; the mention aggregate is a plain
+    hash-agg on canonical_id.  A canonical_id that is a component id
+    keys its own dictionary row, whose dict_canonical names the
+    component.
     """
     return (
         linked_mentions.groupBy("canonical_id")
         .agg(F.count(F.lit(1)).alias("mention_count"),
              F.min("text").alias("top_text"),
              F.mode("type").alias("type"))
-        .join(F.broadcast(canon_text),
-              F.col("canonical_id") == F.col("cid"), "left")
+        .join(F.broadcast(canon.select(F.col("entity_id").alias("canonical_id"),
+                                       "dict_canonical")),
+              "canonical_id", "left")
         .select(
             F.col("canonical_id").alias("entity_id"),
             F.coalesce("dict_canonical", "top_text").alias("canonical"),
@@ -115,40 +123,22 @@ def nodes_from_linked(linked_mentions: DataFrame, canon_text: DataFrame) -> Data
     )
 
 
-def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
-                cache_registry: list | None = None,
-                linking_strategy: str = "auto"):
-    """Linking -> canonicalization -> graph tables (no IO).
-
-    Returns (linked_mentions_with_canonical_id, nodes, edges).
-
-    Everything expensive happens once at SURFACE grain (distinct
-    normalized mention texts): link, canonicalize, resolve — the
-    surface->canonical map then joins back onto the mention and triple
-    streams.  Those joins carry NO forced broadcast hint: distinct
-    surfaces are unbounded at corpus scale (hundreds of millions of
-    rows at 100 TB would OOM a forced broadcast), so AQE picks
-    broadcast when the map is actually small and degrades to a shuffle
-    join when it is not.  Only alias-dict-bounded sides are hinted.
-
-    Caches created here are appended to cache_registry (if given) so
-    callers can unpersist after their writes complete.
-    """
+def _graph_tables(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
+                  cache_registry: list | None, linking_strategy: str):
+    """build_graph's body: (linked_canon, canon, edges), where canon is
+    dict_canonical_names(alias_dict) so run_kg can build its global
+    nodes table from the same single CC pass."""
     from phonlp_spark.pipeline.linking import link_surfaces, norm_surface
 
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
     surf_ent = link_surfaces(m.select("nsurf").distinct(), alias_dict,
                              strategy=linking_strategy).cache()
-
-    # canonicalization at entity grain (bounded by |alias dict| +
-    # |distinct surfaces|)
-    sa = same_as_edges(alias_dict)
-    canon = (canonical_map(sa, surf_ent.select(F.col("entity_id").alias("node")))
-             .withColumnRenamed("node", "entity_id"))
+    canon = dict_canonical_names(alias_dict)
     surf_map = (
-        surf_ent.join(canon, "entity_id", "left")
+        surf_ent.join(F.broadcast(canon.select("entity_id", "cid")),
+                      "entity_id", "left")
         .select("nsurf", "entity_id",
-                F.coalesce("component", "entity_id").alias("canonical_id"))
+                F.coalesce("cid", "entity_id").alias("canonical_id"))
         .cache()
     )
     if cache_registry is not None:
@@ -168,9 +158,34 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
               "onsurf", "inner")
         .select("subj_id", "pred", "obj_id", "doc_id", "sent_id")
     )
+    return linked_canon, canon, edges
 
-    nodes = nodes_from_linked(linked_canon, dict_canonical_names(alias_dict))
-    return linked_canon, nodes, edges
+
+def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
+                cache_registry: list | None = None,
+                linking_strategy: str = "auto"):
+    """Linking -> canonicalization -> graph tables (no IO).
+
+    Returns (linked_mentions_with_canonical_id, nodes, edges).
+
+    Everything expensive happens once at SURFACE grain (distinct
+    normalized mention texts): link, then resolve each surface's entity
+    to its same-as component through ONE connected-components pass over
+    the alias dictionary (dict_canonical_names) — the surface->canonical
+    map then joins back onto the mention and triple streams.  Those
+    joins carry NO forced broadcast hint: distinct surfaces are
+    unbounded at corpus scale (hundreds of millions of rows at 100 TB
+    would OOM a forced broadcast), so AQE picks broadcast when the map
+    is actually small and degrades to a shuffle join when it is not.
+    Only alias-dict-bounded sides are hinted.  ``nodes`` is a lazy plan
+    over the same canonicalization: it runs no job until consumed.
+
+    Caches created here are appended to cache_registry (if given) so
+    callers can unpersist after their writes complete.
+    """
+    linked_canon, canon, edges = _graph_tables(
+        mentions, triples, alias_dict, cache_registry, linking_strategy)
+    return linked_canon, nodes_from_linked(linked_canon, canon), edges
 
 
 def run_kg(
@@ -192,6 +207,12 @@ def run_kg(
     leaves previously-done buckets intact and the interrupted buckets
     unrecorded -> recomputed and overwritten on the next run.
 
+    Pre-work is two driver collects: the per-bucket fingerprint
+    aggregate and the manifest rows for this input+layout; a run whose
+    buckets are all done returns after them.  The graph step runs one
+    connected-components pass, reused for the edges and for the global
+    nodes table rebuilt from the on-disk mentions.
+
     ``dedup``: exact-dedup the documents BEFORE the annotation kernel
     (the standard production layout: duplicates never pay kernel cost).
     Content key = digest of the full span sequence; the kept
@@ -211,25 +232,30 @@ def run_kg(
 
     docs = documents.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-    fp = input_fingerprint(documents)
-    skip = done_buckets(spark, out_dir, fp, n_buckets) if resume else []
-    todo = docs.filter(~F.col("bucket").isin(skip)) if skip else docs
-    # per-bucket attempt lineage: a recomputed bucket's attempt is
-    # 1 + its max recorded attempt for this input+layout (crashed
+    fp, bucket_docs = input_fingerprint(docs)
+    # one manifest read serves both the skip set (done, same input AND
+    # same bucketing: a bucket id means a different document set under
+    # a different n_buckets, so another layout never satisfies resume)
+    # and the per-bucket attempt lineage: a recomputed bucket's attempt
+    # is 1 + its max recorded attempt for this input+layout (crashed
     # attempts append no row, so the counter tracks RECORDED runs)
+    skip: set[int] = set()
     prior_attempts: dict[int, int] = {}
     mf = read_manifest(spark, out_dir)
-    if mf is not None and "n_buckets" in mf.columns:
-        prior_attempts = {
-            int(r["bucket"]): int(r["a"])
-            for r in mf.filter((F.col("input_fingerprint") == fp)
-                               & (F.col("n_buckets") == n_buckets))
-            .groupBy("bucket").agg(F.max("attempt").alias("a")).collect()
-        }
-
-    if todo.isEmpty():
-        return {"run_id": run_id, "processed_buckets": [], "skipped_buckets": skip,
+    if mf is not None:
+        for r in (mf.filter((F.col("input_fingerprint") == fp)
+                            & (F.col("n_buckets") == n_buckets))
+                  .select("bucket", "status", "attempt").collect()):
+            b = int(r["bucket"])
+            prior_attempts[b] = max(prior_attempts.get(b, 0), int(r["attempt"]))
+            if resume and r["status"] == "done":
+                skip.add(b)
+    todo_docs = {b: n for b, n in bucket_docs.items() if b not in skip}
+    if not todo_docs:
+        return {"run_id": run_id, "processed_buckets": [],
+                "skipped_buckets": sorted(skip),
                 "docs": 0, "sentences": 0, "triples": 0, "wall_ms": 0}
+    todo = docs.filter(~F.col("bucket").isin(*skip)) if skip else docs
 
     sentences = split_sentences(todo.select("doc_id", "spans"))
     annotated = annotate_sentences_df(sentences, salt_partitions).cache()
@@ -249,9 +275,8 @@ def run_kg(
     triples = triples_df(annotated).cache()
     caches = [mentions, triples]
 
-    linked_canon, _nodes, edges = build_graph(
-        mentions, triples, alias_dict, cache_registry=caches,
-        linking_strategy=linking_strategy)
+    linked_canon, canon, edges = _graph_tables(
+        mentions, triples, alias_dict, caches, linking_strategy)
 
     # writes (bucket-partitioned; dynamic overwrite = idempotent re-run)
     ann.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/annotations")
@@ -265,46 +290,37 @@ def run_kg(
     # in-memory linked_canon covers only recomputed buckets, so rebuild
     # it from the full on-disk mentions table (all buckets) after the
     # per-bucket writes commit — otherwise a partial resume would
-    # silently replace the table with a subset-derived one.
-    nodes_full = nodes_from_linked(
-        spark.read.parquet(f"{out_dir}/mentions"),
-        dict_canonical_names(alias_dict))
-    nodes_full.write.mode("overwrite").parquet(f"{out_dir}/nodes")
+    # silently replace the table with a subset-derived one.  canon is
+    # the canonicalization the edges used: no second CC pass.
+    nodes_from_linked(spark.read.parquet(f"{out_dir}/mentions"), canon) \
+        .write.mode("overwrite").parquet(f"{out_dir}/nodes")
 
-    # per-bucket lineage metrics
-    stats = (
-        todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("docs"))
-        .join(with_bucket(annotated.select("doc_id", F.size("triples").alias("nt")))
-              .groupBy("bucket").agg(
-                  F.count(F.lit(1)).alias("sentences"),
-                  F.sum("nt").alias("triples")), "bucket", "left")
-        .fillna(0, ["sentences", "triples"])
-        .collect()
-    )
+    # per-bucket lineage metrics; doc counts come from the fingerprint
+    # aggregate, so only the annotated side needs a job
+    ann_counts = {
+        int(r["bucket"]): (int(r["sentences"]), int(r["triples"] or 0))
+        for r in with_bucket(annotated.select("doc_id", F.size("triples").alias("nt")))
+        .groupBy("bucket").agg(F.count(F.lit(1)).alias("sentences"),
+                               F.sum("nt").alias("triples")).collect()
+    }
+    stats = {b: (n, *ann_counts.get(b, (0, 0))) for b, n in sorted(todo_docs.items())}
     wall_ms = int((time.time() - t0) * 1000)
     manifest_rows = [
-        (run_id, int(r["bucket"]), "done", int(r["docs"]), int(r["sentences"]),
-         int(r["triples"]), wall_ms,
-         prior_attempts.get(int(r["bucket"]), 0) + 1, fp, n_buckets)
-        for r in stats
+        (run_id, b, "done", n, sents, trips, wall_ms,
+         prior_attempts.get(b, 0) + 1, fp, n_buckets)
+        for b, (n, sents, trips) in stats.items()
     ]
-    spark.createDataFrame(manifest_rows, ", ".join(
-        f"{c} {'string' if c in ('run_id', 'status', 'input_fingerprint') else 'long'}"
-        for c in MANIFEST_COLS
-    )).write.mode("append").parquet(f"{out_dir}/manifest")
+    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA) \
+        .write.mode("append").parquet(f"{out_dir}/manifest")
 
     annotated.unpersist()
     for df in caches:  # release executor storage memory for later jobs
         df.unpersist()
-    totals = {
-        "docs": sum(r["docs"] for r in stats),
-        "sentences": sum(r["sentences"] or 0 for r in stats),
-        "triples": sum(r["triples"] or 0 for r in stats),
-    }
+    n_docs, n_sents, n_triples = (sum(col) for col in zip(*stats.values()))
     return {
         "run_id": run_id,
-        "processed_buckets": sorted(int(r["bucket"]) for r in stats),
+        "processed_buckets": list(stats),
         "skipped_buckets": sorted(skip),
         "wall_ms": wall_ms,
-        **totals,
+        "docs": n_docs, "sentences": n_sents, "triples": n_triples,
     }

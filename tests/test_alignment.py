@@ -333,6 +333,26 @@ def test_aligned_metrics_lazy_with_cache_registry(spark):  # noqa: F811
         c.unpersist()
 
 
+def test_every_aligned_metric_caches_memory_only(spark):  # noqa: F811
+    """All five aligned metrics share one cached-alignment path:
+    MEMORY_ONLY, handed to the registry."""
+    from pyspark import StorageLevel
+
+    from phonlp_spark.ops import alignment as A
+    rows = [("d", 0, 1, "a", 2, "nsubj", "NOUN", "_", "a"),
+            ("d", 0, 2, "b", 0, "root", "VERB", "_", "b")]
+    df = spark.createDataFrame(
+        rows, "doc_id string, sent_id int, token_id int, word string, "
+              "head int, deprel string, upos string, feats string, lemma string")
+    for fn in (A.uas_las_aligned, A.aligned_field_score, A.clas_aligned,
+               A.mlas_aligned, A.blex_aligned):
+        reg = []
+        fn(df, df, cache_registry=reg)
+        assert [c.storageLevel for c in reg] == [StorageLevel.MEMORY_ONLY], fn
+        for c in reg:
+            c.unpersist()
+
+
 # --- MLAS / BLEX parity vs the reference evaluator ------------------
 
 def _conllu_full(sentences):

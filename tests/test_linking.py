@@ -48,8 +48,7 @@ def test_miss_mints_stable_content_id(spark):  # noqa: F811
 def test_same_as_edges_connect_truncation_collisions(spark):  # noqa: F811
     # two canonicals sharing the truncated 2-segment alias "A_B"
     alias = build_alias_dict(spark, ["A_B_C", "A_B_D"])
-    linked = link_mentions(_mentions(spark, ["A_B_C"]), alias)
-    edges = same_as_edges(alias, linked).collect()
+    edges = same_as_edges(alias).collect()
     ids = {r["entity_id"] for r in alias.collect()}
     assert len(ids) == 2
     assert any((e["src"] in ids and e["dst"] in ids) for e in edges)

@@ -1,15 +1,37 @@
-"""Full KG run: outputs, manifest lineage, and mid-run resume."""
+"""Full KG run: outputs, manifest lineage, and mid-run resume; one
+connected-components pass per graph build and value-pinned graph
+tables."""
 
+import hashlib
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+import phonlp_spark.pipeline.cc as cc
+import phonlp_spark.pipeline.materialize as M
 from phonlp_spark.pipeline.ingest import synth_documents, _seeded_names
 from phonlp_spark.pipeline.linking import build_alias_dict
 from phonlp_spark.pipeline.materialize import run_kg
 
+from bench import SF_DIR
 from tests.spark_fixtures import spark  # noqa: F401
+
+# the scale-factor-0.001 sibling of the fixture tree bench.py reads
+# (entry()'s flagship input)
+SF0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+
+# golden (row count, sha256 over the repr of the sorted full rows) of
+# the sf0.001 graph queries; any change to the graph step must keep them
+KG_PINS = {
+    "kg_nodes": (42, "57583ffc32fd821b0994597116afb79bd7f23d04fffb3811f9dbbd51b3739c08"),
+    "kg_edges": (1817, "6880a73255b11c905e662b88fb4f5f81e99258048b2a7b3e9e9cefdd415fc5b8"),
+}
+
+# Spark jobs of a run_kg whose buckets are all done: the per-bucket
+# fingerprint aggregate and the manifest collect, nothing else
+NOOP_RESUME_MAX_JOBS = 3
 
 
 @pytest.fixture()
@@ -209,3 +231,83 @@ def test_attempt_counts_per_bucket(spark, out_dir):  # noqa: F811
     run_kg(spark, docs, alias, out_dir, n_buckets=8, resume=False)
     mf = spark.read.parquet(f"{out_dir}/manifest")
     assert mf.agg(F.max("attempt")).collect()[0][0] == 3
+
+
+@pytest.fixture()
+def cc_calls(monkeypatch):
+    calls = []
+    real = cc.connected_components
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cc, "connected_components", counted)
+    monkeypatch.setattr(M, "connected_components", counted)
+    return calls
+
+
+def test_build_graph_runs_one_cc(spark, cc_calls):  # noqa: F811
+    from phonlp_spark.pipeline.annotate import (
+        annotate_sentences_df, mentions_df, triples_df)
+    from phonlp_spark.pipeline.ingest import split_sentences
+
+    docs, alias = _inputs(spark, n=60)
+    ann = annotate_sentences_df(split_sentences(docs)).cache()
+    try:
+        _l, nodes, edges = M.build_graph(mentions_df(ann), triples_df(ann), alias)
+        assert len(cc_calls) == 1
+        assert nodes.count() > 0 and edges.count() > 0
+        assert len(cc_calls) == 1  # nodes is lazy: consuming it adds no pass
+    finally:
+        ann.unpersist()
+
+
+def test_run_kg_runs_one_cc(spark, cc_calls, out_dir):  # noqa: F811
+    docs, alias = _inputs(spark, n=60)
+    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert len(cc_calls) == 1
+
+
+def test_noop_resume_job_count(spark, out_dir):  # noqa: F811
+    docs, alias = _inputs(spark, n=60)
+    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    sc = spark.sparkContext
+    group = f"noop-resume-{os.getpid()}"
+    sc.setJobGroup(group, "no-op resume")
+    try:
+        again = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again["processed_buckets"] == []
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= NOOP_RESUME_MAX_JOBS
+
+
+@pytest.mark.skipif(not os.path.isdir(SF0001), reason="sf0.001 fixture absent")
+@pytest.mark.parametrize("name", sorted(KG_PINS))
+def test_kg_graph_queries_pinned_by_value(spark, name):  # noqa: F811
+    import __spark_entry__ as entry
+    rows = sorted(tuple(r) for r in entry.queries()[name](spark, SF0001).collect())
+    sha = hashlib.sha256("\n".join(repr(r) for r in rows).encode()).hexdigest()
+    assert (len(rows), sha) == KG_PINS[name]
+
+
+def test_resume_accepts_whole_table_fingerprint(spark, out_dir):  # noqa: F811
+    """Manifests record the whole-table fingerprint formula
+    (count, bit_xor(xxhash64(doc_id))): the per-bucket aggregate
+    combines to the same string, so a manifest written under that
+    formula still makes the next run a no-op."""
+    docs, alias = _inputs(spark, n=40)
+    first = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    row = docs.select(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64("doc_id")), F.lit(0)).alias("h"),
+    ).collect()[0]
+    mf = spark.read.parquet(f"{out_dir}/manifest")
+    assert {r["input_fingerprint"] for r in mf.collect()} == {
+        f"{row['n']}:{row['h']:x}"}
+
+    again = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert again["processed_buckets"] == []
+    assert again["skipped_buckets"] == first["processed_buckets"]
