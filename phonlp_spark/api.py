@@ -10,7 +10,7 @@ Reference workflow (README.md:128-139):
 Equivalent here:
 
     import phonlp_spark.api as phonlp
-    model = phonlp.load()                       # seeded weights (prod: checkpoint dir)
+    model = phonlp.load()                       # seeded weights; load(save_dir) reads a checkpoint
     model.annotate(text="Nguyễn_Văn_A thăm Hà_Nội .")   # single-process, no Spark
     model.annotate(input_file=..., output_file=..., output_type="conll")
     model.annotate_df(spark, documents_df)      # the distributed path
@@ -23,7 +23,10 @@ the same 6-column / 10-column TSV blocks (annotate_model.py:296-339).
 
 from __future__ import annotations
 
+import functools
+
 from phonlp_spark.kernel.annotate import AnnotationKernel
+from phonlp_spark.kernel.checkpoint import load_checkpoint
 
 
 class Model:
@@ -78,15 +81,21 @@ class Model:
     # -- distributed path ----------------------------------------------
     def annotate_df(self, spark, documents, salt_partitions: int | None = None):
         """Interleaved documents DataFrame -> annotated sentence rows
-        (see phonlp_spark.pipeline.annotate for the exploded views)."""
+        (see phonlp_spark.pipeline.annotate for the exploded views),
+        annotated by a rebuilt twin of this model's kernel."""
         from phonlp_spark.pipeline.annotate import annotate_sentences_df
         from phonlp_spark.pipeline.ingest import split_sentences
 
-        return annotate_sentences_df(split_sentences(documents), salt_partitions)
+        k = self.kernel
+        factory = functools.partial(AnnotationKernel, k.weights,
+                                    k.encoder.seed, k.encoder.dim)
+        return annotate_sentences_df(split_sentences(documents), salt_partitions,
+                                     kernel_factory=factory)
 
 
 def load(save_dir: str | None = None, seed: int = 42) -> Model:
-    """Reference-shaped loader.  `save_dir` is accepted for API parity;
-    in this sandbox weights are the deterministic seeded set (a real
-    PhoBERT checkpoint slots in through the same Encoder protocol)."""
-    return Model(AnnotationKernel(seed=seed))
+    """Reference-shaped loader: weights from the checkpoint in
+    `save_dir` (kernel/checkpoint.load_checkpoint), else the
+    deterministic seeded set; `seed` also seeds the hashed encoder."""
+    weights = None if save_dir is None else load_checkpoint(save_dir)
+    return Model(AnnotationKernel(weights=weights, seed=seed))

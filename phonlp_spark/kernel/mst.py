@@ -20,8 +20,8 @@ CPU at sf1.0 (~29 us per _solve call for ~100 flops on 12-node
 graphs).  The C solver replicates numpy's argmax first-max tie rule
 AND numpy's pairwise summation order, so decoded trees are identical
 bit for bit (asserted over randomized + exact-tie integer matrices in
-tests/test_mst.py); when no compiler is available the numpy
-implementation below serves unchanged.
+tests/test_mst.py); without a compiler or a trusted library, and
+for matrices holding NaN, the numpy implementation below serves.
 """
 
 from __future__ import annotations
@@ -40,22 +40,38 @@ _C_FN = None
 _C_TRIED = False
 
 
+def _private(path: str) -> bool:
+    """Owned by this user and writable by no one else.  lstat: a
+    symlink's own mode is 0777, so a symlink never passes."""
+    st = os.lstat(path)
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
 def _load_native():
-    """Compile (once per host, cached in the temp dir keyed on the
-    source digest) and ctypes-load the C solver; None when the host has
-    no C compiler.  Concurrent workers race harmlessly: each compiles
-    to a private name and os.replace is atomic."""
+    """Compile (once per host and user, cached in a per-user 0700
+    directory under the temp dir, keyed on the source digest) and
+    ctypes-load the C solver; None when the host has no C compiler or
+    another user could have written the directory or the library.
+    Concurrent workers race harmlessly: each compiles to a private name
+    and os.replace is atomic."""
     src = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_mst_c.c")
     try:
         with open(src, "rb") as f:
             digest = hashlib.md5(f.read()).hexdigest()[:16]
-        so = os.path.join(tempfile.gettempdir(), f"phonlp_mst_{digest}.so")
-        if not os.path.exists(so):
+        d = os.path.join(tempfile.gettempdir(), f"phonlp_spark-{os.getuid()}")
+        os.makedirs(d, mode=0o700, exist_ok=True)
+        so = os.path.join(d, f"phonlp_mst_{digest}.so")
+        if not _private(d):
+            return None
+        if not os.path.lexists(so):
             tmp = f"{so}.tmp{os.getpid()}"
             subprocess.run(
                 ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, src],
                 check=True, capture_output=True)
+            os.chmod(tmp, 0o700)
             os.replace(tmp, so)
+        if not _private(so):
+            return None
         lib = ctypes.CDLL(so)
         fn = lib.phonlp_mst_single_root
         fn.restype = ctypes.c_int
@@ -160,11 +176,12 @@ def mst_single_root(scores: np.ndarray) -> np.ndarray:
     """Max arborescence with exactly one child of ROOT.
 
     Dispatches to the bit-compatible C solver when available (see
-    module docstring); the numpy path below is the fallback and the
-    differential-test oracle."""
+    module docstring); the numpy path below is the fallback, the
+    differential-test oracle and the solver for matrices holding NaN,
+    which the C argmax does not handle (np.argmax picks the first)."""
     fn = _native_fn()
-    if fn is not None:
-        s = np.ascontiguousarray(scores, dtype=np.float64)
+    s = np.ascontiguousarray(scores, dtype=np.float64)
+    if fn is not None and not np.isnan(s).any():
         n = s.shape[0]
         out = np.empty(n, dtype=np.int64)
         rc = fn(s.ctypes.data_as(ctypes.POINTER(ctypes.c_double)),

@@ -8,9 +8,8 @@ Python UDFs.
 
 Scale shapes:
 - exact dedup: one hash-aggregate on a 64-bit digest (not raw text);
-- Jaccard: shingle explode -> equi-join on shingle -> count ratio; the
-  shingle join is the classic candidate generator, skew-guarded by
-  dropping ultra-frequent shingles (stop-shingles);
+- Jaccard: one stop-shingle guard, one size table and one verifier;
+  pairs come from posting lists (jaccard_pairs) or LSH candidates;
 - MinHash/LSH: signatures are per-row aggregates (no shuffle), banding
   joins only collide candidates — the 100TB-safe near-dup pattern;
 - SimHash: per-row bit aggregate, one groupBy on the 16-bit key.
@@ -73,43 +72,50 @@ def _shingles_wide(docs: DataFrame, n: int, text_col: str,
     return sh.repartition(w, "shingle")
 
 
+def _guarded_sized(sh: DataFrame, max_shingle_freq: int) -> DataFrame:
+    """(key, shingle, sz): drops shingles in > max_shingle_freq docs
+    (stop-shingle skew guard) and attaches each doc's post-guard set
+    size, so pairs carry (na, nb) and never join sizes back (guide
+    §2.4: a join-back invites broadcasting the huge pair table).  sz is
+    int to save 8 B/row across the pair shuffle (guide §2.3)."""
+    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")) \
+            .filter(F.col("df") > max_shingle_freq).select("shingle")
+    shf = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    sizes = shf.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
+    return shf.join(sizes.withColumn("sz", F.col("sz").cast("int")), "key")
+
+
+def _verify(pairs: DataFrame, min_pct: int) -> DataFrame:
+    """(a, b, na, nb), one row per shared shingle -> (a, b, common, na,
+    nb) where 100*common >= min_pct*(na+nb-common): Jaccard >=
+    min_pct/100 in integers only, so oracles hash identically."""
+    return (
+        pairs.groupBy("a", "b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("common"))
+        .select("a", "b", "common",
+                F.col("na").cast("bigint").alias("na"),
+                F.col("nb").cast("bigint").alias("nb"))
+        .filter(F.lit(100) * F.col("common")
+                >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
+    )
+
+
 def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                   text_col: str = "text", key_col: str = "doc_id",
                   max_shingle_freq: int = 1000) -> DataFrame:
-    """Candidate pairs with integer-exact Jaccard filter.
-
-    Emits (a, b, common, na, nb) for pairs whose Jaccard(3-gram sets)
-    >= min_pct/100, evaluated as 100*common >= min_pct*(na+nb-common)
-    (integers only — float-free so oracles hash identically).
-    Shingles occurring in > max_shingle_freq docs are dropped
-    (stop-shingle skew guard).
+    """All (a, b, common, na, nb) with n-gram Jaccard >= min_pct/100
+    (see _verify), sizes counted after the stop-shingle guard.
 
     Plan shape (guide §2.4/§2.5): one shared shingle exchange; the
     stop-shingle guard is a broadcast anti join applied BEFORE posting
     lists are collected (bounding every list at max_shingle_freq); the
     intersection counts come from per-shingle posting lists expanded to
-    (a, b) pairs JVM-side.  The quadratic pair stream is generated and
-    partially aggregated across the full cluster width — the previous
-    shingle self-join put it on the probe side of a broadcast join,
-    i.e. on the scan stage's 1-2 tasks (281 s at ~1.5 busy cores at
-    sf1.0; see plans/r07/dedup_jaccard_before.txt).
+    (a, b) pairs JVM-side, so the quadratic pair stream runs at full
+    cluster width — a shingle self-join runs it on the scan stage's 1-2
+    tasks (281 s at sf1.0; plans/r07/dedup_jaccard_before.txt).
     """
-    sh = _shingles_wide(docs, n, text_col, key_col)
-    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")) \
-            .filter(F.col("df") > max_shingle_freq).select("shingle")
-    shf = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = shf.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
-    # Attach each doc's shingle-set size to its shingle rows BEFORE
-    # posting lists are collected: pairs then emerge as (a, b, na, nb)
-    # directly and the candidate table never joins anything downstream
-    # (guide §2.4 — also avoids the planner broadcasting the huge pair
-    # table on a post-aggregate size underestimate, the failure mode of
-    # the join-back formulation).
-    # sz rides the pair exchange as int (a doc's shingle-set size is
-    # nowhere near 2^31): 24 B/row instead of 32 B across the ~114M-row
-    # shuffle (guide §2.3 "narrower types"); cast back to bigint after
-    # the aggregate so output types are unchanged
-    shs = shf.join(sizes.withColumn("sz", F.col("sz").cast("int")), "key")
+    shs = _guarded_sized(_shingles_wide(docs, n, text_col, key_col),
+                         max_shingle_freq)
     # per-shingle posting list, sorted so expansion emits a < b pairs;
     # keys are distinct within a shingle group (token_shingles emits
     # distinct shingles per doc), so the key order is strictly ascending
@@ -132,17 +138,8 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
         # width keeps each task's hash map cache-friendly (measured
         # 19.6 -> 14.8 s at sf1.0).
         .repartition(4 * fan_width(docs), "a", "b")
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .select("a", "b", "common",
-                F.col("na").cast("bigint").alias("na"),
-                F.col("nb").cast("bigint").alias("nb"))
     )
-    return (
-        pairs.filter(F.lit(100) * F.col("common")
-                     >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
-        .select("a", "b", "common", "na", "nb")
-    )
+    return _verify(pairs, min_pct)
 
 
 def _signatures_from_shingles(sh: DataFrame, n_minhash: int) -> DataFrame:
@@ -196,69 +193,44 @@ def lsh_pairs_from_signatures(sig: DataFrame, n_minhash: int,
     )
 
 
-def _lsh_pairs_from_shingles(sh: DataFrame, n_minhash: int,
-                             band: int) -> DataFrame:
-    return lsh_pairs_from_signatures(
-        _signatures_from_shingles(sh, n_minhash), n_minhash, band)
-
-
 def lsh_candidate_pairs(docs: DataFrame, n: int = 3, text_col: str = "text",
                         key_col: str = "doc_id",
                         n_minhash: int = N_MINHASH,
                         band: int = LSH_BAND) -> DataFrame:
     """Near-dup candidates: docs sharing any LSH band bucket."""
-    return _lsh_pairs_from_shingles(
-        token_shingles(fan_out(docs), n, text_col, key_col), n_minhash, band)
+    sh = token_shingles(fan_out(docs), n, text_col, key_col)
+    return lsh_pairs_from_signatures(
+        _signatures_from_shingles(sh, n_minhash), n_minhash, band)
 
 
 def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                        text_col: str = "text", key_col: str = "doc_id",
                        n_minhash: int = N_MINHASH, band: int = LSH_BAND,
-                       max_shingle_freq: int = 1000,
-                       cache_registry: list | None = None) -> DataFrame:
+                       max_shingle_freq: int = 1000) -> DataFrame:
     """The production near-dup composition: LSH banding GENERATES
     candidates, exact n-gram Jaccard VERIFIES only those pairs.
 
-    jaccard_pairs alone self-joins the shingle table — quadratic within
-    hot shingle groups, the documented non-candidate-generator at
-    100 TB.  Here the intersection count runs only over LSH candidate
-    pairs (|cand| ~ linear in corpus for bounded duplication), with the
-    same stop-shingle guard and the same integer-exact threshold rule,
-    so output rows are a subset of jaccard_pairs (missing only pairs
-    LSH failed to collide — measured by the dedup family's recall
-    story, same as ann_recall for ANN).
-
-    ``cache_registry``: the plan references the shingle table from four
-    consumers (signatures, stop-shingle scan, sizes, intersection).
-    Since r7 all four hang off one canonical shingle exchange (see
-    _shingles_wide) that Spark's exchange reuse materializes once per
-    query, so re-shingling no longer multiplies with consumers even
-    uncached.  Pass a list to additionally persist the shingles and
-    receive the handle for unpersisting after the action (the
-    build_graph convention); default None keeps the operator stateless.
+    jaccard_pairs expands every posting list into pairs — quadratic
+    within each shingle group, not a candidate generator at 100 TB.
+    Here only LSH candidate pairs (|cand| ~ linear in corpus for
+    bounded duplication) join the same guarded, sized shingle table
+    and pass the same _verify, so output rows are a subset of
+    jaccard_pairs (missing only pairs LSH failed to collide — measured
+    by the dedup family's recall story, same as ann_recall for ANN).
+    Signatures come from the UNGUARDED shingles, as in the oracle SQL;
+    every consumer shares one shingle exchange (see _shingles_wide).
     """
     sh = _shingles_wide(docs, n, text_col, key_col)
-    if cache_registry is not None:
-        sh = sh.persist()
-        cache_registry.append(sh)
-    cand = _lsh_pairs_from_shingles(sh, n_minhash, band)
-    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")) \
-            .filter(F.col("df") > max_shingle_freq).select("shingle")
-    sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
-    common = (
-        cand.join(sh.select(F.col("key").alias("a"), "shingle"), "a")
-        .join(sh.select(F.col("key").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
+    cand = lsh_pairs_from_signatures(
+        _signatures_from_shingles(sh, n_minhash), n_minhash, band)
+    shs = _guarded_sized(sh, max_shingle_freq)
+    pairs = (
+        cand.join(shs.select(F.col("key").alias("a"), "shingle",
+                             F.col("sz").alias("na")), "a")
+        .join(shs.select(F.col("key").alias("b"), "shingle",
+                         F.col("sz").alias("nb")), ["b", "shingle"])
     )
-    return (
-        common
-        .join(sizes.withColumnRenamed("key", "a").withColumnRenamed("sz", "na"), "a")
-        .join(sizes.withColumnRenamed("key", "b").withColumnRenamed("sz", "nb"), "b")
-        .filter(F.lit(100) * F.col("common")
-                >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
-        .select("a", "b", "common", "na", "nb")
-    )
+    return _verify(pairs, min_pct)
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,

@@ -118,3 +118,40 @@ def test_native_solver_bit_identical_to_numpy():
         else:
             s = np.round(rng.normal(size=(n, n)) * 2) / 2
         assert np.array_equal(mst_single_root(s), _mst_single_root_py(s))
+
+
+def test_nan_matrices_take_the_numpy_path():
+    """The C argmax assumes NaN-free rows while np.argmax returns the
+    first NaN, so matrices holding NaN must decode exactly as the
+    numpy implementation does."""
+    from phonlp_spark.kernel.mst import _mst_single_root_py
+    rng = np.random.default_rng(11)
+    for _ in range(200):
+        n = int(rng.integers(2, 12))
+        s = rng.normal(size=(n, n))
+        s[rng.random((n, n)) < 0.2] = np.nan
+        assert np.array_equal(mst_single_root(s), _mst_single_root_py(s))
+
+
+def test_native_library_refused_when_writable_by_others(tmp_path, monkeypatch):
+    """The compiled solver lives in a per-user 0700 directory, and a
+    library there that group or others could have written is never
+    loaded (the caller falls back to numpy)."""
+    import shutil
+    import stat
+    import tempfile
+
+    from phonlp_spark.kernel import mst
+    if shutil.which("cc") is None:
+        pytest.skip("no C toolchain on this host")
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    assert mst._load_native() is not None
+    [so] = tmp_path.glob(f"phonlp_spark-{os.getuid()}/phonlp_mst_*.so")
+    assert stat.S_IMODE(os.stat(so.parent).st_mode) == 0o700
+    for mode in (0o664, 0o646):
+        os.chmod(so, mode)
+        assert mst._load_native() is None
+    os.chmod(so, 0o700)
+    assert mst._load_native() is not None
+    os.chmod(so.parent, 0o777)
+    assert mst._load_native() is None

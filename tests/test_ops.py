@@ -274,20 +274,55 @@ def test_recall_vs_exact_counts(spark):  # noqa: F811
             row["recall_permille"]) == ("m", 3, 4, 750)
 
 
-def test_lsh_verified_pairs_subset_of_exact(spark, docs):  # noqa: F811
+def _random_docs(spark, planted: bool = False):  # noqa: F811
+    """80 random docs over a 10-word vocabulary (max shingle df 5).
+
+    ``planted`` adds rows for the LSH path: near-copies of every 8th
+    doc (LSH collides them), and docs 200/210 that share 12 tokens but
+    end in different 20-token blocks, each block also in 4 filler docs.
+    With max_shingle_freq=4 the blocks are stop-shingles, so 200/210
+    look like near-dups only if the signatures (wrongly) skip them."""
+    import random
+    rng = random.Random(99)
+    vocab = [f"w{i}" for i in range(10)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(8, 20))))
+            for i in range(80)]
+    if planted:
+        rows += [(100 + i, t + " w0") for i, t in rows[::8]]
+        x = " ".join(f"x{i}" for i in range(12))
+        for blk in (0, 1):
+            hot = " ".join(f"h{blk}_{i}" for i in range(20))
+            rows += [(200 + 10 * blk, f"{x} {hot}")]
+            rows += [(201 + 10 * blk + j, f"f{blk}{j} {hot}") for j in range(4)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("corpus", ["fixture", "random_guarded"])
+def test_lsh_verified_pairs_subset_of_exact(spark, docs, corpus):  # noqa: F811
     """The composed production path (LSH candidates -> exact Jaccard
     verify) returns exactly the exact-verifier rows for pairs LSH
-    collided — never a pair the exact rule rejects."""
-    exact = {(r["a"], r["b"]): (r["common"], r["na"], r["nb"])
-             for r in dedup.jaccard_pairs(docs, min_pct=5).collect()}
+    collided — never a pair the exact rule rejects.  On the random
+    corpus max_shingle_freq=4 makes the stop-shingle guard fire, so
+    both operators must count sizes after the same guard."""
+    freq = 1000
+    if corpus == "random_guarded":
+        docs, freq = _random_docs(spark, planted=True), 4
+
+    def rows(op, **kw):
+        return {(r["a"], r["b"]): (r["common"], r["na"], r["nb"])
+                for r in op(docs, min_pct=5, **kw).collect()}
+
+    exact = rows(dedup.jaccard_pairs, max_shingle_freq=freq)
     cand = {(r["a"], r["b"])
             for r in dedup.lsh_candidate_pairs(docs).collect()}
-    got = {(r["a"], r["b"]): (r["common"], r["na"], r["nb"])
-           for r in dedup.lsh_verified_pairs(docs, min_pct=5).collect()}
+    got = rows(dedup.lsh_verified_pairs, max_shingle_freq=freq)
     assert set(got) == set(exact) & cand
     for k, v in got.items():
         assert v == exact[k]
-    assert got  # fixtures contain near-dups that LSH catches
+    assert got  # both corpora contain near-dups that LSH catches
+    if corpus == "random_guarded":
+        # the guard changed what LSH verification reports
+        assert got != rows(dedup.lsh_verified_pairs)
 
 
 def test_length_percentiles_inverted_cdf(spark, docs):  # noqa: F811
@@ -515,12 +550,7 @@ def test_jaccard_posting_list_formulation_matches_self_join(spark):  # noqa: F81
     randomized corpus the output must equal the straightforward
     self-join formulation row for row (including the stop-shingle
     guard interacting with sizes)."""
-    import random
-    rng = random.Random(99)
-    vocab = [f"w{i}" for i in range(10)]
-    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(8, 20))))
-            for i in range(80)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _random_docs(spark)
     # max_shingle_freq=4 makes the stop-shingle guard actually fire on
     # this corpus (max df is 5), so the sizes/posting interaction with
     # dropped shingles is exercised, not just the happy path
