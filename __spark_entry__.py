@@ -907,7 +907,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # relation on the driver is a serial ~1.3 s prepay (measured
         # 2.4 -> 1.1 s at sf1.0 from this hint alone) — and at real
         # scale orders cannot broadcast at all, so SHJ is also the
-        # 100-TB-correct strategy.  customer stays broadcast (tiny).
+        # 100-TB-correct choice.  customer stays broadcast (tiny).
         o = _table(s, d, "orders").hint("shuffle_hash")
         c = _table(s, d, "customer")
         disc_x100 = F.round(F.col("l_discount") * 100).cast("bigint")

@@ -46,12 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--dedup", action="store_true",
                    help="exact-dedup documents (min doc_id per span-"
                         "sequence digest) before the annotation kernel")
-    p.add_argument("--linking", default="auto",
-                   choices=("auto", "broadcast", "distributed"),
-                   help="stage-2 similarity path: auto routes by alias-"
-                        "inventory size (broadcast matmul under the "
-                        "cap, distributed inverted-index gram join "
-                        "above it)")
     p.add_argument("--checkpoint", default=None,
                    help="model weights dir (weights.npz + meta.json); "
                         "propagated to executors via "
@@ -86,7 +80,6 @@ def main(argv: list[str] | None = None) -> int:
         salt_partitions=args.salt_partitions,
         resume=not args.no_resume,
         dedup=args.dedup,
-        linking_strategy=args.linking,
     )
     print(json.dumps(stats))
     spark.stop()

@@ -68,7 +68,7 @@ def _shingles_wide(docs: DataFrame, n: int, text_col: str,
     once per consumer, and every downstream stage starts at cluster
     width instead of the scan stage's 1-2 tasks (guide §2.4)."""
     w = fan_width(docs)
-    sh = token_shingles(fan_out(docs, w), n, text_col, key_col)
+    sh = token_shingles(fan_out(docs), n, text_col, key_col)
     return sh.repartition(w, "shingle")
 
 

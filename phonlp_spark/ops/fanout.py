@@ -67,9 +67,9 @@ def _probe_partitions(df: DataFrame) -> int:
     return n
 
 
-def fan_out(df: DataFrame, width: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` to ``width`` when its current
-    plan would run narrower than that; identity otherwise.
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` to ``fan_width(df)`` when its
+    current plan would run narrower than that; identity otherwise.
 
     The partition probe compiles the physical plan (memoized — see
     _probe_partitions) but runs no job.  Results are row-identical
@@ -79,7 +79,7 @@ def fan_out(df: DataFrame, width: int | None = None) -> DataFrame:
         # no partition probe on streaming plans; micro-batch
         # parallelism is the source's concern
         return df
-    w = width or fan_width(df)
+    w = fan_width(df)
     if _probe_partitions(df) >= w:
         return df
     return df.repartition(w)

@@ -56,7 +56,7 @@ def _fingerprint(edges: DataFrame):
     return row["n"], row["h"]
 
 
-SMALL_GRAPH_EDGES = 100_000  # below this, solve on the driver
+SMALL_GRAPH_EDGES = 100_000  # below this, solve on the driver (read at call time)
 
 
 def _union_find_local(rows) -> list[tuple[str, str]]:
@@ -80,13 +80,12 @@ def _union_find_local(rows) -> list[tuple[str, str]]:
     return [(n, min(members)) for members in comp.values() for n in members]
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50,
-                         small_graph_edges: int | None = None) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges (src, dst) -> (node, component) for every node in edges.
 
     `component` is the min node id in the node's component.
 
-    Adaptive physical strategy: the alternating-star rounds each cost a
+    Adaptive physical route: the alternating-star rounds each cost a
     couple of shuffles + a blocking checkpoint, so when the deduplicated
     edge set is small (<= SMALL_GRAPH_EDGES) it is solved with a driver
     union-find instead — identical output (min-id components), a single
@@ -98,16 +97,14 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         edges.filter(F.col("src") != F.col("dst"))
         .select("src", "dst").distinct().localCheckpoint()
     )
-    if small_graph_edges is None:
-        small_graph_edges = SMALL_GRAPH_EDGES
-    # one bounded collect decides the strategy AND feeds the driver
+    # one bounded collect decides the route AND feeds the driver
     # fast path (formerly count + collect = two jobs; the limit keeps
     # the driver transfer capped for huge graphs, which then iterate
     # distributed on the checkpointed edge set)
-    sample = e.limit(small_graph_edges + 1).collect()
+    sample = e.limit(SMALL_GRAPH_EDGES + 1).collect()
     if not sample:
         return spark.createDataFrame([], "node string, component string")
-    if len(sample) <= small_graph_edges:
+    if len(sample) <= SMALL_GRAPH_EDGES:
         pairs = [(r["src"], r["dst"]) for r in sample]
         return spark.createDataFrame(
             _union_find_local(pairs), "node string, component string")
@@ -128,11 +125,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         F.min("component").alias("component"))
 
 
-def canonical_map(edges: DataFrame, all_nodes: DataFrame,
-                  small_graph_edges: int | None = None) -> DataFrame:
+def canonical_map(edges: DataFrame, all_nodes: DataFrame) -> DataFrame:
     """(node) ∪ CC(edges) -> (node, component); isolated nodes map to
     themselves.  `all_nodes` is a single-column 'node' DataFrame."""
-    cc = connected_components(edges, small_graph_edges=small_graph_edges)
+    cc = connected_components(edges)
     return (
         all_nodes.select("node").distinct()
         .join(cc, "node", "left")

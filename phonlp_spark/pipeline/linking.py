@@ -12,7 +12,7 @@ Scale shape: linking cost is proportional to DISTINCT mention surfaces,
 not total mentions — surfaces are deduplicated before scoring and the
 assignment is joined back onto the mention stream.  Only the alias
 dictionary (small by contract) is ever broadcast-hinted; surface-keyed
-sides are unbounded, so their join strategy is left to AQE.
+sides are unbounded, so their join algorithm is left to AQE.
 """
 
 from __future__ import annotations
@@ -28,13 +28,10 @@ SIM_THRESHOLD = 0.60
 # Broadcast-path sizing: the alias inventory is collect()ed to the
 # driver and its [A, SIM_DIM] float32 n-gram matrix is broadcast to
 # every executor (~8 KB/alias); 1M aliases ≈ 8 GB broadcast — the cap.
-# Inventories past the cap do NOT fail: link_surfaces auto-routes
-# stage 2 to the distributed inverted-index gram join
-# (_score_misses_distributed), where nothing alias-sized touches the
-# driver.  PHONLP_SPARK_MAX_ALIASES moves the routing point.
-import os as _os
-
-MAX_ALIASES = int(_os.environ.get("PHONLP_SPARK_MAX_ALIASES", "1000000"))
+# Inventories past the cap do NOT fail: link_surfaces routes stage 2 to
+# the distributed inverted-index gram join (_score_misses_distributed),
+# where nothing alias-sized touches the driver.  Read at call time.
+MAX_ALIASES = 1_000_000
 
 ALIAS_SCHEMA = T.StructType([
     T.StructField("alias", T.StringType()),
@@ -70,7 +67,8 @@ def build_alias_dict(spark: SparkSession, names: list[str]) -> DataFrame:
 
 
 def _ngram_matrix(surfs, dim: int) -> np.ndarray:
-    """L2-normalized hashed char-3gram count matrix [B, dim].
+    """Hashed char-3gram count matrix [B, dim]: exact integer counts in
+    float32 (not normalized, so dot products of rows are exact integers).
 
     Fully vectorized (rolling polynomial hash over a padded byte
     matrix + one scatter-add): the per-surface python loop version was
@@ -91,13 +89,13 @@ def _ngram_matrix(surfs, dim: int) -> np.ndarray:
     rows = np.repeat(np.arange(n), width - 2)
     flat = valid.ravel()
     np.add.at(out, (rows[flat], h.ravel()[flat]), 1.0)
-    norms = np.linalg.norm(out, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return out / norms
+    return out
 
 
-def _ngram_vec(text: str, dim: int) -> np.ndarray:
-    return _ngram_matrix([text], dim)[0]
+def _norms(counts: np.ndarray) -> np.ndarray:
+    """float64 L2 norms from exact integer sums of squared counts — the
+    same value the distributed path's sqrt(sum(tf*tf)) yields."""
+    return np.sqrt((counts * counts).sum(axis=1, dtype=np.float64))
 
 
 def _raw_grams_udf():
@@ -233,8 +231,10 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
     2. SCORING: on surviving pairs only, the exact 2048-dim hashed-tf
        cosine — the same hashes, tf vectors and FULL norms the
        broadcast matrix path computes (no gram is ever dropped from a
-       dot product or a norm), so the two paths agree on every scored
-       pair (floating-point summation order aside).
+       dot product or a norm).  Dots and squared norms are exact integer
+       sums and both paths divide them in float64 as dot / (|q|·|a|),
+       so equal cosines are bit-equal and the two paths agree on every
+       scored pair, ties included.
 
     Tie rule: equal cosines resolve to the smallest entity_id — the
     same rule the broadcast path applies (alias matrix sorted by
@@ -270,97 +270,77 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
     return misses.join(top1, "nsurf", "left").select("nsurf", "sim_id")
 
 
-def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame,
-                  max_aliases: int | None = None,
-                  strategy: str = "auto") -> DataFrame:
+def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """(nsurf) distinct normalized surfaces -> (nsurf, entity_id).
 
     Stage 1: exact join on the normalized surface (broadcast-hinted
-    only when the inventory is known to fit the cap).
+    only when the inventory fits MAX_ALIASES).
     Stage 2 (misses only): cosine top-1 against the alias char-3gram
-    inventory —
-      * ``broadcast`` (inventory <= max_aliases): the [A, SIM_DIM]
-        matrix is collected once and broadcast; scoring is a dense
-        matmul in a scalar pandas UDF;
-      * ``distributed`` (bigger inventories, or forced): an
-        inverted-index gram join (_score_misses_distributed) — the
-        same hashes, the same tf vectors, the same threshold, so both
-        paths agree on the mapping (floating-point summation order
-        aside); nothing alias-sized ever touches the driver.
-    ``strategy``: "auto" picks by inventory size; "broadcast" /
-    "distributed" force a path (broadcast still enforces the cap).
+    inventory, routed by the inventory size alone —
+      * within MAX_ALIASES: the [A, SIM_DIM] count matrix is collected
+        once and broadcast; scoring is a dense matmul in a scalar
+        pandas UDF;
+      * over it: an inverted-index gram join (_score_misses_distributed)
+        — the same hashes, the same tf vectors, the same float64 cosine
+        expression and the same threshold, so equal cosines are
+        bit-equal and both routes give the same mapping, ties included;
+        nothing alias-sized ever touches the driver.
     Stage 3: residual -> content-derived new id 'X'+md5(surface)[:12].
 
     Linking cost is proportional to DISTINCT surfaces; callers join the
     result back onto mention/triple streams.
     """
     spark = surfaces.sparkSession
-    cap = MAX_ALIASES if max_aliases is None else max_aliases
     alias_norm = (
         alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
         .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id"))
     )
+    # one bounded collect both sizes the inventory and feeds the
+    # broadcast; the limit caps the driver transfer over the cap
+    alias_rows = alias_norm.limit(MAX_ALIASES + 1).collect()
+    fits = len(alias_rows) <= MAX_ALIASES
+    # over the cap the inventory is unbounded: no hint, AQE picks the
+    # stage-1 join algorithm from runtime sizes
+    exact = surfaces.join(F.broadcast(alias_norm) if fits else alias_norm,
+                          "nsurf", "left")
+    misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
 
-    if strategy == "distributed":
-        alias_rows = None
-    else:
-        # one bounded collect both sizes the inventory and feeds the
-        # broadcast; the limit caps the driver transfer even when the
-        # inventory is over the cap
-        alias_rows = alias_norm.limit(cap + 1).collect()
-        if len(alias_rows) > cap:
-            if strategy == "broadcast":
-                raise ValueError(
-                    f"alias inventory exceeds the {cap}-surface cap for the "
-                    f"forced collect+broadcast linking path "
-                    f"(~{cap * SIM_DIM * 4 / 2**30:.1f} GiB n-gram matrix on "
-                    "the driver and every executor). Raise "
-                    "PHONLP_SPARK_MAX_ALIASES only with memory to match, or "
-                    "use strategy='distributed'/'auto'.")
-            alias_rows = None  # auto: fall through to the gram join
-
-    if alias_rows is None:
-        # inventory unbounded: no broadcast hint anywhere — AQE picks
-        # the stage-1 join strategy from runtime sizes
-        exact = surfaces.join(alias_norm, "nsurf", "left")
-        misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
+    if not fits:
         scored = _score_misses_distributed(misses, alias_norm)
-    else:
-        exact = surfaces.join(F.broadcast(alias_norm), "nsurf", "left")
-        misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
+    elif alias_rows:
         # deterministic tie rule shared with the distributed path:
         # order by entity_id so first-argmax == smallest id on ties
         alias_rows = sorted(alias_rows, key=lambda r: r["entity_id"])
-        alias_surfs = [r["nsurf"] for r in alias_rows]
-        alias_ids = [r["entity_id"] for r in alias_rows]
-        if alias_surfs:
-            amat = _ngram_matrix(alias_surfs, SIM_DIM)  # [A, D]
-            bc = spark.sparkContext.broadcast((amat, alias_ids))
+        amat = _ngram_matrix([r["nsurf"] for r in alias_rows], SIM_DIM)
+        bc = spark.sparkContext.broadcast(
+            (amat, _norms(amat), [r["entity_id"] for r in alias_rows]))
 
-            @F.pandas_udf(T.StructType([
-                T.StructField("sim_id", T.StringType()),
-                T.StructField("sim_score", T.FloatType()),
-            ]))
-            def best_alias(surfs: pd.Series) -> pd.DataFrame:
-                from phonlp_spark.kernel.runtime import tune_worker_runtime
-                tune_worker_runtime()  # allocator fix (see kernel/runtime.py)
-                mat, ids = bc.value
-                qs = _ngram_matrix(list(surfs), SIM_DIM)
-                scores = qs @ mat.T  # [B, A] cosine (rows L2-normalized)
-                best = scores.argmax(axis=1)
-                return pd.DataFrame({
-                    "sim_id": [ids[i] for i in best],
-                    "sim_score": scores[np.arange(len(best)), best]
-                    .astype(np.float32),
-                })
+        @F.pandas_udf(T.StructType([
+            T.StructField("sim_id", T.StringType()),
+            T.StructField("sim_score", T.DoubleType()),
+        ]))
+        def best_alias(surfs: pd.Series) -> pd.DataFrame:
+            from phonlp_spark.kernel.runtime import tune_worker_runtime
+            tune_worker_runtime()  # allocator fix (see kernel/runtime.py)
+            mat, anorm, ids = bc.value
+            qs = _ngram_matrix(list(surfs), SIM_DIM)
+            # integer dots are exact in float32; the division runs in
+            # float64 exactly as the distributed path's, so a tie is
+            # bit-equal whatever rows share the Arrow batch
+            scores = (qs @ mat.T).astype(np.float64) / np.outer(_norms(qs), anorm)
+            best = scores.argmax(axis=1)
+            return pd.DataFrame({
+                "sim_id": [ids[i] for i in best],
+                "sim_score": scores[np.arange(len(best)), best],
+            })
 
-            scored = misses.withColumn("s", best_alias(F.col("nsurf"))).select(
-                "nsurf",
-                F.when(F.col("s.sim_score") >= SIM_THRESHOLD,
-                       F.col("s.sim_id")).alias("sim_id"),
-            )
-        else:
-            scored = misses.withColumn("sim_id", F.lit(None).cast("string"))
+        scored = misses.withColumn("s", best_alias(F.col("nsurf"))).select(
+            "nsurf",
+            F.when(F.col("s.sim_score") >= SIM_THRESHOLD,
+                   F.col("s.sim_id")).alias("sim_id"),
+        )
+    else:
+        scored = misses.withColumn("sim_id", F.lit(None).cast("string"))
 
     new_id = F.concat(F.lit("X"), F.substring(F.md5(F.col("nsurf")), 1, 12))
     resolved_misses = scored.select(
@@ -385,7 +365,7 @@ def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
     surf_map = link_surfaces(m.select("nsurf").distinct(), alias_dict)
     # surf_map is keyed by DISTINCT surfaces (unbounded at scale):
-    # leave the join strategy to AQE rather than forcing a broadcast
+    # leave the join algorithm to AQE rather than forcing a broadcast
     return m.join(surf_map, "nsurf", "left").drop("nsurf")
 
 

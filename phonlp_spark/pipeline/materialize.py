@@ -124,15 +124,14 @@ def nodes_from_linked(linked_mentions: DataFrame, canon: DataFrame) -> DataFrame
 
 
 def _graph_tables(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
-                  cache_registry: list | None, linking_strategy: str):
+                  cache_registry: list | None):
     """build_graph's body: (linked_canon, canon, edges), where canon is
     dict_canonical_names(alias_dict) so run_kg can build its global
     nodes table from the same single CC pass."""
     from phonlp_spark.pipeline.linking import link_surfaces, norm_surface
 
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
-    surf_ent = link_surfaces(m.select("nsurf").distinct(), alias_dict,
-                             strategy=linking_strategy).cache()
+    surf_ent = link_surfaces(m.select("nsurf").distinct(), alias_dict).cache()
     canon = dict_canonical_names(alias_dict)
     surf_map = (
         surf_ent.join(F.broadcast(canon.select("entity_id", "cid")),
@@ -162,8 +161,7 @@ def _graph_tables(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame
 
 
 def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
-                cache_registry: list | None = None,
-                linking_strategy: str = "auto"):
+                cache_registry: list | None = None):
     """Linking -> canonicalization -> graph tables (no IO).
 
     Returns (linked_mentions_with_canonical_id, nodes, edges).
@@ -184,7 +182,7 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
     callers can unpersist after their writes complete.
     """
     linked_canon, canon, edges = _graph_tables(
-        mentions, triples, alias_dict, cache_registry, linking_strategy)
+        mentions, triples, alias_dict, cache_registry)
     return linked_canon, nodes_from_linked(linked_canon, canon), edges
 
 
@@ -197,7 +195,6 @@ def run_kg(
     salt_partitions: int | None = None,
     resume: bool = True,
     dedup: bool = False,
-    linking_strategy: str = "auto",
 ) -> dict:
     """Full KG construction with per-bucket lineage; returns run stats.
 
@@ -276,7 +273,7 @@ def run_kg(
     caches = [mentions, triples]
 
     linked_canon, canon, edges = _graph_tables(
-        mentions, triples, alias_dict, caches, linking_strategy)
+        mentions, triples, alias_dict, caches)
 
     # writes (bucket-partitioned; dynamic overwrite = idempotent re-run)
     ann.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/annotations")

@@ -13,6 +13,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MEMINFO = "/proc/meminfo"
+
+
+def _default_driver_mem() -> str:
+    """min(24g, half of the host's MemTotal); 24g where the host size
+    cannot be read."""
+    try:
+        with open(_MEMINFO) as f:
+            total_kb = next(int(ln.split()[1]) for ln in f
+                            if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 << 10, total_kb >> 11)}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -80,10 +94,12 @@ def get_spark(
         # execution memory each, and wide-key aggregations (dedup pair
         # counting: 114M distinct groups at sf1.0) spilled.  24g keeps
         # multi-million-entry per-task hash maps in memory (measured
-        # 29.2 -> 19.6 s on the dedup_jaccard aggregate alone); the
-        # sandbox has 128 GiB.  On a real cluster this maps to
-        # spark.executor.memory sizing (guide §5), env-overridable.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # 29.2 -> 19.6 s on the dedup_jaccard aggregate alone).  The
+        # default is clamped to half the host's memory so a small host
+        # is not promised a heap it cannot back.  On a real cluster this
+        # maps to spark.executor.memory sizing (guide §5), env-overridable.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

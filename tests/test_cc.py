@@ -4,6 +4,7 @@ import random
 
 import pytest
 
+from phonlp_spark.pipeline import cc
 from phonlp_spark.pipeline.cc import canonical_map, connected_components
 
 from tests.spark_fixtures import spark  # noqa: F401
@@ -30,15 +31,18 @@ def union_find(edges, nodes):
 
 def _check(spark, edges, extra_nodes=(), small=0):  # noqa: F811
     # small=0 forces the DISTRIBUTED large-star/small-star path;
-    # small=None exercises the adaptive driver fast path.
+    # small=None keeps cc.SMALL_GRAPH_EDGES (the driver fast path).
     nodes = sorted({x for e in edges for x in e} | set(extra_nodes))
     oracle = union_find(edges, nodes)
     edf = spark.createDataFrame(edges or [("_", "_")], "src string, dst string")
     if not edges:
         edf = edf.limit(0)
     ndf = spark.createDataFrame([(n,) for n in nodes], "node string")
-    got = {r["node"]: r["component"] for r in
-           canonical_map(edf, ndf, small_graph_edges=small).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if small is not None:
+            mp.setattr(cc, "SMALL_GRAPH_EDGES", small)
+        got = {r["node"]: r["component"]
+               for r in canonical_map(edf, ndf).collect()}
     assert got == oracle
 
 
@@ -67,11 +71,11 @@ def test_random_graphs(spark, seed):  # noqa: F811
     _check(spark, edges, extra_nodes=nodes)
 
 
-def test_long_chain_converges(spark):  # noqa: F811
+def test_long_chain_converges(spark, monkeypatch):  # noqa: F811
+    monkeypatch.setattr(cc, "SMALL_GRAPH_EDGES", 0)  # distributed path
     edges = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(40)]
     comps = {r["component"] for r in connected_components(
-        spark.createDataFrame(edges, "src string, dst string"),
-        small_graph_edges=0).collect()}
+        spark.createDataFrame(edges, "src string, dst string")).collect()}
     assert comps == {"c000"}
 
 
@@ -85,7 +89,7 @@ def test_fast_path_equals_distributed(spark):  # noqa: F811
     _check(spark, edges, extra_nodes=nodes, small=None)   # driver path
 
 
-def test_distributed_path_at_scale(spark):  # noqa: F811
+def test_distributed_path_at_scale(spark, monkeypatch):  # noqa: F811
     """Pressure-test the alternating-star path well past the driver
     fast-path cap (forced distributed): ~70k edges mixing a 25k-node chain (deep diameter),
     30 hot hubs (skew), and random noise — labels must equal a driver
@@ -98,8 +102,9 @@ def test_distributed_path_at_scale(spark):  # noqa: F811
               for _ in range(25_000)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src string, dst string").repartition(16)
+    monkeypatch.setattr(cc, "SMALL_GRAPH_EDGES", 0)  # distributed path
     got = {r["node"]: r["component"]
-           for r in connected_components(df, small_graph_edges=0).collect()}
+           for r in connected_components(df).collect()}
 
     parent = {}
 

@@ -1,6 +1,5 @@
 """Entity linking: exact broadcast hits, similarity fallback, minted ids."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from phonlp_spark.pipeline.linking import (
@@ -61,16 +60,28 @@ def test_no_per_row_python_in_exact_path(spark):  # noqa: F811
     assert "BroadcastHashJoin" in plan
 
 
-def test_alias_cap_forced_broadcast_fails_fast(spark, monkeypatch):  # noqa: F811
-    """strategy='broadcast' must die with the guard message BEFORE the
-    driver collect/broadcast, not OOM mid-job."""
+def test_over_cap_builds_no_driver_matrix(spark, monkeypatch):  # noqa: F811
+    """Over MAX_ALIASES the alias inventory never becomes a driver-side
+    n-gram matrix or a broadcast, and linking still completes: exact
+    hits, similarity hits and minted ids."""
     import phonlp_spark.pipeline.linking as L
     monkeypatch.setattr(L, "MAX_ALIASES", 3)
-    alias = L.build_alias_dict(
-        spark, [f"Entity_{i}_Long_Name" for i in range(10)])
-    surfaces = spark.createDataFrame([("whatever",)], "nsurf string")
-    with pytest.raises(ValueError, match="exceeds the 3-surface cap"):
-        L.link_surfaces(surfaces, alias, strategy="broadcast").collect()
+
+    def boom(*_a, **_k):
+        raise AssertionError("driver matrix built over the alias cap")
+
+    monkeypatch.setattr(L, "_ngram_matrix", boom)
+    monkeypatch.setattr(spark.sparkContext, "broadcast", boom)
+    alias = L.build_alias_dict(spark, NAMES)
+    surfaces = spark.createDataFrame(
+        [("hà nội",), ("công ty fpt softwar",), ("whatever zzzz",)],
+        "nsurf string")
+    got = {r["nsurf"]: r["entity_id"]
+           for r in L.link_surfaces(surfaces, alias).collect()}
+    ids = {r["alias"]: r["entity_id"] for r in alias.collect()}
+    assert got["hà nội"] == ids["Hà_Nội"]
+    assert got["công ty fpt softwar"] == ids["Công_ty_FPT_Software"]
+    assert got["whatever zzzz"].startswith("X")
 
 
 def test_over_cap_routes_distributed_matching_broadcast(spark, monkeypatch):  # noqa: F811
@@ -91,9 +102,8 @@ def test_over_cap_routes_distributed_matching_broadcast(spark, monkeypatch):  # 
     ]
     surfaces = spark.createDataFrame([(t,) for t in surfs], "nsurf string")
     bc = {r["nsurf"]: r["entity_id"]
-          for r in L.link_surfaces(surfaces, alias,
-                                   strategy="broadcast").collect()}
-    monkeypatch.setattr(L, "MAX_ALIASES", 5)  # force the auto reroute
+          for r in L.link_surfaces(surfaces, alias).collect()}
+    monkeypatch.setattr(L, "MAX_ALIASES", 5)  # over the cap: reroute
     ds = {r["nsurf"]: r["entity_id"]
           for r in L.link_surfaces(surfaces, alias).collect()}
     assert ds == bc
@@ -101,19 +111,45 @@ def test_over_cap_routes_distributed_matching_broadcast(spark, monkeypatch):  # 
     assert ds["công ty fpt softwar"] == ds["công ty fpt software"]
 
 
-def test_distributed_stage2_never_collects_aliases(spark):  # noqa: F811
-    """strategy='distributed' must not run the sizing collect at all —
-    the path exists precisely for inventories that cannot cross the
-    driver."""
+def test_over_cap_exact_hits_still_link(spark, monkeypatch):  # noqa: F811
+    """With the cap at 0 every inventory is over it; stage 1 still maps
+    each normalized alias surface to its smallest entity id."""
     import phonlp_spark.pipeline.linking as L
-    alias = L.build_alias_dict(spark, NAMES)
-    surfaces = spark.createDataFrame([("hà nội",)], "nsurf string")
-    out = L.link_surfaces(surfaces, alias, max_aliases=0,
-                          strategy="distributed").collect()
-    assert out[0]["entity_id"].startswith("E")
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)
+    alias = L.build_alias_dict(spark, NAMES + ["A_B_C", "A_B_D"])
+    want = {}
+    for r in alias.collect():
+        s = r["alias"].replace("_", " ").lower()
+        want[s] = min(want.get(s, r["entity_id"]), r["entity_id"])
+    surfaces = spark.createDataFrame([(s,) for s in want], "nsurf string")
+    got = {r["nsurf"]: r["entity_id"]
+           for r in L.link_surfaces(surfaces, alias).collect()}
+    assert got == want
 
 
-def test_distributed_zero_candidate_miss_still_mints_id(spark):  # noqa: F811
+def test_broadcast_tie_is_independent_of_batch(spark, monkeypatch):  # noqa: F811
+    """'order small' ties exactly with aliases 'order' and 'small'
+    (6 of 7 grams shared with each, cosine 6/sqrt(91)).  The tie goes to
+    the smaller entity id whether the miss is scored alone or inside a
+    batch of other misses, and the distributed route agrees."""
+    import phonlp_spark.pipeline.linking as L
+    alias = L.build_alias_dict(spark, ["order", "small"])
+    order_id = alias.filter("alias = 'order'").first()["entity_id"]
+    assert order_id < alias.filter("alias = 'small'").first()["entity_id"]
+    filler = [f"unrelated filler {i:03d}" for i in range(60)]
+
+    def link(surfs):
+        df = spark.createDataFrame([(t,) for t in surfs], "nsurf string")
+        return {r["nsurf"]: r["entity_id"]
+                for r in L.link_surfaces(df, alias).collect()}
+
+    assert link(["order small"])["order small"] == order_id
+    assert link(["order small"] + filler)["order small"] == order_id
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)
+    assert link(["order small"] + filler)["order small"] == order_id
+
+
+def test_distributed_zero_candidate_miss_still_mints_id(spark, monkeypatch):  # noqa: F811
     """A miss sharing NO hashed gram with any alias has zero rows in
     the inverted-index join; it must still come back with a minted X
     id (the broadcast path scores every miss, so a dropped row would
@@ -135,7 +171,8 @@ def test_distributed_zero_candidate_miss_still_mints_id(spark):  # noqa: F811
 
     alias = L.build_alias_dict(spark, names)
     surfaces = spark.createDataFrame([(miss.lower(),)], "nsurf string")
-    out = L.link_surfaces(surfaces, alias, strategy="distributed").collect()
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)  # distributed route
+    out = L.link_surfaces(surfaces, alias).collect()
     assert len(out) == 1 and out[0]["entity_id"].startswith("X")
 
     # same guarantee when the hot-gram guard drops EVERY alias gram
@@ -208,7 +245,7 @@ def test_distributed_candidates_scale_with_gram_overlap(spark):  # noqa: F811
         assert got[t] is None
 
 
-def test_distributed_broadcast_parity_randomized(spark):  # noqa: F811
+def test_distributed_broadcast_parity_randomized(spark, monkeypatch):  # noqa: F811
     """Dense-overlap randomized parity: aliases drawn from a small
     shared vocabulary (heavy raw-gram sharing AND 2048-bucket
     collisions), misses a mix of exact surfaces, mutations and noise —
@@ -242,9 +279,8 @@ def test_distributed_broadcast_parity_randomized(spark):  # noqa: F811
     surfaces = spark.createDataFrame([(t,) for t in sorted(surfs)],
                                      "nsurf string")
     bc = {r["nsurf"]: r["entity_id"]
-          for r in L.link_surfaces(surfaces, alias,
-                                   strategy="broadcast").collect()}
+          for r in L.link_surfaces(surfaces, alias).collect()}
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)  # distributed route
     ds = {r["nsurf"]: r["entity_id"]
-          for r in L.link_surfaces(surfaces, alias,
-                                   strategy="distributed").collect()}
+          for r in L.link_surfaces(surfaces, alias).collect()}
     assert ds == bc

