@@ -49,8 +49,6 @@ from phonlp_spark.kernel.viterbi import viterbi_batch
 from phonlp_spark.kernel.vocab import default_vocabs
 from phonlp_spark.kernel.weights import Biaffine, ModelWeights, seeded_weights, special_mask
 
-import os as _os
-
 MAX_SENT_TOKENS = 256  # hard cap; longer sentences are annotated on the
                        # first 256 tokens, overflow tokens get neutral tags
 _LEN_BUCKET = 8        # pad-waste bound inside a batch
@@ -60,10 +58,8 @@ _LEN_BUCKET = 8        # pad-waste bound inside a batch
 # (kernel-only microbench, 10-20k sentences/worker): 256 and 128 tie
 # within run-to-run noise and both beat the former 512 by 15-60%, with
 # the gap WIDEST at 32 workers — the chunk's matmul working set falls
-# out of cache exactly when all cores contend for DRAM.  Override per
-# deployment via PHONLP_SPARK_FORWARD_CHUNK (the session factory
-# forwards it to executors).
-_FORWARD_CHUNK = int(_os.environ.get("PHONLP_SPARK_FORWARD_CHUNK", "256"))
+# out of cache exactly when all cores contend for DRAM.
+_FORWARD_CHUNK = 256
 
 
 def _relu(x: np.ndarray) -> np.ndarray:

@@ -54,10 +54,6 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        # kernel forward-chunk knob reaches python workers (see
-        # kernel/annotate.py _FORWARD_CHUNK for the measured sweep)
-        .config("spark.executorEnv.PHONLP_SPARK_FORWARD_CHUNK",
-                os.environ.get("PHONLP_SPARK_FORWARD_CHUNK", "256"))
         # keep python workers alive across jobs: respawning re-pays the
         # host's lazy-memory warmup (~200MB of first-touch per worker)
         .config("spark.python.worker.reuse", "true")
@@ -71,9 +67,8 @@ def get_spark(
         # files are unaffected (still one task — see ops/fanout.py for
         # how heavy work leaves such stages).  Production at 100 TB
         # should RAISE this (guide §6 recommends 512m-1g for large
-        # sequential scans); it is an env knob, not a constant.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"))
+        # sequential scans) through get_spark(extra=...).
+        .config("spark.sql.files.maxPartitionBytes", "32m")
         # pin the session timezone: timestamp_ntz -> timestamp casts
         # must not depend on the host JVM's default zone (DST zones
         # shift wall-time differences across transitions, silently
@@ -87,8 +82,7 @@ def get_spark(
         # records/batch runs ~15-25% faster than 2k — fewer Arrow hops,
         # better length-bucketing inside the kernel; peak kernel memory
         # stays bounded by its internal forward chunking, not the batch
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "16384"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         # local mode: the driver JVM hosts every task slot, so this IS
         # executor memory — 8g gave 32 concurrent tasks ~150 MB of
         # execution memory each, and wide-key aggregations (dedup pair

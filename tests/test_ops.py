@@ -274,6 +274,79 @@ def test_recall_vs_exact_counts(spark):  # noqa: F811
             row["recall_permille"]) == ("m", 3, 4, 750)
 
 
+def test_recall_vs_exact_empty_exact_side(spark):  # noqa: F811
+    """Query ids absent from the table leave the exact side empty: the
+    row reads 0 of 0, not a division by zero under ANSI mode."""
+    emb = _clustered_emb(spark, n=20)
+    missing = [1000, 1001]
+    row = similarity.recall_vs_exact(
+        similarity.cosine_topk(emb, missing, k=3),
+        similarity.ann_topk_lsh(emb, missing, k=3), "m").collect()[0]
+    assert (row["hits"], row["total"], row["recall_permille"]) == (0, 0, 0)
+
+
+def _emb_with_dups(spark):  # noqa: F811
+    """Clustered embeddings plus exact copies of every 4th vector, so
+    cosine ties are common and the smallest-id rule decides ranks."""
+    rows = [(r["vec_id"], r["embedding"])
+            for r in _clustered_emb(spark, n=48, n_clusters=4).collect()]
+    rows += [(100 + i, v) for i, v in rows if i % 4 == 0]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_generators_at_full_candidate_set_match_exact(spark):  # noqa: F811
+    """Differential check of the one rescorer and the one near-dup
+    verifier: with parameters that make every vector a candidate
+    (planes=0; n_cells=1, n_probe=1) each top-k operator must return
+    exactly cosine_topk's rows, and each near-dup operator exactly the
+    brute-force round(cos*1000) >= thr pairs."""
+    emb = _emb_with_dups(spark)
+    qids = [0, 1, 4, 5, 100, 104]
+    k = 6
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    exact = rows(similarity.cosine_topk(emb, qids, k))
+    assert len(exact) == len(qids) * k
+    # the fixture has ties inside the top-k: copies of one vector sit at
+    # adjacent ranks, the smaller id first
+    vecs = {r["vec_id"]: tuple(r["embedding"]) for r in emb.collect()}
+    ranked = {(q, rk): n for q, n, rk in exact}
+    ties = [(ranked[(q, rk)], ranked[(q, rk + 1)])
+            for q in qids for rk in range(1, k)
+            if vecs[ranked[(q, rk)]] == vecs[ranked[(q, rk + 1)]]]
+    assert ties and all(a < b for a, b in ties)
+    for name, got in (
+            ("lsh", similarity.ann_topk_lsh(emb, qids, k, planes=0)),
+            ("lsh_multi", similarity.ann_topk_lsh_multi(
+                emb, qids, k, n_tables=2, planes=0)),
+            ("lsh_multiprobe", similarity.ann_topk_lsh_multiprobe(
+                emb, qids, k, n_tables=2, planes=0)),
+            ("ivf", similarity.ann_topk_ivf(emb, qids, k, n_cells=1)),
+            ("ivf_trained", similarity.ann_topk_ivf_trained(
+                emb, qids, k, n_probe=1, n_cells=1))):
+        assert rows(got) == exact, name
+
+    thr = 300
+    left = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    right = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    cos_x1000 = F.round(similarity.dot(F.col("va"), F.col("vb")) / (
+        similarity.norm(F.col("va")) * similarity.norm(F.col("vb"))) * 1000)
+    brute = rows(left.join(right, F.col("a") < F.col("b"))
+                 .select("a", "b", cos_x1000.cast("int").alias("c"))
+                 .filter(F.col("c") >= thr))
+    assert any(c == 1000 for _a, _b, c in brute)  # the planted copies
+    for name, got in (
+            ("lsh", similarity.embedding_near_dups(
+                emb, min_cos_x1000=thr, planes=0)),
+            ("lsh_multi", similarity.embedding_near_dups_multi(
+                emb, min_cos_x1000=thr, n_tables=2, planes=0)),
+            ("ivf", similarity.embedding_near_dups_ivf(
+                emb, min_cos_x1000=thr, n_cells=1, n_probe=1))):
+        assert rows(got) == brute, name
+
+
 def _random_docs(spark, planted: bool = False):  # noqa: F811
     """80 random docs over a 10-word vocabulary (max shingle df 5).
 
