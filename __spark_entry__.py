@@ -690,7 +690,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_simhash_pairs"] = lambda s, d: dedup.simhash_pairs(
         _docs(s, d), max_hamming=3, n_bands=4, bits=32)
     # the composed production path: LSH candidates -> exact Jaccard
-    # verify (dedup_jaccard's quadratic shingle self-join never runs)
+    # verify (over the shingle cap, dedup_jaccard's quadratic pair
+    # expansion never runs; under it both share one driver verifier)
     q["dedup_lsh_verified"] = lambda s, d: dedup.lsh_verified_pairs(
         _docs(s, d), min_pct=5)
 

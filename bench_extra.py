@@ -3,6 +3,10 @@
 NOT the driver's bench: bench.py is frozen for measurement.  This file
 exists for guide §1 work — time ONE query with the noop sink, capture
 its .explain("formatted"), run it N times warm, print per-run walls.
+Each timed run covers building the query and its noop write, as
+bench.py's loop does: a route that collects on the driver while the
+query is built (dedup's in-cap Jaccard verifier, linking's in-cap
+alias matrix) does that work before any write starts.
 
 Usage:
   python bench_extra.py <query_name> [--sf-dir DIR] [--runs N]
@@ -63,9 +67,9 @@ def main() -> None:
     for i in range(args.runs):
         spark.sparkContext.setJobDescription(
             f"bench_extra {args.query} run{i}")
-        df = qs[args.query](spark, args.sf_dir)
         t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
+        qs[args.query](spark, args.sf_dir).write.format("noop") \
+            .mode("overwrite").save()
         walls.append(round(time.time() - t0, 3))
     print(json.dumps({"query": args.query, "sf_dir": args.sf_dir,
                       "runs": walls, "min": min(walls)}))

@@ -2,14 +2,20 @@
 
 All hashing is built on md5 hex substrings cast to bigint so the exact
 same arithmetic is expressible in ANSI SQL (DuckDB oracles) — no
-engine-specific hash functions cross the parity boundary.  Everything
-below is pure built-in expressions (JVM-side, WholeStageCodegen); no
-Python UDFs.
+engine-specific hash functions cross the parity boundary.  Spark-side
+everything is built-in expressions (JVM-side, WholeStageCodegen); no
+Python UDFs.  The one driver-side piece is the in-cap Jaccard verifier
+(_scancount): numpy over one Arrow collect of the shingle table.
 
 Scale shapes:
 - exact dedup: one hash-aggregate on a 64-bit digest (not raw text);
-- Jaccard: one stop-shingle guard, one size table and one verifier;
-  pairs come from posting lists (jaccard_pairs) or LSH candidates;
+- Jaccard, routed by the shingle table's row count alone:
+  * under MAX_LOCAL_SHINGLES rows: one bounded Arrow collect, then a
+    ScanCount probe over a CSR inverted index on the driver — no pair
+    record is shuffled;
+  * over it: one stop-shingle guard, one size table and one verifier
+    (_guarded_sized -> _verify); pairs come from posting lists
+    (jaccard_pairs) or LSH candidates (lsh_verified_pairs);
 - MinHash/LSH: signatures are per-row aggregates (no shuffle), banding
   joins only collide candidates — the 100TB-safe near-dup pattern;
 - SimHash: per-row bit aggregate, one groupBy on the 16-bit key.
@@ -17,8 +23,12 @@ Scale shapes:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from phonlp_spark.ops.fanout import fan_out, fan_width
 
@@ -29,6 +39,26 @@ from phonlp_spark.ops.fanout import fan_out, fan_width
 N_MINHASH = 8
 LSH_BAND = 2  # hashes per band (8/2 = 4 bands)
 SIMHASH_BITS = 16
+
+# Jaccard route: a shingle table (token_shingles rows, before the
+# stop-shingle guard) with fewer rows than this is verified on the
+# driver by _scancount; a bounded collect that fills the cap sends the
+# query to the distributed posting-list path.  Read at call time, so
+# tests pick the distributed route by setting it to 0 (no collect then).
+# Sizing, warm, local[4] on a 4-core host (collect + probe vs the
+# distributed plan; driver Python RSS):
+# - sf0.1, 260,388 rows, 1.27M pair emissions: 0.8 + 0.2 s vs 3.3 s;
+# - 20,000 generated docs, 1.06M rows, 8.8M emissions: 4.4 + 1.2 s vs
+#   12.8 s; 0.7 GB;
+# - 50,000 docs, 2.65M rows, 55M emissions (the sf1.0 shape): 9.5 +
+#   4.7 s vs 64 s; 0.95 GB.  Faster on 4 cores, but the driver does
+#   not grow with the cluster and the distributed plan does, so that
+#   shape stays distributed.
+MAX_LOCAL_SHINGLES = 1_000_000
+
+# pair emissions counted per probe block: bounds the driver's scratch
+# arrays (~4 int64 arrays of this length) whatever the corpus
+_PROBE_BLOCK = 1 << 22
 
 
 def _h64(col: Column) -> Column:
@@ -100,20 +130,108 @@ def _verify(pairs: DataFrame, min_pct: int) -> DataFrame:
     )
 
 
+def _scancount(tbl: pa.Table, min_pct: int, max_shingle_freq: int) -> pa.Table:
+    """(key, shingle) rows -> the (a, b, common, na, nb) rows that
+    _guarded_sized + _verify give for the same rows, on the driver.
+
+    Doc ranks follow Spark's ascending key order, so rank order is the
+    a < b order of any key type.  The stop-shingle guard counts every
+    row, as the hot-shingle aggregate does; null keys are then dropped,
+    as the size join drops them; sizes count what is left.  The index is
+    CSR: rows sorted by (shingle, doc rank), so each posting list is
+    contiguous and ascending and a row's partners are the postings after
+    it.  ScanCount probes doc blocks of at most _PROBE_BLOCK emissions
+    (one doc may exceed it), counting each block's (a, b) emissions with
+    one sort, so no block's counts are split and driver memory does not
+    grow with the total emission count.
+    """
+    key = tbl.column("key").combine_chunks()
+    ranked = pc.unique(key).drop_null().sort()
+    doc = pc.index_in(key, value_set=ranked).fill_null(-1).to_numpy().astype(np.int64)
+    shingle = tbl.column("shingle").combine_chunks()
+    sid = pc.dictionary_encode(shingle).indices.to_numpy()
+    keep = (np.bincount(sid)[sid] <= max_shingle_freq) & (doc >= 0)
+    doc, sid = doc[keep], sid[keep]
+    nd = len(ranked)
+    size = np.bincount(doc, minlength=nd)
+
+    order = np.lexsort((doc, sid))
+    post = doc[order]
+    list_end = np.cumsum(np.bincount(sid))[sid[order]]
+    n_emit = list_end - np.arange(len(post)) - 1
+    # index positions grouped by doc rank; doc d's positions are
+    # by_doc[row_off[d]:row_off[d + 1]], its emissions total
+    # emit_off[d + 1] - emit_off[d]
+    by_doc = np.argsort(post, kind="stable")
+    row_off = np.concatenate(([0], np.cumsum(size)))
+    emit_off = np.concatenate(([0], np.cumsum(n_emit[by_doc])))[row_off]
+
+    parts = [np.empty((3, 0), np.int64)]
+    d0 = 0
+    while d0 < nd:
+        d1 = max(int(np.searchsorted(emit_off, emit_off[d0] + _PROBE_BLOCK,
+                                     "right")) - 1, d0 + 1)
+        pos = by_doc[row_off[d0]:row_off[d1]]
+        lens = n_emit[pos]
+        total = int(emit_off[d1] - emit_off[d0])
+        if total:
+            partner = (np.repeat(pos + 1 - (np.cumsum(lens) - lens), lens)
+                       + np.arange(total))
+            pk = np.repeat(post[pos] - d0, lens) * nd + post[partner]
+            pk.sort()
+            head = np.flatnonzero(np.concatenate(([True], pk[1:] != pk[:-1])))
+            common = np.diff(np.append(head, total))
+            a, b = np.divmod(pk[head], nd)
+            a += d0
+            ok = 100 * common >= min_pct * (size[a] + size[b] - common)
+            parts.append(np.stack([a, b, common])[:, ok])
+        d0 = d1
+    a, b, common = np.concatenate(parts, axis=1)
+    return pa.table({"a": ranked.take(a), "b": ranked.take(b),
+                     "common": common, "na": size[a], "nb": size[b]})
+
+
+def _local_pairs(docs: DataFrame, n: int, min_pct: int, text_col: str,
+                 key_col: str, max_shingle_freq: int) -> DataFrame | None:
+    """jaccard_pairs' rows and schema built by _scancount from one
+    bounded Arrow collect of the shingle table, or None when the
+    collect fills MAX_LOCAL_SHINGLES (the distributed route's case)."""
+    sh = token_shingles(fan_out(docs), n, text_col, key_col)
+    tbl = sh.limit(MAX_LOCAL_SHINGLES).toArrow()
+    if tbl.num_rows >= MAX_LOCAL_SHINGLES:
+        return None
+    key_type = sh.schema["key"].dataType
+    schema = T.StructType(
+        [T.StructField("a", key_type), T.StructField("b", key_type)]
+        + [T.StructField(c, T.LongType(), False) for c in ("common", "na", "nb")])
+    return docs.sparkSession.createDataFrame(
+        _scancount(tbl, min_pct, max_shingle_freq), schema)
+
+
 def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                   text_col: str = "text", key_col: str = "doc_id",
                   max_shingle_freq: int = 1000) -> DataFrame:
     """All (a, b, common, na, nb) with n-gram Jaccard >= min_pct/100
     (see _verify), sizes counted after the stop-shingle guard.
 
-    Plan shape (guide §2.4/§2.5): one shared shingle exchange; the
-    stop-shingle guard is a broadcast anti join applied BEFORE posting
-    lists are collected (bounding every list at max_shingle_freq); the
-    intersection counts come from per-shingle posting lists expanded to
-    (a, b) pairs JVM-side, so the quadratic pair stream runs at full
-    cluster width — a shingle self-join runs it on the scan stage's 1-2
-    tasks (281 s at sf1.0; plans/r07/dedup_jaccard_before.txt).
+    Two routes, the same rows and schema, chosen by the shingle table's
+    row count alone (MAX_LOCAL_SHINGLES):
+    - in cap: one bounded Arrow collect of the shingle table, the guard,
+      sizes and a ScanCount probe in numpy on the driver (_scancount),
+      and the few verified rows come back as an Arrow-built frame — no
+      pair record is ever shuffled;
+    - over the cap, plan shape (guide §2.4/§2.5): one shared shingle
+      exchange; the stop-shingle guard is a broadcast anti join applied
+      BEFORE posting lists are collected (bounding every list at
+      max_shingle_freq); the intersection counts come from per-shingle
+      posting lists expanded to (a, b) pairs JVM-side, so the quadratic
+      pair stream runs at full cluster width — a shingle self-join runs
+      it on the scan stage's 1-2 tasks (281 s at sf1.0;
+      plans/r07/dedup_jaccard_before.txt).
     """
+    local = _local_pairs(docs, n, min_pct, text_col, key_col, max_shingle_freq)
+    if local is not None:
+        return local
     shs = _guarded_sized(_shingles_wide(docs, n, text_col, key_col),
                          max_shingle_freq)
     # per-shingle posting list, sorted so expansion emits a < b pairs;
@@ -217,9 +335,15 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     and pass the same _verify, so output rows are a subset of
     jaccard_pairs (missing only pairs LSH failed to collide — measured
     by the dedup family's recall story, same as ann_recall for ANN).
-    Signatures come from the UNGUARDED shingles, as in the oracle SQL;
-    every consumer shares one shingle exchange (see _shingles_wide).
+    Signatures come from the UNGUARDED shingles, as in the oracle SQL.
+    In cap (see jaccard_pairs) the driver-verified rows are kept where
+    lsh_candidate_pairs emits their (a, b); over it every consumer shares
+    one shingle exchange (see _shingles_wide).
     """
+    local = _local_pairs(docs, n, min_pct, text_col, key_col, max_shingle_freq)
+    if local is not None:
+        cand = lsh_candidate_pairs(docs, n, text_col, key_col, n_minhash, band)
+        return local.join(cand, ["a", "b"], "left_semi")
     sh = _shingles_wide(docs, n, text_col, key_col)
     cand = lsh_pairs_from_signatures(
         _signatures_from_shingles(sh, n_minhash), n_minhash, band)

@@ -398,6 +398,66 @@ def test_lsh_verified_pairs_subset_of_exact(spark, docs, corpus):  # noqa: F811
         assert got != rows(dedup.lsh_verified_pairs)
 
 
+def _both_routes(monkeypatch, op, docs, **kw):
+    """op's frame on the in-cap route (checked to run _scancount) and on
+    the distributed route (MAX_LOCAL_SHINGLES patched to 0)."""
+    calls = []
+    scan = dedup._scancount
+    monkeypatch.setattr(dedup, "_scancount",
+                        lambda *a: calls.append(1) or scan(*a))
+    local = op(docs, **kw)
+    assert calls == [1], "the in-cap route did not run"
+    monkeypatch.setattr(dedup, "MAX_LOCAL_SHINGLES", 0)
+    dist = op(docs, **kw)
+    assert calls == [1], "the distributed route verified on the driver"
+    monkeypatch.undo()
+    return local, dist
+
+
+@pytest.mark.parametrize("keys", ["long", "string"])
+@pytest.mark.parametrize("freq", [4, 1000])
+@pytest.mark.parametrize("op", ["jaccard_pairs", "lsh_verified_pairs"])
+def test_jaccard_routes_agree(spark, monkeypatch, op, freq, keys):  # noqa: F811
+    """The driver ScanCount verifier and the distributed posting-list /
+    candidate-join path give the same rows and the same schema,
+    nullability included.  String keys make a < b follow Spark's string
+    order ('100' < '20'), not the numeric one.  A 16-emission probe
+    block makes the driver probe run many blocks, some of them one doc
+    over the block size."""
+    monkeypatch.setattr(dedup, "_PROBE_BLOCK", 16)
+    docs = _random_docs(spark, planted=True)
+    if keys == "string":
+        docs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    local, dist = _both_routes(monkeypatch, getattr(dedup, op), docs,
+                               min_pct=5, max_shingle_freq=freq)
+    assert local.schema == dist.schema
+    got = sorted(local.collect())
+    assert got == sorted(dist.collect())
+    assert got  # the planted near-copies pass on both operators
+
+
+@pytest.mark.parametrize(
+    "case", ["empty", "short", "null_text", "all_hot", "null_key_hot"])
+def test_jaccard_no_pairs_on_both_routes(spark, monkeypatch, case):  # noqa: F811
+    """Inputs with no countable shingle pair return zero rows with the
+    distributed route's schema on both routes: no docs, docs under 3
+    tokens, a null text, and every shingle above max_shingle_freq.  A
+    null-key doc is never paired but still counts toward a shingle's
+    doc frequency, so it makes 1 and 2's shared shingles hot."""
+    rows, freq = {
+        "empty": ([], 1000),
+        "short": ([(1, "a b"), (2, "a b"), (3, "c")], 1000),
+        "null_text": ([(1, None), (2, "a b c d")], 1000),
+        "all_hot": ([(i, "a b c d") for i in range(3)], 2),
+        "null_key_hot": ([(None, "a b c d"), (1, "a b c d"), (2, "a b c d")], 2),
+    }[case]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for op in (dedup.jaccard_pairs, dedup.lsh_verified_pairs):
+        local, dist = _both_routes(monkeypatch, op, docs, max_shingle_freq=freq)
+        assert local.collect() == [] == dist.collect()
+        assert local.schema == dist.schema
+
+
 def test_length_percentiles_inverted_cdf(spark, docs):  # noqa: F811
     """Exact inverted-CDF percentiles: engine result == numpy sorted
     pick at ceil(n*p/100), computed over the same corpus."""
@@ -617,17 +677,20 @@ def test_lsh_multiprobe_expands_hamming1_neighborhood(spark):  # noqa: F811
     assert r_probe["recall_permille"] >= r_multi["recall_permille"]
 
 
-def test_jaccard_posting_list_formulation_matches_self_join(spark):  # noqa: F811
-    """r7 internals change: jaccard_pairs now expands per-shingle
-    posting lists instead of self-joining the shingle table.  On a
-    randomized corpus the output must equal the straightforward
-    self-join formulation row for row (including the stop-shingle
-    guard interacting with sizes)."""
+def test_jaccard_posting_list_formulation_matches_self_join(spark, monkeypatch):  # noqa: F811
+    """jaccard_pairs counts intersections with a driver ScanCount probe
+    in cap and by expanding per-shingle posting lists over it, never by
+    self-joining the shingle table.  On a randomized corpus both routes
+    must equal the straightforward self-join formulation row for row
+    (including the stop-shingle guard interacting with sizes)."""
     docs = _random_docs(spark)
     # max_shingle_freq=4 makes the stop-shingle guard actually fire on
     # this corpus (max df is 5), so the sizes/posting interaction with
     # dropped shingles is exercised, not just the happy path
     got = {tuple(r) for r in dedup.jaccard_pairs(
+        docs, min_pct=5, max_shingle_freq=4).collect()}
+    monkeypatch.setattr(dedup, "MAX_LOCAL_SHINGLES", 0)
+    assert got == {tuple(r) for r in dedup.jaccard_pairs(
         docs, min_pct=5, max_shingle_freq=4).collect()}
 
     # reference formulation: shingle self-join + join-back sizes
