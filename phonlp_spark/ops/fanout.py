@@ -75,10 +75,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     _probe_partitions) but runs no job.  Results are row-identical
     either way — only placement changes.
     """
-    if df.isStreaming:
-        # no partition probe on streaming plans; micro-batch
-        # parallelism is the source's concern
-        return df
     w = fan_width(df)
     if _probe_partitions(df) >= w:
         return df

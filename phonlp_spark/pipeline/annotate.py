@@ -54,7 +54,7 @@ ANNOTATED_SCHEMA = T.StructType([
 _KEY_COLS = ("doc_id", "span_idx", "sent_id")
 
 
-# custom-factory kernels memoized per (python worker process, factory):
+# the last custom-factory kernel, memoized per python worker process:
 # a transformer-backed factory loads real weights, and paying that once
 # per TASK instead of once per worker would dominate the stage (the
 # default path is process-memoized inside default_kernel already).
@@ -88,26 +88,10 @@ def _worker_kernel(key: str | None, kernel_factory):
         return kernel_factory()
     kernel = _KERNEL_CACHE.get(key)
     if kernel is None:
-        # bound the cache to the TWO most recent kernels (LRU): a
-        # single-slot bound thrashes when two jobs with different
-        # factories interleave on one reused worker (streaming + batch
-        # on the same SparkContext alternate tasks, and each
-        # alternation would rebuild potentially transformer-sized
-        # weights); anything older is evicted so long-lived workers
-        # never pile up weights per distinct factory across jobs.
-        # Evict down to ONE entry BEFORE building the new kernel so
-        # peak worker memory stays at 2 weight sets (1 cached + 1 in
-        # flight), not 3 — workers are sized for the 2x steady state
-        # (ADVICE r6).
-        while len(_KERNEL_CACHE) >= 2:
-            _KERNEL_CACHE.pop(next(iter(_KERNEL_CACHE)))
-        kernel = kernel_factory()
-        _KERNEL_CACHE[key] = kernel
-    else:
-        # refresh recency so the interleaving partner, not the kernel
-        # just used, is the eviction candidate
-        _KERNEL_CACHE.pop(key)
-        _KERNEL_CACHE[key] = kernel
+        # one slot: drop the previous factory's kernel BEFORE building,
+        # so a long-lived worker holds at most one weight set
+        _KERNEL_CACHE.clear()
+        kernel = _KERNEL_CACHE[key] = kernel_factory()
     return kernel
 
 

@@ -50,8 +50,10 @@ from phonlp_spark.pipeline.cc import connected_components
 from phonlp_spark.pipeline.ingest import split_sentences
 from phonlp_spark.pipeline.linking import same_as_edges
 
+# per-bucket fields only (the run's wall is in run_kg's stats); reads
+# give this schema, so older manifests' extra wall_ms column is ignored
 MANIFEST_COLS = ("run_id", "bucket", "status", "docs", "sentences", "triples",
-                 "wall_ms", "attempt", "input_fingerprint", "n_buckets")
+                 "attempt", "input_fingerprint", "n_buckets")
 MANIFEST_SCHEMA = ", ".join(
     f"{c} {'string' if c in ('run_id', 'status', 'input_fingerprint') else 'long'}"
     for c in MANIFEST_COLS)
@@ -251,7 +253,8 @@ def run_kg(
     if not todo_docs:
         return {"run_id": run_id, "processed_buckets": [],
                 "skipped_buckets": sorted(skip),
-                "docs": 0, "sentences": 0, "triples": 0, "wall_ms": 0}
+                "docs": 0, "sentences": 0, "triples": 0,
+                "wall_ms": int((time.time() - t0) * 1000)}
     todo = docs.filter(~F.col("bucket").isin(*skip)) if skip else docs
 
     sentences = split_sentences(todo.select("doc_id", "spans"))
@@ -301,9 +304,8 @@ def run_kg(
                                F.sum("nt").alias("triples")).collect()
     }
     stats = {b: (n, *ann_counts.get(b, (0, 0))) for b, n in sorted(todo_docs.items())}
-    wall_ms = int((time.time() - t0) * 1000)
     manifest_rows = [
-        (run_id, b, "done", n, sents, trips, wall_ms,
+        (run_id, b, "done", n, sents, trips,
          prior_attempts.get(b, 0) + 1, fp, n_buckets)
         for b, (n, sents, trips) in stats.items()
     ]
@@ -318,6 +320,6 @@ def run_kg(
         "run_id": run_id,
         "processed_buckets": list(stats),
         "skipped_buckets": sorted(skip),
-        "wall_ms": wall_ms,
+        "wall_ms": int((time.time() - t0) * 1000),
         "docs": n_docs, "sentences": n_sents, "triples": n_triples,
     }

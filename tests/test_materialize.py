@@ -1,10 +1,13 @@
 """Full KG run: outputs, manifest lineage, and mid-run resume; one
-connected-components pass per graph build and value-pinned graph
-tables."""
+connected-components pass per graph build; value-pinned kernel and
+graph tables; the spark-submit job end to end."""
 
 import hashlib
+import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,8 +26,12 @@ from tests.spark_fixtures import spark  # noqa: F401
 SF0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 # golden (row count, sha256 over the repr of the sorted full rows) of
-# the sf0.001 graph queries; any change to the graph step must keep them
+# the sf0.001 kernel and graph queries; any change to the annotation
+# kernel or the graph step must keep them
 KG_PINS = {
+    "kg_annotations": (27939, "25214d6a46e3d1a84f1782e328b98159194683807598242aa26630dbeb4153f5"),
+    "kg_mentions": (12295, "bca0ee369ec9b690352585dab710178a92ed6294f8aa78a5a8b2595a594216cd"),
+    "kg_triples": (1817, "759fed25ff05ee5fa59427da464cd19d6f0bac392e85b04c69c70fb22bd425ee"),
     "kg_nodes": (42, "a066cfbc3c2c162d02a2e9b33ae894f4f2b0c3f7cce8088de31263cdb3ab553b"),
     "kg_edges": (1817, "6880a73255b11c905e662b88fb4f5f81e99258048b2a7b3e9e9cefdd415fc5b8"),
 }
@@ -71,7 +78,7 @@ def test_full_run_writes_graph_and_manifest(spark, out_dir):  # noqa: F811
 
     mf = spark.read.parquet(f"{out_dir}/manifest")
     assert mf.filter("status = 'done'").count() == len(stats["processed_buckets"])
-    assert mf.filter("docs <= 0 or wall_ms < 0").count() == 0
+    assert mf.filter("docs <= 0").count() == 0
 
 
 def test_second_run_is_noop(spark, out_dir):  # noqa: F811
@@ -288,12 +295,14 @@ def test_noop_resume_job_count(spark, out_dir):  # noqa: F811
 @pytest.mark.parametrize("name, max_aliases", [
     pytest.param(name, cap, id=name + suffix)
     for name in sorted(KG_PINS)
-    for cap, suffix in ((None, ""), (0, "-distributed"))])
+    for cap, suffix in ((None, ""), (0, "-distributed"))
+    if cap is None or name in ("kg_nodes", "kg_edges")])
 def test_kg_graph_queries_pinned_by_value(spark, monkeypatch, name,  # noqa: F811
                                           max_aliases):
-    """Both linking routes reproduce the pins: the default (broadcast,
-    the sf0.001 inventory is far under MAX_ALIASES) and, with the cap at
-    0, the distributed gram join."""
+    """Both linking routes reproduce the graph pins: the default
+    (broadcast, the sf0.001 inventory is far under MAX_ALIASES) and,
+    with the cap at 0, the distributed gram join.  The kernel queries
+    do not link, so they run once."""
     import __spark_entry__ as entry
     import phonlp_spark.pipeline.linking as L
     if max_aliases is not None:
@@ -321,3 +330,58 @@ def test_resume_accepts_whole_table_fingerprint(spark, out_dir):  # noqa: F811
     again = run_kg(spark, docs, alias, out_dir, n_buckets=4)
     assert again["processed_buckets"] == []
     assert again["skipped_buckets"] == first["processed_buckets"]
+
+
+def test_resume_accepts_manifest_with_wall_ms(spark, out_dir):  # noqa: F811
+    """Manifests written while every bucket row carried the run's
+    wall_ms (ten columns) still resume: their done buckets are skipped,
+    a bucket missing from them is recomputed and its row appended next
+    to the old files, and the run after that is a no-op."""
+    docs, alias = _inputs(spark, n=40)
+    first = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    path = f"{out_dir}/manifest"
+    old_cols = ["run_id", "bucket", "status", "docs", "sentences", "triples",
+                "wall_ms", "attempt", "input_fingerprint", "n_buckets"]
+    old = spark.read.parquet(path).withColumn("wall_ms", F.lit(1234).cast("long"))
+    lost = first["processed_buckets"][0]
+    rows = old.filter(F.col("bucket") != lost).select(*old_cols).collect()
+    schema = old.select(*old_cols).schema
+    shutil.rmtree(path)
+    spark.createDataFrame(rows, schema).write.parquet(path)
+
+    second = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert second["processed_buckets"] == [lost]
+    again = run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert again["processed_buckets"] == []
+    assert again["skipped_buckets"] == first["processed_buckets"]
+    assert again["wall_ms"] > 0
+
+
+def test_run_kg_job_honours_buckets_and_resume(spark, tmp_path):  # noqa: F811
+    """jobs/run_kg_job.py as spark-submit would run it: each run prints
+    one JSON line of stats, the first processes every document into
+    --buckets buckets, and the second over the same input resumes to a
+    no-op."""
+    inp, out = str(tmp_path / "docs"), str(tmp_path / "kg")
+    synth_documents(spark, 40, seed=42).write.parquet(inp)
+    job = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "jobs", "run_kg_job.py")
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+
+    def run():
+        proc = subprocess.run(
+            [sys.executable, job, "--input", inp, "--output", out,
+             "--buckets", "4", "--master", "local[2]"],
+            capture_output=True, text=True, env=env, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        lines = proc.stdout.strip().splitlines()
+        assert len(lines) == 1, proc.stdout
+        return json.loads(lines[0])
+
+    first = run()
+    assert first["docs"] == 40
+    assert first["processed_buckets"] == [0, 1, 2, 3]
+    second = run()
+    assert second["processed_buckets"] == []
+    assert second["skipped_buckets"] == [0, 1, 2, 3]
+    shutil.rmtree(str(tmp_path), ignore_errors=True)

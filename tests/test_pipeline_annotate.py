@@ -188,3 +188,25 @@ def test_custom_kernel_factory_memoized_per_worker(spark, docs, tmp_path):  # no
     assert len(pids) >= 1
     # one factory call per worker process — NOT one per partition/task
     assert len(pids) == len(set(pids))
+
+
+def test_worker_kernel_cache_holds_one_kernel(monkeypatch):
+    """A worker keeps only the last factory's kernel: a key miss drops
+    the cached kernel before building, so switching factories rebuilds
+    and peak worker memory is one weight set."""
+    import phonlp_spark.pipeline.annotate as A
+
+    monkeypatch.setattr(A, "_KERNEL_CACHE", {})
+    calls = []
+
+    def factory(name):
+        def build():
+            calls.append(name)
+            return object()
+        return build
+
+    a, b = factory("a"), factory("b")
+    for key, f in (("a", a), ("a", a), ("b", b), ("a", a)):
+        A._worker_kernel(key, f)
+        assert list(A._KERNEL_CACHE) == [key]
+    assert calls == ["a", "b", "a"]
