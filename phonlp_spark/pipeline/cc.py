@@ -77,7 +77,9 @@ def _union_find_local(rows) -> list[tuple[str, str]]:
     comp: dict[str, list[str]] = {}
     for n in parent:
         comp.setdefault(find(n), []).append(n)
-    return [(n, min(members)) for members in comp.values() for n in members]
+    # one min per component, not per member (quadratic on a large one)
+    return [(n, root) for members in comp.values()
+            for root in (min(members),) for n in members]
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:

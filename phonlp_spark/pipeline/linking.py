@@ -13,24 +13,35 @@ not total mentions — surfaces are deduplicated before scoring and the
 assignment is joined back onto the mention stream.  Only the alias
 dictionary (small by contract) is ever broadcast-hinted; surface-keyed
 sides are unbounded, so their join algorithm is left to AQE.
+Canonicalization (dict_canonical_names) shares linking's one read of
+the dictionary (_alias_index).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
+
+from phonlp_spark.pipeline import cc
 
 SIM_DIM = 2048       # hashed char-3gram space
 SIM_THRESHOLD = 0.60
 # Broadcast-path sizing: the alias inventory is collect()ed to the
 # driver and its [A, SIM_DIM] float32 n-gram matrix is broadcast to
 # every executor (~8 KB/alias); 1M aliases ≈ 8 GB broadcast — the cap.
-# Inventories past the cap do NOT fail: link_surfaces routes stage 2 to
-# the distributed inverted-index gram join (_score_misses_distributed),
-# where nothing alias-sized touches the driver.  Read at call time.
+# Inventories past the cap do NOT fail: linking stage 2 and
+# canonicalization go distributed; the one Arrow collect that decides
+# it (_alias_index) still brings MAX_ALIASES + 1 surfaces' entity lists
+# to the driver there.  Measured at 990,045 surfaces (2.38M rows,
+# local[4], 4-core host): in-cap dict_canonical_names 27 s vs 36 s for
+# connected components, driver RSS 0.9 GB; just over the cap the
+# dropped collect adds ~2 s.  Read at call time.
 MAX_ALIASES = 1_000_000
 
 ALIAS_SCHEMA = T.StructType([
@@ -200,7 +211,6 @@ def _candidate_pairs(m_raw: DataFrame, a_raw: DataFrame,
     hot2 = (mg.filter(F.col("_df") > max_gram_freq)
             .groupBy("nsurf")
             .agg(F.sum(F.col("_c") * F.col("_c")).alias("_hot2")))
-    from pyspark.sql.window import Window
     w = (Window.partitionBy("nsurf")
          .orderBy(F.col("_df").desc(), F.col("_rg").desc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -255,7 +265,6 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
               .join(alias_norm.withColumnRenamed("nsurf", "_asurf"), "_asurf")
               .withColumn("_cos", F.col("_dot")
                           / (F.col("_norm") * F.col("_anorm"))))
-    from pyspark.sql.window import Window
     w = Window.partitionBy("nsurf").orderBy(
         F.col("_cos").desc(), F.col("entity_id").asc())
     top1 = (scored.withColumn("_rn", F.row_number().over(w))
@@ -270,6 +279,34 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
     return misses.join(top1, "nsurf", "left").select("nsurf", "sim_id")
 
 
+def _alias_index(alias_dict: DataFrame):
+    """ONE bounded Arrow collect, one row per distinct normalized
+    surface, or None over MAX_ALIASES — the one route decision of
+    linking and canonicalization.  Returns (surfaces, entries):
+    (nsurf, entity_id = the surface's min id, nulls skipped as by F.min)
+    sorted by id, nulls first as Spark sorts; and one (entity_id,
+    canonical, hub = that min id, null on a null surface) per distinct
+    (surface, entity_id, canonical)."""
+    tbl = (alias_dict.groupBy(norm_surface(F.col("alias")).alias("nsurf"))
+           .agg(F.collect_set(F.struct("entity_id", "canonical")).alias("ents"))
+           .limit(MAX_ALIASES + 1).toArrow())
+    if tbl.num_rows > MAX_ALIASES:
+        return None
+    lists = tbl["ents"].combine_chunks()
+    flat = lists.flatten()
+    owner = pc.list_parent_indices(lists)
+    hub = (pa.table({"s": owner, "e": flat.field("entity_id")})
+           .group_by("s").aggregate([("e", "min")]).sort_by("s")["e_min"])
+    nsurf = tbl["nsurf"].combine_chunks()
+    surfaces = (pa.table({"nsurf": nsurf, "entity_id": hub})
+                .sort_by([("entity_id", "ascending")], null_placement="at_start"))
+    hub = pc.if_else(pc.is_null(nsurf), pa.nulls(len(hub), pa.string()), hub)
+    entries = pa.table({"entity_id": flat.field("entity_id"),
+                        "canonical": flat.field("canonical"),
+                        "hub": hub.take(owner)})
+    return surfaces, entries
+
+
 def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """(nsurf) distinct normalized surfaces -> (nsurf, entity_id).
 
@@ -277,43 +314,49 @@ def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
     only when the inventory fits MAX_ALIASES).
     Stage 2 (misses only): cosine top-1 against the alias char-3gram
     inventory, routed by the inventory size alone —
-      * within MAX_ALIASES: the [A, SIM_DIM] count matrix is collected
-        once and broadcast; scoring is a dense matmul in a scalar
-        pandas UDF;
+      * within MAX_ALIASES: the [A, SIM_DIM] count matrix is built from
+        the collected alias index and broadcast; scoring is a dense
+        matmul in a scalar pandas UDF;
       * over it: an inverted-index gram join (_score_misses_distributed)
         — the same hashes, the same tf vectors, the same float64 cosine
         expression and the same threshold, so equal cosines are
         bit-equal and both routes give the same mapping, ties included;
-        nothing alias-sized ever touches the driver.
+        past the bounded probe nothing alias-sized reaches the driver.
     Stage 3: residual -> content-derived new id 'X'+md5(surface)[:12].
 
     Linking cost is proportional to DISTINCT surfaces; callers join the
     result back onto mention/triple streams.
     """
+    return _link_surfaces(surfaces, alias_dict, _alias_index(alias_dict))
+
+
+def _link_surfaces(surfaces: DataFrame, alias_dict: DataFrame, index,
+                   cache_registry: list | None = None) -> DataFrame:
+    """link_surfaces over _alias_index; registers its broadcast."""
     spark = surfaces.sparkSession
-    alias_norm = (
-        alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
-        .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id"))
-    )
-    # one bounded collect both sizes the inventory and feeds the
-    # broadcast; the limit caps the driver transfer over the cap
-    alias_rows = alias_norm.limit(MAX_ALIASES + 1).collect()
-    fits = len(alias_rows) <= MAX_ALIASES
-    # over the cap the inventory is unbounded: no hint, AQE picks the
-    # stage-1 join algorithm from runtime sizes
-    exact = surfaces.join(F.broadcast(alias_norm) if fits else alias_norm,
-                          "nsurf", "left")
+    if index is None:
+        # over the cap the inventory is unbounded: no hint, AQE picks
+        # the stage-1 join algorithm from runtime sizes
+        alias_norm = (
+            alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
+            .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id")))
+    else:
+        # deterministic tie rule shared with the distributed path: the
+        # index is ordered by entity_id, so first-argmax == smallest id
+        alias_rows = index[0]
+        alias_norm = F.broadcast(spark.createDataFrame(
+            alias_rows, "nsurf string, entity_id string"))
+    exact = surfaces.join(alias_norm, "nsurf", "left")
     misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
 
-    if not fits:
+    if index is None:
         scored = _score_misses_distributed(misses, alias_norm)
-    elif alias_rows:
-        # deterministic tie rule shared with the distributed path:
-        # order by entity_id so first-argmax == smallest id on ties
-        alias_rows = sorted(alias_rows, key=lambda r: r["entity_id"])
-        amat = _ngram_matrix([r["nsurf"] for r in alias_rows], SIM_DIM)
+    elif alias_rows.num_rows:
+        amat = _ngram_matrix(alias_rows["nsurf"].to_pylist(), SIM_DIM)
         bc = spark.sparkContext.broadcast(
-            (amat, _norms(amat), [r["entity_id"] for r in alias_rows]))
+            (amat, _norms(amat), alias_rows["entity_id"].to_pylist()))
+        if cache_registry is not None:
+            cache_registry.append(bc)
 
         @F.pandas_udf(T.StructType([
             T.StructField("sim_id", T.StringType()),
@@ -370,17 +413,54 @@ def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
 
 
 def same_as_edges(alias_dict: DataFrame) -> DataFrame:
-    """Undirected same-as edges for canonicalization: dictionary
-    entities sharing a normalized alias surface.  (Same-surface ties
-    between mentions need no edges: linking is deterministic per
-    surface, so identical surfaces always share an entity id already.)
+    """Same-as edges for canonicalization: one star per normalized alias
+    surface, (the surface's minimum entity id, each other entity on it)
+    — k entities give k-1 edges.  (Same-surface ties between mentions
+    need no edges: linking is deterministic per surface.)
     Returns (src, dst) with src < dst, distinct.
     """
-    a = alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"),
-                          F.col("entity_id"))
+    a = (alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
+         .filter(F.col("nsurf").isNotNull()))  # a null alias links nothing
     return (
-        a.alias("l").join(a.alias("r"), "nsurf")
-        .filter(F.col("l.entity_id") < F.col("r.entity_id"))
-        .select(F.col("l.entity_id").alias("src"), F.col("r.entity_id").alias("dst"))
+        a.withColumn("src", F.min("entity_id").over(Window.partitionBy("nsurf")))
+        .filter(F.col("src") < F.col("entity_id"))
+        .select("src", F.col("entity_id").alias("dst"))
         .distinct()
     )
+
+
+def dict_canonical_names(alias_dict: DataFrame) -> DataFrame:
+    """(entity_id, cid, dict_canonical), one row per dictionary entity:
+    its same-as component's minimum entity id and minimum canonical
+    name.  Any id outside the dictionary (a minted X-id) is its own
+    component."""
+    return _canonical_names(alias_dict, _alias_index(alias_dict))
+
+
+def _canonical_names(alias_dict: DataFrame, index) -> DataFrame:
+    """dict_canonical_names over _alias_index.  In cap: a driver
+    union-find (each entity to its surface's minimum id), hinted like
+    stage 1's exact map.  Over it: connected components, no hint."""
+    if index is None:
+        comp = cc.connected_components(same_as_edges(alias_dict))
+        return (
+            alias_dict.groupBy("entity_id").agg(F.min("canonical").alias("canonical"))
+            .join(comp.withColumnRenamed("node", "entity_id"), "entity_id", "left")
+            .withColumn("cid", F.coalesce("component", "entity_id"))
+            .select("entity_id", "cid", F.min("canonical").over(
+                Window.partitionBy("cid")).alias("dict_canonical"))
+        )
+    ids, canons, hubs = (index[1][c].to_pylist()
+                         for c in ("entity_id", "canonical", "hub"))
+    # a null surface or id joins nothing (an equi-join never matches
+    # null): such an entity is its own component
+    cid = dict(cc._union_find_local(
+        (e, e if e is None or h is None else h) for e, h in zip(ids, hubs)))
+    names: dict = {}
+    for e, c in zip(ids, canons):
+        if c is not None:
+            names[cid[e]] = min(names.get(cid[e], c), c)
+    return F.broadcast(alias_dict.sparkSession.createDataFrame(
+        pa.table({"entity_id": list(cid), "cid": list(cid.values()),
+                  "dict_canonical": [names.get(r) for r in cid.values()]}),
+        "entity_id string, cid string, dict_canonical string"))

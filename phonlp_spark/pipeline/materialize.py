@@ -11,13 +11,13 @@ doubles as snapshot metadata and resume checkpoint — SURVEY.md intro):
     out_dir/nodes/*.parquet              (global, rebuilt per run)
     out_dir/manifest/*.parquet           (append-only)
 
-Graph step (``build_graph``; ``run_kg`` shares its body): link the
-distinct mention surfaces against the broadcast alias dictionary, then
-canonicalize with ONE connected-components pass over the dictionary's
-same-as graph (``dict_canonical_names``).  That one result gives every
-surface its canonical id (edges, linked mentions) and every component
-its display name (nodes), in memory and, for ``run_kg``'s global nodes
-table, from disk.
+Graph step (``build_graph``; ``run_kg`` shares its body): one read of
+the alias dictionary links the distinct mention surfaces and
+canonicalizes its same-as graph (``dict_canonical_names``): NO
+connected-components pass within MAX_ALIASES, one over it.  That one
+result gives every surface its canonical id (edges, linked mentions)
+and every component its display name (nodes), in memory and, for
+``run_kg``'s global nodes table, from disk.
 
 Buckets are `pmod(xxhash64(doc_id), n_buckets)` — content-derived, so
 a resumed run (or a differently-sized cluster) maps every document to
@@ -38,7 +38,6 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from phonlp_spark.pipeline.annotate import (
     annotate_sentences_df,
@@ -46,9 +45,9 @@ from phonlp_spark.pipeline.annotate import (
     mentions_df,
     triples_df,
 )
-from phonlp_spark.pipeline.cc import connected_components
 from phonlp_spark.pipeline.ingest import split_sentences
-from phonlp_spark.pipeline.linking import same_as_edges
+from phonlp_spark.pipeline.linking import (
+    _alias_index, _canonical_names, _link_surfaces, norm_surface)
 
 # per-bucket fields only (the run's wall is in run_kg's stats); reads
 # give this schema, so older manifests' extra wall_ms column is ignored
@@ -84,28 +83,11 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
-def dict_canonical_names(alias_dict: DataFrame) -> DataFrame:
-    """(entity_id, cid, dict_canonical), one row per dictionary entity:
-    its same-as component id and the component's canonical display
-    name.  The only connected-components pass of a KG run: same-as
-    edges are dictionary-internal, so the result depends ONLY on the
-    alias dictionary, and any id outside it (a minted X-id) or a
-    dictionary entity with no same-as edge is its own component."""
-    cc = connected_components(same_as_edges(alias_dict))
-    return (
-        alias_dict.groupBy("entity_id").agg(F.min("canonical").alias("canonical"))
-        .join(cc.withColumnRenamed("node", "entity_id"), "entity_id", "left")
-        .withColumn("cid", F.coalesce("component", "entity_id"))
-        .select("entity_id", "cid", F.min("canonical").over(
-            Window.partitionBy("cid")).alias("dict_canonical"))
-    )
-
-
 def nodes_from_linked(linked_mentions: DataFrame, canon: DataFrame) -> DataFrame:
     """Aggregate the canonical-entity node table from linked mentions.
 
-    canon (dict_canonical_names) is bounded by the alias dictionary
-    (small by contract) -> broadcast; the mention aggregate is a plain
+    canon (dict_canonical_names) arrives broadcast-hinted within
+    MAX_ALIASES, unhinted over it; the mention aggregate is a plain
     hash-agg on canonical_id.  A canonical_id that is a component id
     keys its own dictionary row, whose dict_canonical names the
     component.
@@ -115,8 +97,7 @@ def nodes_from_linked(linked_mentions: DataFrame, canon: DataFrame) -> DataFrame
         .agg(F.count(F.lit(1)).alias("mention_count"),
              F.min("text").alias("top_text"),
              F.mode("type").alias("type"))
-        .join(F.broadcast(canon.select(F.col("entity_id").alias("canonical_id"),
-                                       "dict_canonical")),
+        .join(canon.withColumnRenamed("entity_id", "canonical_id"),
               "canonical_id", "left")
         .select(
             F.col("canonical_id").alias("entity_id"),
@@ -129,21 +110,20 @@ def _graph_tables(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame
                   cache_registry: list | None):
     """build_graph's body: (linked_canon, canon, edges), where canon is
     dict_canonical_names(alias_dict) so run_kg can build its global
-    nodes table from the same single CC pass."""
-    from phonlp_spark.pipeline.linking import link_surfaces, norm_surface
-
+    nodes table from the same single read of the dictionary."""
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
-    surf_ent = link_surfaces(m.select("nsurf").distinct(), alias_dict).cache()
-    canon = dict_canonical_names(alias_dict)
+    index = _alias_index(alias_dict)
+    canon = _canonical_names(alias_dict, index)
     surf_map = (
-        surf_ent.join(F.broadcast(canon.select("entity_id", "cid")),
-                      "entity_id", "left")
+        _link_surfaces(m.select("nsurf").distinct(), alias_dict, index,
+                       cache_registry)
+        .join(canon.select("entity_id", "cid"), "entity_id", "left")
         .select("nsurf", "entity_id",
                 F.coalesce("cid", "entity_id").alias("canonical_id"))
         .cache()
     )
     if cache_registry is not None:
-        cache_registry += [surf_ent, surf_map]
+        cache_registry.append(surf_map)
 
     linked_canon = m.join(surf_map, "nsurf", "left").drop("nsurf")
 
@@ -170,18 +150,16 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
 
     Everything expensive happens once at SURFACE grain (distinct
     normalized mention texts): link, then resolve each surface's entity
-    to its same-as component through ONE connected-components pass over
-    the alias dictionary (dict_canonical_names) — the surface->canonical
-    map then joins back onto the mention and triple streams.  Those
-    joins carry NO forced broadcast hint: distinct surfaces are
-    unbounded at corpus scale (hundreds of millions of rows at 100 TB
-    would OOM a forced broadcast), so AQE picks broadcast when the map
-    is actually small and degrades to a shuffle join when it is not.
-    Only alias-dict-bounded sides are hinted.  ``nodes`` is a lazy plan
-    over the same canonicalization: it runs no job until consumed.
+    to its same-as component (dict_canonical_names: no connected-
+    components pass within MAX_ALIASES, one over it).  The
+    surface->canonical map joins back onto the mention and triple
+    streams with NO forced broadcast: distinct surfaces are unbounded
+    at corpus scale (a forced broadcast of hundreds of millions of rows
+    would OOM), so AQE decides.  ``nodes`` is lazy: no job until
+    consumed.
 
-    Caches created here are appended to cache_registry (if given) so
-    callers can unpersist after their writes complete.
+    Caches and broadcasts created here are appended to cache_registry
+    (if given) so callers can unpersist after their writes complete.
     """
     linked_canon, canon, edges = _graph_tables(
         mentions, triples, alias_dict, cache_registry)
@@ -208,9 +186,9 @@ def run_kg(
 
     Pre-work is two driver collects: the per-bucket fingerprint
     aggregate and the manifest rows for this input+layout; a run whose
-    buckets are all done returns after them.  The graph step runs one
-    connected-components pass, reused for the edges and for the global
-    nodes table rebuilt from the on-disk mentions.
+    buckets are all done returns after them.  The graph step runs no
+    connected-components pass within MAX_ALIASES (one over it), and its
+    canonicalization serves the edges and the global nodes table.
 
     ``dedup``: exact-dedup the documents BEFORE the annotation kernel
     (the standard production layout: duplicates never pay kernel cost).
@@ -291,7 +269,7 @@ def run_kg(
     # it from the full on-disk mentions table (all buckets) after the
     # per-bucket writes commit — otherwise a partial resume would
     # silently replace the table with a subset-derived one.  canon is
-    # the canonicalization the edges used: no second CC pass.
+    # the canonicalization the edges used: no second dictionary read.
     nodes_from_linked(spark.read.parquet(f"{out_dir}/mentions"), canon) \
         .write.mode("overwrite").parquet(f"{out_dir}/nodes")
 

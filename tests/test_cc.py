@@ -125,3 +125,16 @@ def test_distributed_path_at_scale(spark, monkeypatch):  # noqa: F811
         comp.setdefault(find(n), []).append(n)
     want = {n: min(m) for m in comp.values() for n in m}
     assert got == want
+
+
+def test_union_find_local_is_linear_in_component_size():
+    """One 20,000-node star (a dictionary surface shared by that many
+    entities) labels every node with the component minimum in well
+    under a second; taking the minimum once per member instead of once
+    per component made it quadratic (about 12 s on a 4-vCPU host)."""
+    import time
+    nodes = [f"e{i:06d}" for i in range(20_000)]
+    t0 = time.perf_counter()
+    got = cc._union_find_local((n, nodes[-1]) for n in nodes)
+    assert time.perf_counter() - t0 < 3.0
+    assert sorted(got) == [(n, nodes[0]) for n in nodes]

@@ -1,4 +1,6 @@
-"""Entity linking: exact broadcast hits, similarity fallback, minted ids."""
+"""Entity linking: exact broadcast hits, similarity fallback, minted
+ids; same-as edges and the dictionary's canonicalization on both
+routes."""
 
 from pyspark.sql import functions as F
 
@@ -51,6 +53,87 @@ def test_same_as_edges_connect_truncation_collisions(spark):  # noqa: F811
     ids = {r["entity_id"] for r in alias.collect()}
     assert len(ids) == 2
     assert any((e["src"] in ids and e["dst"] in ids) for e in edges)
+
+
+def test_same_as_edges_are_linear_stars(spark):  # noqa: F811
+    """k entities sharing one surface give k-1 edges, each from the
+    surface's minimum id, not the k(k-1)/2 pairs of a self-join."""
+    alias = build_alias_dict(spark, [f"A_B_{c}" for c in "CDEFGH"])
+    ids = sorted({r["entity_id"] for r in alias.collect()})
+    edges = {(r["src"], r["dst"]) for r in same_as_edges(alias).collect()}
+    assert len(ids) == 6
+    assert edges == {(ids[0], e) for e in ids[1:]}
+
+
+def test_canonical_names_routes_agree_randomized(spark, monkeypatch):  # noqa: F811
+    """Collision-dense dictionary (names drawn from a tiny shared
+    vocabulary, so 2-segment truncations chain entities into large
+    components; some entities carry a second, smaller canonical, one
+    only a null one; some rows have a null alias or a null id): the
+    in-cap union-find over the collected index gives the over-cap
+    connected-components table row for row.  A null alias or id joins
+    nothing, as an equi-join on the surface never matches null: an
+    entity known only by null aliases is its own component, and the
+    null id keeps one row of its own."""
+    import numpy as np
+    import phonlp_spark.pipeline.cc as cc
+    import phonlp_spark.pipeline.linking as L
+
+    rng = np.random.default_rng(23)
+    vocab = ["an", "binh", "cuong", "dung", "giang", "ha"]
+    names = sorted({"_".join(rng.choice(vocab, size=int(rng.integers(2, 5))))
+                    for _ in range(120)})
+    alias = L.build_alias_dict(spark, names)
+    ids = sorted({r["entity_id"] for r in alias.collect()})
+    extra = [(f"zz {i}", e, "Aa_" + e) for i, e in enumerate(ids[::7])]
+    extra.append(("only null canonical", "Enull", None))
+    extra += [(None, "Enoalias", "Bb"), (None, ids[1], None),
+              (None, ids[2], None), ("zz 0", None, "Cc"), (None, None, "Dd")]
+    alias = alias.unionByName(spark.createDataFrame(extra, L.ALIAS_SCHEMA))
+
+    def table():
+        return sorted((tuple(r) for r in L.dict_canonical_names(alias).collect()),
+                      key=lambda t: tuple((x is not None, x or "") for x in t))
+
+    in_cap = table()
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)
+    monkeypatch.setattr(cc, "SMALL_GRAPH_EDGES", 0)  # alternating stars
+    over_cap = table()
+    assert in_cap == over_cap
+    assert len(in_cap) == len(ids) + 3
+    assert in_cap[0] == (None, None, "Cc")
+    assert ("Enoalias", "Enoalias", "Bb") in in_cap
+    sizes = {}
+    for _e, cid, _n in in_cap:
+        sizes[cid] = sizes.get(cid, 0) + 1
+    assert sizes["Enoalias"] == 1
+    assert max(sizes.values()) >= 5  # the dictionary really collides
+
+
+def test_null_alias_rows_on_both_routes(spark, monkeypatch):  # noqa: F811
+    """A null id on a surface that also has a real one links to the real
+    one; a surface with only null ids links as a miss; a null alias
+    matches no surface.  Both routes give the same map."""
+    import phonlp_spark.pipeline.linking as L
+
+    alias = build_alias_dict(spark, NAMES)
+    ids = {r["alias"]: r["entity_id"] for r in alias.collect()}
+    alias = alias.unionByName(spark.createDataFrame(
+        [("Hà_Nội", None, "x"), ("mồ côi", None, "y"), (None, "Enoalias", "z")],
+        L.ALIAS_SCHEMA))
+    surfaces = spark.createDataFrame(
+        [("hà nội",), ("mồ côi",), ("nguyễn văn an",)], "nsurf string")
+
+    def linked():
+        return {r["nsurf"]: r["entity_id"]
+                for r in L.link_surfaces(surfaces, alias).collect()}
+
+    in_cap = linked()
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)
+    assert linked() == in_cap
+    assert in_cap["hà nội"] == ids["Hà_Nội"]
+    assert in_cap["nguyễn văn an"] == ids["Nguyễn_Văn_An"]
+    assert in_cap["mồ côi"].startswith("X")
 
 
 def test_no_per_row_python_in_exact_path(spark):  # noqa: F811

@@ -1,6 +1,8 @@
-"""Full KG run: outputs, manifest lineage, and mid-run resume; one
-connected-components pass per graph build; value-pinned kernel and
-graph tables; the spark-submit job end to end."""
+"""Full KG run: outputs, manifest lineage, and mid-run resume; no
+connected-components pass per graph build within the alias cap and
+one over it; job, broadcast and plan bounds of the graph step;
+value-pinned kernel and graph tables; the spark-submit job end to
+end."""
 
 import hashlib
 import json
@@ -13,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import phonlp_spark.pipeline.cc as cc
+import phonlp_spark.pipeline.linking as L
 import phonlp_spark.pipeline.materialize as M
 from phonlp_spark.pipeline.ingest import synth_documents, _seeded_names
 from phonlp_spark.pipeline.linking import build_alias_dict
@@ -40,6 +43,11 @@ KG_PINS = {
 # fingerprint aggregate and the manifest collect, nothing else
 NOOP_RESUME_MAX_JOBS = 3
 
+# Spark jobs of an in-cap build_graph before its outputs are consumed:
+# the one bounded collect of the alias dictionary (its shuffle stage
+# and the collect), nothing else
+BUILD_GRAPH_MAX_JOBS = 2
+
 
 @pytest.fixture()
 def out_dir(tmp_path):
@@ -52,6 +60,23 @@ def _inputs(spark, n=80):  # noqa: F811
     docs = synth_documents(spark, n, seed=42)
     alias = build_alias_dict(spark, _seeded_names(40, 43))
     return docs, alias
+
+
+def _annotated(spark, n=60):  # noqa: F811
+    from phonlp_spark.pipeline.annotate import annotate_sentences_df
+    from phonlp_spark.pipeline.ingest import split_sentences
+    docs, alias = _inputs(spark, n)
+    return annotate_sentences_df(split_sentences(docs)).cache(), alias
+
+
+def _jobs_in(sc, group, fn):
+    """(fn(), number of Spark jobs fn submitted)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _table_sig(spark, path, cols):  # noqa: F811
@@ -250,44 +275,117 @@ def cc_calls(monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(cc, "connected_components", counted)
-    monkeypatch.setattr(M, "connected_components", counted)
     return calls
 
 
-def test_build_graph_runs_one_cc(spark, cc_calls):  # noqa: F811
-    from phonlp_spark.pipeline.annotate import (
-        annotate_sentences_df, mentions_df, triples_df)
-    from phonlp_spark.pipeline.ingest import split_sentences
+def test_build_graph_runs_one_cc(spark, cc_calls, monkeypatch):  # noqa: F811
+    """Within MAX_ALIASES the canonicalization comes from the collected
+    alias index: no connected-components pass.  Over it, exactly one;
+    consuming the lazy nodes table adds none on either route."""
+    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
 
-    docs, alias = _inputs(spark, n=60)
-    ann = annotate_sentences_df(split_sentences(docs)).cache()
+    ann, alias = _annotated(spark)
     try:
-        _l, nodes, edges = M.build_graph(mentions_df(ann), triples_df(ann), alias)
-        assert len(cc_calls) == 1
-        assert nodes.count() > 0 and edges.count() > 0
-        assert len(cc_calls) == 1  # nodes is lazy: consuming it adds no pass
+        for cap, want in ((L.MAX_ALIASES, 0), (0, 1)):
+            monkeypatch.setattr(L, "MAX_ALIASES", cap)
+            cc_calls.clear()
+            _l, nodes, edges = M.build_graph(mentions_df(ann), triples_df(ann), alias)
+            assert len(cc_calls) == want
+            assert nodes.count() > 0 and edges.count() > 0
+            assert len(cc_calls) == want
     finally:
         ann.unpersist()
 
 
-def test_run_kg_runs_one_cc(spark, cc_calls, out_dir):  # noqa: F811
+def test_run_kg_runs_one_cc(spark, cc_calls, monkeypatch, tmp_path):  # noqa: F811
     docs, alias = _inputs(spark, n=60)
-    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    run_kg(spark, docs, alias, str(tmp_path / "in_cap"), n_buckets=4)
+    assert len(cc_calls) == 0
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)
+    run_kg(spark, docs, alias, str(tmp_path / "over_cap"), n_buckets=4)
     assert len(cc_calls) == 1
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
+def test_build_graph_job_count(spark):  # noqa: F811
+    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
+
+    ann, alias = _annotated(spark)
+    try:
+        mentions, triples = mentions_df(ann), triples_df(ann)
+        _out, n_jobs = _jobs_in(
+            spark.sparkContext, f"build-graph-{os.getpid()}",
+            lambda: M.build_graph(mentions, triples, alias))
+        assert 0 < n_jobs <= BUILD_GRAPH_MAX_JOBS
+    finally:
+        ann.unpersist()
+
+
+def test_run_kg_releases_its_broadcasts(spark, monkeypatch, out_dir):  # noqa: F811
+    """Every broadcast created during run_kg (the in-cap n-gram matrix)
+    is unpersisted by the time it returns."""
+    sc = spark.sparkContext
+    real, made, released = sc.broadcast, [], set()
+
+    def recording(value):
+        bc = real(value)
+        made.append(bc)
+        unpersist = bc.unpersist
+
+        def recorded(*args, **kwargs):
+            released.add(id(bc))
+            return unpersist(*args, **kwargs)
+
+        bc.unpersist = recorded
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    docs, alias = _inputs(spark, n=40)
+    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert made
+    assert all(id(bc) in released for bc in made)
+
+
+def test_over_cap_graph_forces_no_broadcast(spark, monkeypatch):  # noqa: F811
+    """Over MAX_ALIASES canon is dictionary-sized, so nothing in the
+    graph step may force a broadcast: with auto-broadcast off too, the
+    edges and nodes plans hold no BroadcastHashJoin, and both tables
+    equal the in-cap route's."""
+    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
+
+    ann, alias = _annotated(spark)
+    edge_cols = ["subj_id", "pred", "obj_id", "doc_id", "sent_id"]
+    node_cols = ["entity_id", "canonical", "type", "mention_count"]
+
+    def graph_sigs():
+        _l, nodes, edges = M.build_graph(mentions_df(ann), triples_df(ann), alias)
+        sigs = tuple(
+            (df.count(), df.select(F.bit_xor(F.xxhash64(*cols))).first()[0])
+            for df, cols in ((edges, edge_cols), (nodes, node_cols)))
+        plans = [df._jdf.queryExecution().executedPlan().toString()
+                 for df in (edges, nodes)]
+        return sigs, plans
+
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        in_cap, _ = graph_sigs()
+        monkeypatch.setattr(L, "MAX_ALIASES", 0)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        over_cap, plans = graph_sigs()
+        for plan in plans:
+            assert "BroadcastHashJoin" not in plan
+        assert over_cap == in_cap
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        ann.unpersist()
 
 
 def test_noop_resume_job_count(spark, out_dir):  # noqa: F811
     docs, alias = _inputs(spark, n=60)
     run_kg(spark, docs, alias, out_dir, n_buckets=4)
-    sc = spark.sparkContext
-    group = f"noop-resume-{os.getpid()}"
-    sc.setJobGroup(group, "no-op resume")
-    try:
-        again = run_kg(spark, docs, alias, out_dir, n_buckets=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    again, n_jobs = _jobs_in(spark.sparkContext, f"noop-resume-{os.getpid()}",
+                             lambda: run_kg(spark, docs, alias, out_dir, n_buckets=4))
     assert again["processed_buckets"] == []
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= NOOP_RESUME_MAX_JOBS
 
 
