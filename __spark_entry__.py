@@ -96,16 +96,25 @@ def _alias_names(spark: SparkSession, sf_dir: str) -> list[str]:
     return [r["text"].replace(" ", "_") for r in rows]
 
 
+# caches and broadcasts made for the last _kg_graph call (build_graph's,
+# plus any a query adds on top of its tables): the next call releases
+# them, so a session holds one graph's worth however many kg queries run
+_KG_CACHES: list = []
+
+
 def _kg_graph(spark: SparkSession, sf_dir: str):
     """(linked, nodes, edges) of the KG pipeline over sf_dir: annotate
     (cached), mentions (cached), the derived alias dict, build_graph."""
     from phonlp_spark.pipeline.annotate import mentions_df, triples_df
     from phonlp_spark.pipeline.linking import build_alias_dict
     from phonlp_spark.pipeline.materialize import build_graph
+    for c in _KG_CACHES:
+        c.unpersist()
+    _KG_CACHES.clear()
     annotated = _annotated(spark, sf_dir).cache()
     mentions = mentions_df(annotated).cache()
     alias = build_alias_dict(spark, _alias_names(spark, sf_dir))
-    return build_graph(mentions, triples_df(annotated), alias)
+    return build_graph(mentions, triples_df(annotated), alias, _KG_CACHES)
 
 
 _CENTS_CACHE: dict[str, list] = {}
@@ -372,6 +381,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         constant 0; the anchor (n_docs) comes from the input table."""
         _l, nodes, edges = _kg_graph(s, d)
         nodes = nodes.cache()
+        _KG_CACHES.append(nodes)
         id_re = "^[EX][0-9a-f]{12}$"
         nid = nodes.select("entity_id")
         subj_missing = (edges.join(nid, edges["subj_id"] == nid["entity_id"],

@@ -19,10 +19,13 @@ two-pointer walk runs inside a cogrouped Arrow batch
 (`cogroup().applyInPandas`) — Spark distributes sentences, not the
 walk.
 
-Semantics parity with the reference module is pinned in
+Scoring follows the reference's single alignment_score
+(conll18_ud_eval.py:382-408): every metric is one matched-pair table
+(`_matched`), one head rule (`_aligned_arcs`) and one score row
+(`_score`).  Semantics parity with the reference module is checked in
 tests/test_alignment.py, which imports conll18_ud_eval itself and
-compares aligned-pair counts on synthetic CoNLL-U with multiword
-tokens.
+compares counts on synthetic CoNLL-U with multiword tokens; the same
+fixtures' full rows are pinned locally there (MWT_PINS).
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ ALIGNED_SCHEMA = T.StructType([
 ])
 
 
-def with_char_spans(tokens: DataFrame, word_col: str = "word") -> DataFrame:
+def with_char_spans(tokens: DataFrame) -> DataFrame:
     """Add (span_start, span_end, is_multiword=false) by per-sentence
     cumulative character offsets — the UD convention: spans index the
     concatenation of token characters, whitespace excluded
@@ -53,10 +56,10 @@ def with_char_spans(tokens: DataFrame, word_col: str = "word") -> DataFrame:
 
     w = (Window.partitionBy(*SENT_KEY).orderBy("token_id")
          .rowsBetween(Window.unboundedPreceding, -1))
-    start = F.coalesce(F.sum(F.length(word_col)).over(w), F.lit(0)).cast("int")
+    start = F.coalesce(F.sum(F.length("word")).over(w), F.lit(0)).cast("int")
     return (tokens
             .withColumn("span_start", start)
-            .withColumn("span_end", (start + F.length(word_col)).cast("int"))
+            .withColumn("span_end", (start + F.length("word")).cast("int"))
             .withColumn("is_multiword", F.lit(False)))
 
 
@@ -137,8 +140,7 @@ def _align_sentence(gold: list, system: list) -> list[tuple[int, int]]:
     return pairs
 
 
-def align_tokens(gold: DataFrame, system: DataFrame,
-                 word_col: str = "word") -> DataFrame:
+def align_tokens(gold: DataFrame, system: DataFrame) -> DataFrame:
     """Aligned (gold_token_id, system_token_id) pairs per sentence.
 
     Inputs need (doc_id, sent_id, token_id, word[, span_start,
@@ -150,7 +152,7 @@ def align_tokens(gold: DataFrame, system: DataFrame,
     """
     def prep(df):
         if "span_start" not in df.columns:
-            df = with_char_spans(df, word_col)
+            df = with_char_spans(df)
         # every output column goes through cast+alias: each prep() call
         # then carries FRESH attribute ids.  Bare pass-through refs
         # would share ids between the two sides when gold and system
@@ -162,7 +164,7 @@ def align_tokens(gold: DataFrame, system: DataFrame,
             F.col("doc_id").cast("string").alias("doc_id"),
             F.col("sent_id").cast("int").alias("sent_id"),
             F.col("token_id").cast("int").alias("token_id"),
-            F.col(word_col).cast("string").alias("word"),
+            F.col("word").cast("string").alias("word"),
             F.col("span_start").cast("int").alias("span_start"),
             F.col("span_end").cast("int").alias("span_end"),
             F.col("is_multiword").cast("boolean").alias("is_multiword"))
@@ -221,23 +223,84 @@ def _cached_alignment(gold: DataFrame, system: DataFrame,
     return aligned
 
 
-def _aligned_arcs(gold: DataFrame, system: DataFrame,
-                  aligned: DataFrame) -> DataFrame:
-    """Matched word pairs decorated with both sides' (head, base
-    deprel) and the system-side counterpart of the gold head — the
-    table every aligned dependency metric scores over."""
-    g = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
-                    F.col("head").alias("g_head"),
-                    _base_rel(F.col("deprel")).alias("g_rel"))
-    s = system.select(*SENT_KEY, F.col("token_id").alias("system_token_id"),
-                      F.col("head").alias("s_head"),
-                      _base_rel(F.col("deprel")).alias("s_rel"))
-    j = aligned.join(g, SENT_KEY + ["gold_token_id"]).join(
-        s, SENT_KEY + ["system_token_id"])
+def _matched(gold: DataFrame, system: DataFrame, aligned: DataFrame,
+             cols: dict) -> DataFrame:
+    """Matched word pairs decorated with both sides' ``cols`` (name ->
+    column expression over a token table) as g_<name> / s_<name>: the
+    one table every aligned metric scores over."""
+    def side(df, prefix, key):
+        return df.select(*SENT_KEY, F.col("token_id").alias(key),
+                         *[c.alias(f"{prefix}_{n}") for n, c in cols.items()])
+    return (aligned.join(side(gold, "g", "gold_token_id"),
+                         SENT_KEY + ["gold_token_id"])
+            .join(side(system, "s", "system_token_id"),
+                  SENT_KEY + ["system_token_id"]))
+
+
+def _aligned_arcs(gold: DataFrame, system: DataFrame, aligned: DataFrame,
+                  extra: dict | None = None) -> DataFrame:
+    """The matched-pair table with both sides' (head, base deprel, and
+    ``extra``) and the arc verdicts every dependency metric builds on:
+    ``ua`` — the gold word's head aligns to the system word's head, or
+    both are roots (conll18_ud_eval.py:536-543) — and ``la`` = ua with
+    equal base deprels."""
+    j = _matched(gold, system, aligned, {
+        "head": F.col("head"), "rel": _base_rel(F.col("deprel")),
+        **(extra or {})})
     head_map = aligned.select(
         *SENT_KEY, F.col("gold_token_id").alias("g_head"),
         F.col("system_token_id").alias("s_head_aligned"))
-    return j.join(head_map, SENT_KEY + ["g_head"], "left")
+    ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
+        F.col("s_head_aligned") == F.col("s_head"))
+    return (j.join(head_map, SENT_KEY + ["g_head"], "left")
+            .withColumn("ua", ua)
+            .withColumn("la", F.col("ua") & (F.col("g_rel") == F.col("s_rel"))))
+
+
+# The UD content relations (reference conll18_ud_eval.py:105-135);
+# everything else (aux/cop/mark/det/clf/case/cc, punct, ...) is
+# excluded from CLAS.
+CONTENT_DEPRELS = frozenset({
+    "nsubj", "obj", "iobj", "csubj", "ccomp", "xcomp", "obl", "vocative",
+    "expl", "dislocated", "advcl", "advmod", "discourse", "nmod", "appos",
+    "nummod", "acl", "amod", "conj", "fixed", "flat", "compound", "list",
+    "parataxis", "orphan", "goeswith", "reparandum", "root", "dep",
+})
+
+
+def _permille(num: str, den: str) -> F.Column:
+    return F.expr(f"CAST(({num}) DIV greatest({den}, 1) AS INT)")
+
+
+def _score(gold: DataFrame, system: DataFrame, pairs: DataFrame,
+           correct: F.Column, content_only: bool) -> DataFrame:
+    """The reference's alignment_score (conll18_ud_eval.py:382-408) as
+    one row: (n_gold, n_system, n_aligned, n_correct,
+    precision_permille, recall_permille, f1_permille), integer DIV.
+
+    ``content_only`` is its CLAS-family filter_fn: each side's totals
+    count its own content-BASE-deprel words, and only pairs whose GOLD
+    word is content are aligned or correct."""
+    if content_only:
+        gold, system, pairs = (
+            df.filter(rel.isin(*sorted(CONTENT_DEPRELS))) for df, rel in (
+                (gold, _base_rel(F.col("deprel"))),
+                (system, _base_rel(F.col("deprel"))),
+                (pairs, F.col("g_rel"))))
+    gold_n = gold.agg(F.count(F.lit(1)).alias("n_gold"))
+    sys_n = system.agg(F.count(F.lit(1)).alias("n_system"))
+    agg = pairs.agg(F.count(F.lit(1)).alias("n_aligned"),
+                    F.sum(correct.cast("long")).alias("n_correct"))
+    return (gold_n.crossJoin(sys_n).crossJoin(agg)
+            .select("n_gold", "n_system", "n_aligned",
+                    F.coalesce("n_correct", F.lit(0)).alias("n_correct"))
+            .select("n_gold", "n_system", "n_aligned", "n_correct",
+                    _permille("n_correct * 1000", "n_system")
+                    .alias("precision_permille"),
+                    _permille("n_correct * 1000", "n_gold")
+                    .alias("recall_permille"),
+                    _permille("n_correct * 2000", "n_gold + n_system")
+                    .alias("f1_permille")))
 
 
 def uas_las_aligned(gold: DataFrame, system: DataFrame,
@@ -255,23 +318,14 @@ def uas_las_aligned(gold: DataFrame, system: DataFrame,
     alignment is cached lazily (see _cached_alignment).
     """
     aligned = _cached_alignment(gold, system, cache_registry)
-    # map each side's head index to its aligned counterpart: an arc is
-    # correct when the head of the gold word aligns to the head of the
-    # system word (root, head 0, matches root)
-    j = _aligned_arcs(gold, system, aligned)
-    ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
-        F.col("s_head_aligned") == F.col("s_head"))
-    la = ua & (F.col("g_rel") == F.col("s_rel"))
-    agg = j.agg(F.count(F.lit(1)).alias("n_aligned"),
-                F.sum(ua.cast("long")).alias("n_ua"),
-                F.sum(la.cast("long")).alias("n_la"))
-    out = agg.select(
+    agg = _aligned_arcs(gold, system, aligned).agg(
+        F.count(F.lit(1)).alias("n_aligned"),
+        F.sum(F.col("ua").cast("long")).alias("n_ua"),
+        F.sum(F.col("la").cast("long")).alias("n_la"))
+    return agg.select(
         "n_aligned",
-        F.expr("CAST((n_ua * 1000) DIV greatest(n_aligned, 1) AS INT)")
-        .alias("uas_permille"),
-        F.expr("CAST((n_la * 1000) DIV greatest(n_aligned, 1) AS INT)")
-        .alias("las_permille"))
-    return out
+        _permille("n_ua * 1000", "n_aligned").alias("uas_permille"),
+        _permille("n_la * 1000", "n_aligned").alias("las_permille"))
 
 
 def aligned_field_score(gold: DataFrame, system: DataFrame,
@@ -290,43 +344,10 @@ def aligned_field_score(gold: DataFrame, system: DataFrame,
     shared alignment and own its unpersist timing.
     """
     aligned = _cached_alignment(gold, system, cache_registry)
-    g = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
-                    F.col(field).alias("g_f"))
-    s = system.select(*SENT_KEY, F.col("token_id").alias("system_token_id"),
-                      F.col(field).alias("s_f"))
-    j = aligned.join(g, SENT_KEY + ["gold_token_id"]).join(
-        s, SENT_KEY + ["system_token_id"])
-    agg = j.agg(F.count(F.lit(1)).alias("n_aligned"),
-                F.sum((F.col("g_f") == F.col("s_f")).cast("long"))
-                .alias("n_correct"))
-    gold_n = gold.agg(F.count(F.lit(1)).alias("n_gold"))
-    sys_n = system.agg(F.count(F.lit(1)).alias("n_system"))
-    out = (gold_n.crossJoin(sys_n).crossJoin(agg)
-           .select("n_gold", "n_system",
-                   F.coalesce("n_aligned", F.lit(0)).alias("n_aligned"),
-                   F.coalesce("n_correct", F.lit(0)).alias("n_correct"))
-           .select(
-               "n_gold", "n_system", "n_aligned", "n_correct",
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_system, 1)"
-                      " AS INT)").alias("precision_permille"),
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_gold, 1)"
-                      " AS INT)").alias("recall_permille"),
-               F.expr("CAST((n_correct * 2000) DIV greatest(n_gold + n_system,"
-                      " 1) AS INT)").alias("f1_permille"),
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_aligned, 1)"
-                      " AS INT)").alias("aligned_acc_permille")))
-    return out
-
-
-# The UD content relations (reference conll18_ud_eval.py:105-135);
-# everything else (aux/cop/mark/det/clf/case/cc, punct, ...) is
-# excluded from CLAS.
-CONTENT_DEPRELS = frozenset({
-    "nsubj", "obj", "iobj", "csubj", "ccomp", "xcomp", "obl", "vocative",
-    "expl", "dislocated", "advcl", "advmod", "discourse", "nmod", "appos",
-    "nummod", "acl", "amod", "conj", "fixed", "flat", "compound", "list",
-    "parataxis", "orphan", "goeswith", "reparandum", "root", "dep",
-})
+    j = _matched(gold, system, aligned, {"f": F.col(field)})
+    return _score(gold, system, j, F.col("g_f") == F.col("s_f"),
+                  content_only=False).withColumn(
+        "aligned_acc_permille", _permille("n_correct * 1000", "n_aligned"))
 
 
 def clas_aligned(gold: DataFrame, system: DataFrame,
@@ -346,34 +367,8 @@ def clas_aligned(gold: DataFrame, system: DataFrame,
     shared alignment and own its unpersist timing.
     """
     aligned = _cached_alignment(gold, system, cache_registry)
-    j = _aligned_arcs(gold, system, aligned)
-    content = F.col("g_rel").isin(*sorted(CONTENT_DEPRELS))
-    ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
-        F.col("s_head_aligned") == F.col("s_head"))
-    la = ua & (F.col("g_rel") == F.col("s_rel"))
-    agg = j.agg(
-        F.sum(content.cast("long")).alias("n_aligned"),
-        F.sum((content & la).cast("long")).alias("n_correct"))
-    gold_n = gold.filter(_base_rel(F.col("deprel"))
-                         .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_gold"))
-    sys_n = system.filter(_base_rel(F.col("deprel"))
-                          .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_system"))
-    out = (gold_n.crossJoin(sys_n).crossJoin(agg)
-           .select(
-               "n_gold", "n_system",
-               F.coalesce("n_aligned", F.lit(0)).alias("n_aligned"),
-               F.coalesce("n_correct", F.lit(0)).alias("n_correct"))
-           .select(
-               "n_gold", "n_system", "n_aligned", "n_correct",
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_system, 1) AS INT)")
-               .alias("precision_permille"),
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_gold, 1) AS INT)")
-               .alias("recall_permille"),
-               F.expr("CAST((n_correct * 2000) DIV greatest(n_gold + n_system, 1)"
-                      " AS INT)").alias("f1_permille")))
-    return out
+    return _score(gold, system, _aligned_arcs(gold, system, aligned),
+                  F.col("la"), content_only=True)
 
 
 # The UD functional relations whose dependents ride along in MLAS
@@ -454,16 +449,8 @@ def mlas_aligned(gold: DataFrame, system: DataFrame,
     recall_permille, f1_permille).  LAZY (see uas_las_aligned).
     """
     aligned = _cached_alignment(gold, system, cache_registry)
-    j = _aligned_arcs(gold, system, aligned)
-    g_attr = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
-                         F.col("upos").alias("g_upos"),
-                         norm_feats(F.col("feats")).alias("g_feats"))
-    s_attr = system.select(*SENT_KEY,
-                           F.col("token_id").alias("system_token_id"),
-                           F.col("upos").alias("s_upos"),
-                           norm_feats(F.col("feats")).alias("s_feats"))
-    j = j.join(g_attr, SENT_KEY + ["gold_token_id"]) \
-         .join(s_attr, SENT_KEY + ["system_token_id"])
+    j = _aligned_arcs(gold, system, aligned, {
+        "upos": F.col("upos"), "feats": norm_feats(F.col("feats"))})
     g_fc = _functional_children(gold, None).withColumnRenamed(
         "token_id", "gold_token_id").withColumnRenamed("fc", "g_fc")
     s_fc = _functional_children(system, aligned).withColumnRenamed(
@@ -474,36 +461,10 @@ def mlas_aligned(gold: DataFrame, system: DataFrame,
          .join(s_fc, SENT_KEY + ["system_token_id"], "left")
          .withColumn("g_fc", F.coalesce("g_fc", empty))
          .withColumn("s_fc", F.coalesce("s_fc", empty)))
-    content = F.col("g_rel").isin(*sorted(CONTENT_DEPRELS))
-    ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
-        F.col("s_head_aligned") == F.col("s_head"))
-    ok = ua & (F.col("g_rel") == F.col("s_rel")) \
-        & (F.col("g_upos") == F.col("s_upos")) \
+    ok = F.col("la") & (F.col("g_upos") == F.col("s_upos")) \
         & (F.col("g_feats") == F.col("s_feats")) \
         & (F.col("g_fc") == F.col("s_fc"))
-    agg = j.agg(
-        F.sum(content.cast("long")).alias("n_aligned"),
-        F.sum((content & ok).cast("long")).alias("n_correct"))
-    gold_n = gold.filter(_base_rel(F.col("deprel"))
-                         .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_gold"))
-    sys_n = system.filter(_base_rel(F.col("deprel"))
-                          .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_system"))
-    out = (gold_n.crossJoin(sys_n).crossJoin(agg)
-           .select(
-               "n_gold", "n_system",
-               F.coalesce("n_aligned", F.lit(0)).alias("n_aligned"),
-               F.coalesce("n_correct", F.lit(0)).alias("n_correct"))
-           .select(
-               "n_gold", "n_system", "n_aligned", "n_correct",
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_system, 1) AS INT)")
-               .alias("precision_permille"),
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_gold, 1) AS INT)")
-               .alias("recall_permille"),
-               F.expr("CAST((n_correct * 2000) DIV greatest(n_gold + n_system, 1)"
-                      " AS INT)").alias("f1_permille")))
-    return out
+    return _score(gold, system, j, ok, content_only=True)
 
 
 def blex_aligned(gold: DataFrame, system: DataFrame,
@@ -517,40 +478,7 @@ def blex_aligned(gold: DataFrame, system: DataFrame,
     LAZY (see uas_las_aligned).
     """
     aligned = _cached_alignment(gold, system, cache_registry)
-    j = _aligned_arcs(gold, system, aligned)
-    g_l = gold.select(*SENT_KEY, F.col("token_id").alias("gold_token_id"),
-                      F.col("lemma").alias("g_lemma"))
-    s_l = system.select(*SENT_KEY,
-                        F.col("token_id").alias("system_token_id"),
-                        F.col("lemma").alias("s_lemma"))
-    j = j.join(g_l, SENT_KEY + ["gold_token_id"]) \
-         .join(s_l, SENT_KEY + ["system_token_id"])
-    content = F.col("g_rel").isin(*sorted(CONTENT_DEPRELS))
-    ua = (F.col("g_head") == 0) & (F.col("s_head") == 0) | (
-        F.col("s_head_aligned") == F.col("s_head"))
+    j = _aligned_arcs(gold, system, aligned, {"lemma": F.col("lemma")})
     lemma_ok = (F.col("g_lemma") == F.lit("_")) | \
         (F.col("g_lemma") == F.col("s_lemma"))
-    ok = ua & (F.col("g_rel") == F.col("s_rel")) & lemma_ok
-    agg = j.agg(
-        F.sum(content.cast("long")).alias("n_aligned"),
-        F.sum((content & ok).cast("long")).alias("n_correct"))
-    gold_n = gold.filter(_base_rel(F.col("deprel"))
-                         .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_gold"))
-    sys_n = system.filter(_base_rel(F.col("deprel"))
-                          .isin(*sorted(CONTENT_DEPRELS))) \
-        .agg(F.count(F.lit(1)).alias("n_system"))
-    out = (gold_n.crossJoin(sys_n).crossJoin(agg)
-           .select(
-               "n_gold", "n_system",
-               F.coalesce("n_aligned", F.lit(0)).alias("n_aligned"),
-               F.coalesce("n_correct", F.lit(0)).alias("n_correct"))
-           .select(
-               "n_gold", "n_system", "n_aligned", "n_correct",
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_system, 1) AS INT)")
-               .alias("precision_permille"),
-               F.expr("CAST((n_correct * 1000) DIV greatest(n_gold, 1) AS INT)")
-               .alias("recall_permille"),
-               F.expr("CAST((n_correct * 2000) DIV greatest(n_gold + n_system, 1)"
-                      " AS INT)").alias("f1_permille")))
-    return out
+    return _score(gold, system, j, F.col("la") & lemma_ok, content_only=True)

@@ -66,29 +66,27 @@ def _h64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """One survivor (min key) per distinct text; group sizes included."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("digest"))
-        .agg(F.min(key_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dupes"))
+        docs.groupBy(F.md5(F.col("text")).alias("digest"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dupes"))
         .select("keep_id", "n_dupes")
     )
 
 
-def token_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
-                   key_col: str = "doc_id") -> DataFrame:
+def token_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(key, shingle) distinct token n-grams, built JVM-side."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
     return (
         docs.filter(F.size(toks) >= n)
-        .select(F.col(key_col).alias("key"), F.explode(F.array_distinct(sh)).alias("shingle"))
+        .select(F.col("doc_id").alias("key"), F.explode(F.array_distinct(sh)).alias("shingle"))
     )
 
 
-def _shingles_wide(docs: DataFrame, n: int, text_col: str,
-                   key_col: str) -> DataFrame:
+def _shingles_wide(docs: DataFrame, n: int) -> DataFrame:
     """Canonical fanned-out shingle table: round-robin the (narrow) doc
     scan so shingling itself parallelizes, then ONE hash exchange on
     shingle.  Every consumer of the returned frame that needs the
@@ -98,7 +96,7 @@ def _shingles_wide(docs: DataFrame, n: int, text_col: str,
     once per consumer, and every downstream stage starts at cluster
     width instead of the scan stage's 1-2 tasks (guide §2.4)."""
     w = fan_width(docs)
-    sh = token_shingles(fan_out(docs), n, text_col, key_col)
+    sh = token_shingles(fan_out(docs), n)
     return sh.repartition(w, "shingle")
 
 
@@ -191,12 +189,12 @@ def _scancount(tbl: pa.Table, min_pct: int, max_shingle_freq: int) -> pa.Table:
                      "common": common, "na": size[a], "nb": size[b]})
 
 
-def _local_pairs(docs: DataFrame, n: int, min_pct: int, text_col: str,
-                 key_col: str, max_shingle_freq: int) -> DataFrame | None:
+def _local_pairs(docs: DataFrame, n: int, min_pct: int,
+                 max_shingle_freq: int) -> DataFrame | None:
     """jaccard_pairs' rows and schema built by _scancount from one
     bounded Arrow collect of the shingle table, or None when the
     collect fills MAX_LOCAL_SHINGLES (the distributed route's case)."""
-    sh = token_shingles(fan_out(docs), n, text_col, key_col)
+    sh = token_shingles(fan_out(docs), n)
     tbl = sh.limit(MAX_LOCAL_SHINGLES).toArrow()
     if tbl.num_rows >= MAX_LOCAL_SHINGLES:
         return None
@@ -209,7 +207,6 @@ def _local_pairs(docs: DataFrame, n: int, min_pct: int, text_col: str,
 
 
 def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
-                  text_col: str = "text", key_col: str = "doc_id",
                   max_shingle_freq: int = 1000) -> DataFrame:
     """All (a, b, common, na, nb) with n-gram Jaccard >= min_pct/100
     (see _verify), sizes counted after the stop-shingle guard.
@@ -229,11 +226,10 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
       it on the scan stage's 1-2 tasks (281 s at sf1.0;
       plans/r07/dedup_jaccard_before.txt).
     """
-    local = _local_pairs(docs, n, min_pct, text_col, key_col, max_shingle_freq)
+    local = _local_pairs(docs, n, min_pct, max_shingle_freq)
     if local is not None:
         return local
-    shs = _guarded_sized(_shingles_wide(docs, n, text_col, key_col),
-                         max_shingle_freq)
+    shs = _guarded_sized(_shingles_wide(docs, n), max_shingle_freq)
     # per-shingle posting list, sorted so expansion emits a < b pairs;
     # keys are distinct within a shingle group (token_shingles emits
     # distinct shingles per doc), so the key order is strictly ascending
@@ -268,8 +264,7 @@ def _signatures_from_shingles(sh: DataFrame, n_minhash: int) -> DataFrame:
     return sh.groupBy("key").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text",
-                       key_col: str = "doc_id",
+def minhash_signatures(docs: DataFrame, n: int = 3,
                        n_minhash: int = N_MINHASH) -> DataFrame:
     """(key, mh0..mh{N-1}): per-doc min over salted shingle hashes.
 
@@ -277,7 +272,7 @@ def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text",
     evaluations per shingle row (the dominant cost) run in the partial
     aggregate at cluster width, not inside the 1-2 scan tasks."""
     return _signatures_from_shingles(
-        token_shingles(fan_out(docs), n, text_col, key_col), n_minhash)
+        token_shingles(fan_out(docs), n), n_minhash)
 
 
 def lsh_pairs_from_signatures(sig: DataFrame, n_minhash: int,
@@ -311,18 +306,16 @@ def lsh_pairs_from_signatures(sig: DataFrame, n_minhash: int,
     )
 
 
-def lsh_candidate_pairs(docs: DataFrame, n: int = 3, text_col: str = "text",
-                        key_col: str = "doc_id",
+def lsh_candidate_pairs(docs: DataFrame, n: int = 3,
                         n_minhash: int = N_MINHASH,
                         band: int = LSH_BAND) -> DataFrame:
     """Near-dup candidates: docs sharing any LSH band bucket."""
-    sh = token_shingles(fan_out(docs), n, text_col, key_col)
+    sh = token_shingles(fan_out(docs), n)
     return lsh_pairs_from_signatures(
         _signatures_from_shingles(sh, n_minhash), n_minhash, band)
 
 
 def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
-                       text_col: str = "text", key_col: str = "doc_id",
                        n_minhash: int = N_MINHASH, band: int = LSH_BAND,
                        max_shingle_freq: int = 1000) -> DataFrame:
     """The production near-dup composition: LSH banding GENERATES
@@ -340,11 +333,11 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     lsh_candidate_pairs emits their (a, b); over it every consumer shares
     one shingle exchange (see _shingles_wide).
     """
-    local = _local_pairs(docs, n, min_pct, text_col, key_col, max_shingle_freq)
+    local = _local_pairs(docs, n, min_pct, max_shingle_freq)
     if local is not None:
-        cand = lsh_candidate_pairs(docs, n, text_col, key_col, n_minhash, band)
+        cand = lsh_candidate_pairs(docs, n, n_minhash, band)
         return local.join(cand, ["a", "b"], "left_semi")
-    sh = _shingles_wide(docs, n, text_col, key_col)
+    sh = _shingles_wide(docs, n)
     cand = lsh_pairs_from_signatures(
         _signatures_from_shingles(sh, n_minhash), n_minhash, band)
     shs = _guarded_sized(sh, max_shingle_freq)
@@ -358,9 +351,7 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
-                  n_bands: int = 4, text_col: str = "text",
-                  key_col: str = "doc_id",
-                  bits: int = SIMHASH_BITS,
+                  n_bands: int = 4, bits: int = SIMHASH_BITS,
                   max_bucket_size: int | None = 100_000) -> DataFrame:
     """(a, b, hamming): near-dup pairs under SimHash Hamming distance.
 
@@ -384,7 +375,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     assert max_hamming <= n_bands - 1, (
         "completeness needs max_hamming <= n_bands - 1 (pigeonhole)")
     width = bits // n_bands
-    sig = simhash(docs, text_col, key_col, bits)
+    sig = simhash(docs, bits)
     # one posexplode projection instead of an n_bands-way union: the
     # union recomputed the signature aggregate once per band branch
     chunks = [
@@ -412,11 +403,10 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id",
-            bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """(key, simhash): sign-aggregated token fingerprint over `bits` bits."""
-    tok = fan_out(docs).select(F.col(key_col).alias("key"),
-                               F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+    tok = fan_out(docs).select(F.col("doc_id").alias("key"),
+                               F.explode(F.split(F.col("text"), " ")).alias("tok"))
     h = _h64(F.col("tok"))
     bit_sums = [
         F.sum(F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{b}")

@@ -19,33 +19,31 @@ STOP_VI = ["và", "của", "là", "có", "không", "được", "trong", "cho", "
 PUNCT_RE = r"[\.,;:!\?\(\)\[\]\"']"
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                key_col: str = "doc_id") -> DataFrame:
-    toks = F.split(F.col(text_col), " ")
+def token_stats(docs: DataFrame) -> DataFrame:
+    toks = F.split(F.col("text"), " ")
     return docs.select(
-        F.col(key_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.length(F.col(text_col)).alias("n_chars"),
+        F.length(F.col("text")).alias("n_chars"),
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  key_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Per-doc quality features in integer permille (float-free):
     mean token length x100, stopword permille, punctuation permille,
     distinct-token permille (type/token ratio)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     stops = F.array(*[F.lit(s) for s in STOP_EN + STOP_VI])
     n_stop = F.size(F.array_intersect(toks, stops))  # distinct-stopword hits
     n_stop_tok = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     n_punct = F.size(F.filter(toks, lambda t: t.rlike(PUNCT_RE)))
-    nonspace = F.length(F.regexp_replace(F.col(text_col), " ", ""))
+    nonspace = F.length(F.regexp_replace(F.col("text"), " ", ""))
     # ratios via integer DIV, never floor(double division): double
     # divides can floor differently across engines at exact boundaries
     raw = docs.select(
-        F.col(key_col).alias("doc_id"),
+        "doc_id",
         n.alias("n_tokens"),
         nonspace.alias("_nonspace"),
         n_stop_tok.alias("_n_stop_tok"),
@@ -68,10 +66,9 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text",
-            key_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-count heuristic language ID (en / vi / unknown)."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.lower(F.col("text")), " ")
     en = F.size(F.filter(toks, lambda t: t.isin(*STOP_EN)))
     vi = F.size(F.filter(toks, lambda t: t.isin(*STOP_VI)))
     lang = (
@@ -79,23 +76,21 @@ def lang_id(docs: DataFrame, text_col: str = "text",
         .when((vi > en) & (vi > 0), F.lit("vi"))
         .otherwise(F.lit("unknown"))
     )
-    return docs.select(F.col(key_col).alias("doc_id"), lang.alias("lang_pred"),
+    return docs.select("doc_id", lang.alias("lang_pred"),
                        en.alias("en_hits"), vi.alias("vi_hits"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                key_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Normalization-stable 60-bit content fingerprint."""
-    normed = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    normed = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     return docs.select(
-        F.col(key_col).alias("doc_id"),
+        "doc_id",
         F.conv(F.substring(F.md5(normed), 1, 15), 16, 10).cast("bigint")
         .alias("fingerprint"),
     )
 
 
-def profile(docs: DataFrame, text_col: str = "text",
-            key_col: str = "doc_id") -> DataFrame:
+def profile(docs: DataFrame) -> DataFrame:
     """Full per-document text profile in ONE projection pass: token
     stats + quality features + language ID + content fingerprint.
 
@@ -112,18 +107,18 @@ def profile(docs: DataFrame, text_col: str = "text",
     """
     from phonlp_spark.ops.fanout import fan_out
     docs = fan_out(docs)
-    toks = F.split(F.col(text_col), " ")
-    ltoks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.col("text"), " ")
+    ltoks = F.split(F.lower(F.col("text")), " ")
     stops = F.array(*[F.lit(s) for s in STOP_EN + STOP_VI])
     en_hits = F.size(F.filter(ltoks, lambda t: t.isin(*STOP_EN)))
     vi_hits = F.size(F.filter(ltoks, lambda t: t.isin(*STOP_VI)))
-    normed = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    normed = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     raw = docs.select(
-        F.col(key_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("_n_distinct"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.length(F.regexp_replace(F.col(text_col), " ", "")).alias("_nonspace"),
+        F.length(F.col("text")).alias("n_chars"),
+        F.length(F.regexp_replace(F.col("text"), " ", "")).alias("_nonspace"),
         F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
         .alias("_n_stop_tok"),
         F.size(F.filter(toks, lambda t: t.rlike(PUNCT_RE))).alias("_n_punct"),
@@ -158,8 +153,7 @@ def profile(docs: DataFrame, text_col: str = "text",
     )
 
 
-def nfd_normalize(docs: DataFrame, text_col: str = "text",
-                  key_col: str = "doc_id") -> DataFrame:
+def nfd_normalize(docs: DataFrame) -> DataFrame:
     """NFD unicode normalization (reference common/utils.py:124-125).
 
     Spark has no built-in unicode-normal-form expression, so this is an
@@ -176,12 +170,11 @@ def nfd_normalize(docs: DataFrame, text_col: str = "text",
                      if x is not None else None)
 
     nfd_udf = F.pandas_udf(_nfd, T.StringType())
-    return docs.select(F.col(key_col).alias("doc_id"),
-                       nfd_udf(F.col(text_col)).alias("text_nfd"))
+    return docs.select("doc_id",
+                       nfd_udf(F.col("text")).alias("text_nfd"))
 
 
-def length_percentiles(docs: DataFrame, pcts: tuple[int, ...] = (50, 90, 99),
-                       text_col: str = "text") -> DataFrame:
+def length_percentiles(docs: DataFrame, pcts: tuple[int, ...] = (50, 90, 99)) -> DataFrame:
     """(pct, n_tokens): EXACT token-count percentiles via the
     histogram-cumsum pattern — percentile p is the smallest length
     whose cumulative count reaches ceil(n * p / 100) (the inverted-CDF
@@ -194,7 +187,7 @@ def length_percentiles(docs: DataFrame, pcts: tuple[int, ...] = (50, 90, 99),
     """
     from pyspark.sql.window import Window
 
-    hist = (docs.select(F.size(F.split(F.col(text_col), " ")).alias("len"))
+    hist = (docs.select(F.size(F.split(F.col("text"), " ")).alias("len"))
             .groupBy("len").agg(F.count(F.lit(1)).alias("cnt")))
     w = Window.orderBy("len").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.withColumn("cum", F.sum("cnt").over(w)) \

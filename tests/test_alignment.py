@@ -474,3 +474,61 @@ def test_blex_gold_underscore_lemma_escape(spark):  # noqa: F811
          ("d", 0, 2, "b", 1, "obj", "bb")], schema)
     got = blex_aligned(gold, syst).collect()[0]
     assert got["n_correct"] == 2
+
+
+# --- local value pins on the MWT fixtures ----------------------------
+# Every fixture above, scored by the metrics the reference tests run on
+# it, pinned as its full row and schema: the MWT cases (split and
+# unsplit multiword tokens, NotAligned functional children, subtype
+# stripping) are checked without the reference module.
+_PRF = ("n_gold:bigint,n_system:bigint,n_aligned:bigint,n_correct:bigint,"
+        "precision_permille:int,recall_permille:int,f1_permille:int")
+PRF_SCHEMA = f"struct<{_PRF}>"
+FIELD_SCHEMA = f"struct<{_PRF},aligned_acc_permille:int>"
+UAS_LAS_SCHEMA = "struct<n_aligned:bigint,uas_permille:int,las_permille:int>"
+
+MWT_FIXTURES = {
+    "DEP": (_dep_df, GOLD_DEP, {"SYSA": SYSA_DEP, "SYSB": SYSB_DEP}),
+    "POS": (_pos_df, GOLD_POS, {"SYSA": SYSA_POS, "SYSB": SYSB_POS}),
+    "SUB": (_dep_df, GOLD_SUB, {"SYSA": SYSA_SUB, "SYSB": SYSB_SUB}),
+    "FULL": (_full_df, GOLD_FULL,
+             {"SYSA": SYSA_FULL, "SYSB": SYSB_FULL, "SYSC": SYSC_FULL}),
+}
+
+MWT_PINS = {
+    ("SYSA_DEP", "clas"): ((3, 4, 3, 3, 750, 1000, 857), PRF_SCHEMA),
+    ("SYSA_DEP", "uas_las"): ((3, 1000, 1000), UAS_LAS_SCHEMA),
+    ("SYSB_DEP", "clas"): ((3, 3, 3, 1, 333, 333, 333), PRF_SCHEMA),
+    ("SYSB_DEP", "uas_las"): ((5, 600, 400), UAS_LAS_SCHEMA),
+    ("SYSA_POS", "upos"): ((5, 4, 3, 2, 500, 400, 444, 666), FIELD_SCHEMA),
+    ("SYSB_POS", "upos"): ((5, 5, 5, 3, 600, 600, 600, 600), FIELD_SCHEMA),
+    ("SYSA_SUB", "clas"): ((3, 3, 3, 3, 1000, 1000, 1000), PRF_SCHEMA),
+    ("SYSB_SUB", "clas"): ((3, 4, 3, 1, 250, 333, 285), PRF_SCHEMA),
+    ("SYSA_FULL", "mlas"): ((3, 3, 3, 3, 1000, 1000, 1000), PRF_SCHEMA),
+    ("SYSA_FULL", "blex"): ((3, 3, 3, 3, 1000, 1000, 1000), PRF_SCHEMA),
+    ("SYSA_FULL", "clas"): ((3, 3, 3, 3, 1000, 1000, 1000), PRF_SCHEMA),
+    ("SYSA_FULL", "uas_las"): ((5, 1000, 1000), UAS_LAS_SCHEMA),
+    ("SYSB_FULL", "mlas"): ((3, 3, 3, 1, 333, 333, 333), PRF_SCHEMA),
+    ("SYSB_FULL", "blex"): ((3, 3, 3, 2, 666, 666, 666), PRF_SCHEMA),
+    ("SYSB_FULL", "clas"): ((3, 3, 3, 3, 1000, 1000, 1000), PRF_SCHEMA),
+    ("SYSB_FULL", "uas_las"): ((5, 1000, 800), UAS_LAS_SCHEMA),
+    ("SYSC_FULL", "mlas"): ((3, 3, 3, 2, 666, 666, 666), PRF_SCHEMA),
+    ("SYSC_FULL", "blex"): ((3, 3, 3, 2, 666, 666, 666), PRF_SCHEMA),
+    ("SYSC_FULL", "clas"): ((3, 3, 3, 2, 666, 666, 666), PRF_SCHEMA),
+    ("SYSC_FULL", "uas_las"): ((3, 666, 666), UAS_LAS_SCHEMA),
+}
+
+
+@pytest.mark.parametrize("case, metric", sorted(MWT_PINS),
+                         ids=[f"{c}-{m}" for c, m in sorted(MWT_PINS)])
+def test_aligned_metrics_pinned_on_mwt_fixtures(spark, case, metric):  # noqa: F811
+    from phonlp_spark.ops import alignment as A
+
+    fn = {"clas": A.clas_aligned, "uas_las": A.uas_las_aligned,
+          "upos": A.aligned_field_score, "mlas": A.mlas_aligned,
+          "blex": A.blex_aligned}[metric]
+    sys_name, fixture = case.split("_")
+    make, gold, systems = MWT_FIXTURES[fixture]
+    out = fn(make(spark, gold), make(spark, systems[sys_name]))
+    assert [tuple(r) for r in out.collect()] == [MWT_PINS[case, metric][0]]
+    assert out.schema.simpleString() == MWT_PINS[case, metric][1]

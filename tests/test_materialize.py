@@ -410,6 +410,21 @@ def test_kg_graph_queries_pinned_by_value(spark, monkeypatch, name,  # noqa: F81
     assert (len(rows), sha) == KG_PINS[name]
 
 
+@pytest.mark.skipif(not os.path.isdir(SF0001), reason="sf0.001 fixture absent")
+def test_kg_graph_queries_release_their_caches(spark):  # noqa: F811
+    """Each kg query run releases the caches the previous run made:
+    three runs of kg_edges leave as many persisted RDDs as one."""
+    import __spark_entry__ as entry
+
+    def run():
+        entry.queries()["kg_edges"](spark, SF0001).count()
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    one = run()
+    run()
+    assert run() == one
+
+
 def test_resume_accepts_whole_table_fingerprint(spark, out_dir):  # noqa: F811
     """Manifests record the whole-table fingerprint formula
     (count, bit_xor(xxhash64(doc_id))): the per-bucket aggregate
