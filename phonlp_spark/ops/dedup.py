@@ -4,15 +4,18 @@ All hashing is built on md5 hex substrings cast to bigint so the exact
 same arithmetic is expressible in ANSI SQL (DuckDB oracles) — no
 engine-specific hash functions cross the parity boundary.  Spark-side
 everything is built-in expressions (JVM-side, WholeStageCodegen); no
-Python UDFs.  The one driver-side piece is the in-cap Jaccard verifier
-(_scancount): numpy over one Arrow collect of the shingle table.
+Python UDFs.  The driver-side pieces are the in-cap Jaccard route's:
+the verifier (_scancount, numpy over one Arrow collect of the shingle
+table) and lsh_verified_pairs' band check of the verified pairs
+(_lsh_collides, hashlib md5 over the same collect).
 
 Scale shapes:
 - exact dedup: one hash-aggregate on a 64-bit digest (not raw text);
 - Jaccard, routed by the shingle table's row count alone:
   * under MAX_LOCAL_SHINGLES rows: one bounded Arrow collect, then a
     ScanCount probe over a CSR inverted index on the driver — no pair
-    record is shuffled;
+    record is shuffled; lsh_verified_pairs then keeps the verified
+    pairs that share an LSH band bucket, hashed for their keys only;
   * over it: one stop-shingle guard, one size table and one verifier
     (_guarded_sized -> _verify); pairs come from posting lists
     (jaccard_pairs) or LSH candidates (lsh_verified_pairs);
@@ -22,6 +25,8 @@ Scale shapes:
 """
 
 from __future__ import annotations
+
+from hashlib import md5
 
 import numpy as np
 import pyarrow as pa
@@ -54,6 +59,12 @@ SIMHASH_BITS = 16
 #   4.7 s vs 64 s; 0.95 GB.  Faster on 4 cores, but the driver does
 #   not grow with the cluster and the distributed plan does, so that
 #   shape stays distributed.
+# lsh_verified_pairs' worst case at the cap: 10,000 docs each with a
+# near-copy (950,000 rows, 490,000 distinct shingles, every key in a
+# verified pair, so every key's signature is hashed on the driver):
+# warm 6.8-8.5 s vs 7.0-9.5 s for the candidate plan it replaces
+# (ScanCount 0.3 s, band check 4.9 s, mostly 3.9M md5 calls); driver
+# Python RSS 383 vs 349 MB, JVM peak 1.67-1.80 vs 1.94-1.99 GB.
 MAX_LOCAL_SHINGLES = 1_000_000
 
 # pair emissions counted per probe block: bounds the driver's scratch
@@ -189,21 +200,59 @@ def _scancount(tbl: pa.Table, min_pct: int, max_shingle_freq: int) -> pa.Table:
                      "common": common, "na": size[a], "nb": size[b]})
 
 
-def _local_pairs(docs: DataFrame, n: int, min_pct: int,
-                 max_shingle_freq: int) -> DataFrame | None:
+def _lsh_collides(tbl: pa.Table, rows: pa.Table, n_minhash: int,
+                  band: int) -> np.ndarray:
+    """Per (a, b) row of rows: do a and b share an LSH band bucket?
+
+    The arithmetic of _signatures_from_shingles + lsh_pairs_from_signatures
+    (and the oracle SQL) in Python, over the (key, shingle) rows of tbl
+    (UNGUARDED, as the signatures are) for the keys in rows only:
+    mh_j = min over the key's shingles of int(md5(f"{j}:{shingle}")[:15],
+    16), bucket_b = md5 of band b's mh values joined by "_".  Each
+    distinct shingle is hashed once."""
+    keys = pc.unique(pa.concat_arrays([rows.column("a").combine_chunks(),
+                                       rows.column("b").combine_chunks()]))
+    sub = tbl.filter(pc.is_in(tbl.column("key"), value_set=keys))
+    kid = pc.index_in(sub.column("key"), value_set=keys).to_numpy()
+    enc = pc.dictionary_encode(sub.column("shingle").combine_chunks())
+    shingles = [s.encode() for s in enc.dictionary.to_pylist()]
+    order = np.argsort(kid, kind="stable")
+    sid = enc.indices.to_numpy()[order]
+    starts = np.flatnonzero(np.diff(kid[order], prepend=-1))
+    sig = np.empty((len(keys), n_minhash), np.int64)
+    for j in range(n_minhash):
+        salt = f"{j}:".encode()
+        # the first 15 hex digits are the top 60 bits of the digest
+        mh = np.frombuffer(b"".join([md5(salt + s).digest()[:8]
+                                     for s in shingles]), ">u8") >> 4
+        sig[:, j] = np.minimum.reduceat(mh[sid], starts)
+    buckets = np.array(
+        [[md5("_".join(map(str, s[b * band:(b + 1) * band])).encode()).digest()
+          for b in range(n_minhash // band)] for s in sig.tolist()])
+    a = pc.index_in(rows.column("a"), value_set=keys).to_numpy()
+    b = pc.index_in(rows.column("b"), value_set=keys).to_numpy()
+    return (buckets[a] == buckets[b]).any(axis=1)
+
+
+def _local_pairs(docs: DataFrame, n: int, min_pct: int, max_shingle_freq: int,
+                 sketch: tuple[int, int] | None = None) -> DataFrame | None:
     """jaccard_pairs' rows and schema built by _scancount from one
     bounded Arrow collect of the shingle table, or None when the
-    collect fills MAX_LOCAL_SHINGLES (the distributed route's case)."""
+    collect fills MAX_LOCAL_SHINGLES (the distributed route's case).
+    With sketch = (n_minhash, band) only the rows whose pair shares an
+    LSH band bucket are kept (_lsh_collides): lsh_verified_pairs' rows."""
     sh = token_shingles(fan_out(docs), n)
     tbl = sh.limit(MAX_LOCAL_SHINGLES).toArrow()
     if tbl.num_rows >= MAX_LOCAL_SHINGLES:
         return None
+    rows = _scancount(tbl, min_pct, max_shingle_freq)
+    if sketch is not None and rows.num_rows:
+        rows = rows.filter(pa.array(_lsh_collides(tbl, rows, *sketch)))
     key_type = sh.schema["key"].dataType
     schema = T.StructType(
         [T.StructField("a", key_type), T.StructField("b", key_type)]
         + [T.StructField(c, T.LongType(), False) for c in ("common", "na", "nb")])
-    return docs.sparkSession.createDataFrame(
-        _scancount(tbl, min_pct, max_shingle_freq), schema)
+    return docs.sparkSession.createDataFrame(rows, schema)
 
 
 def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
@@ -235,14 +284,14 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     # distinct shingles per doc), so the key order is strictly ascending
     posts = shs.groupBy("shingle").agg(
         F.sort_array(F.collect_list(F.struct("key", "sz"))).alias("ks"))
-    pair_arr = F.expr(
-        "flatten(transform(ks, (x, i) -> transform("
-        "slice(ks, i + 2, size(ks)), "
-        "y -> struct(x.key AS a, y.key AS b, x.sz AS na, y.sz AS nb))))")
     pairs = (
         posts.filter(F.size("ks") >= 2)
-        .select(F.explode(pair_arr).alias("p"))
-        .select("p.a", "p.b", "p.na", "p.nb")
+        # one row per posting, then one per later posting: no row value
+        # holds more than one posting list
+        .select("ks", F.posexplode("ks").alias("i", "x"))
+        .select("x", F.explode(F.expr("slice(ks, i + 2, size(ks))")).alias("y"))
+        .select(F.col("x.key").alias("a"), F.col("y.key").alias("b"),
+                F.col("x.sz").alias("na"), F.col("y.sz").alias("nb"))
         # explicit exchange BEFORE the aggregate: pair emissions are
         # ~90% unique (a, b) groups (measured 114M distinct of 127M at
         # sf1.0), so a map-side partial aggregate is a wasted full hash
@@ -329,14 +378,18 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     jaccard_pairs (missing only pairs LSH failed to collide — measured
     by the dedup family's recall story, same as ann_recall for ANN).
     Signatures come from the UNGUARDED shingles, as in the oracle SQL.
-    In cap (see jaccard_pairs) the driver-verified rows are kept where
-    lsh_candidate_pairs emits their (a, b); over it every consumer shares
-    one shingle exchange (see _shingles_wide).
+    In cap (see jaccard_pairs) the order flips: verify first, then
+    collide.  The driver-verified rows are kept where their two keys
+    share a band bucket, computed on the driver from the same collect
+    for the keys of verified pairs only (_lsh_collides); no MinHash
+    aggregate, banding join or semi-join runs, and the rows equal the
+    distributed plan's.  Over the cap every consumer shares one shingle
+    exchange (see _shingles_wide).
     """
-    local = _local_pairs(docs, n, min_pct, max_shingle_freq)
+    local = _local_pairs(docs, n, min_pct, max_shingle_freq,
+                         (n_minhash, band))
     if local is not None:
-        cand = lsh_candidate_pairs(docs, n, n_minhash, band)
-        return local.join(cand, ["a", "b"], "left_semi")
+        return local
     sh = _shingles_wide(docs, n)
     cand = lsh_pairs_from_signatures(
         _signatures_from_shingles(sh, n_minhash), n_minhash, band)

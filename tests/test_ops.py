@@ -416,24 +416,49 @@ def _both_routes(monkeypatch, op, docs, **kw):
 
 @pytest.mark.parametrize("keys", ["long", "string"])
 @pytest.mark.parametrize("freq", [4, 1000])
-@pytest.mark.parametrize("op", ["jaccard_pairs", "lsh_verified_pairs"])
-def test_jaccard_routes_agree(spark, monkeypatch, op, freq, keys):  # noqa: F811
+@pytest.mark.parametrize("op, sketch", [
+    ("jaccard_pairs", {}),
+    ("lsh_verified_pairs", {}),
+    ("lsh_verified_pairs", {"n_minhash": 32, "band": 4}),
+    ("lsh_verified_pairs", {"n_minhash": 4, "band": 1}),
+], ids=["jaccard_pairs", "lsh_verified_pairs",
+        "lsh_verified_pairs_32x4", "lsh_verified_pairs_4x1"])
+def test_jaccard_routes_agree(spark, monkeypatch, op, sketch, freq, keys):  # noqa: F811
     """The driver ScanCount verifier and the distributed posting-list /
     candidate-join path give the same rows and the same schema,
     nullability included.  String keys make a < b follow Spark's string
     order ('100' < '20'), not the numeric one.  A 16-emission probe
     block makes the driver probe run many blocks, some of them one doc
-    over the block size."""
+    over the block size.  For lsh_verified_pairs the driver band check
+    must equal the distributed banding on every sketch (default 8/2,
+    32/4, 4/1), and it must drop some Jaccard-verified pair."""
     monkeypatch.setattr(dedup, "_PROBE_BLOCK", 16)
     docs = _random_docs(spark, planted=True)
     if keys == "string":
         docs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     local, dist = _both_routes(monkeypatch, getattr(dedup, op), docs,
-                               min_pct=5, max_shingle_freq=freq)
+                               min_pct=5, max_shingle_freq=freq, **sketch)
     assert local.schema == dist.schema
     got = sorted(local.collect())
     assert got == sorted(dist.collect())
     assert got  # the planted near-copies pass on both operators
+    if op == "lsh_verified_pairs":
+        exact = dedup.jaccard_pairs(docs, min_pct=5, max_shingle_freq=freq)
+        assert len(got) < exact.count()  # LSH missed a verified pair
+
+
+def test_lsh_verified_in_cap_builds_no_candidate_plan(spark, monkeypatch):  # noqa: F811
+    """In cap lsh_verified_pairs checks LSH bands on the driver for the
+    verified pairs only: no MinHash aggregate, banding join or semi-join
+    is planned, yet the planted near-copies come back."""
+    def fail(*a, **k):
+        raise AssertionError("in-cap route built the candidate plan")
+    monkeypatch.setattr(dedup, "_signatures_from_shingles", fail)
+    monkeypatch.setattr(dedup, "lsh_pairs_from_signatures", fail)
+    got = dedup.lsh_verified_pairs(_random_docs(spark, planted=True),
+                                   min_pct=5).collect()
+    assert {(i, 100 + i) for i in range(0, 80, 8)} <= {
+        (r["a"], r["b"]) for r in got}
 
 
 @pytest.mark.parametrize(
