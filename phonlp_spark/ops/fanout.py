@@ -42,13 +42,15 @@ def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to ``fan_width(df)`` when its
     current plan would run narrower than that; identity otherwise.
 
-    The partition probe compiles the physical plan but runs no job:
-    warm, local[4] on a 4-core host, 20-100 ms on an sf0.01 document
-    scan or its shingle frame and 60-260 ms on its interleaved frame;
-    the first probe in a session pays the planner's warm-up (~1 s).
-    Results are row-identical either way — only placement changes.
+    The partition count is read from the physical plan's output
+    partitioning, which runs no job (reading it from the RDD runs the
+    stages under an exchange); only a plan that does not know it (0: a
+    file scan) falls back to the RDD, which plans the scan's splits
+    without running a job.  Results are row-identical either way — only
+    placement changes.
     """
     w = fan_width(df)
-    if df.rdd.getNumPartitions() >= w:
+    n = df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+    if (n or df.rdd.getNumPartitions()) >= w:
         return df
     return df.repartition(w)

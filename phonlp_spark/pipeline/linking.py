@@ -1,23 +1,33 @@
-"""Entity linking: broadcast alias dictionary + vectorized similarity.
+"""Entity linking: alias dictionary + vectorized similarity.
 
 North-star semantics (BASELINE.json): mention -> canonical entity id
-via a broadcast alias dictionary; dictionary misses fall back to
+via an alias dictionary lookup; dictionary misses fall back to
 vectorized character-3-gram cosine similarity against the alias
-inventory (Arrow-batched pandas UDF — never per-row Python), top-1 by
-window rank; residual misses mint a content-derived entity id (md5 of
-the normalized surface), so ids are stable across partitions, runs and
-cluster sizes.
+inventory (top-1, ties to the smallest entity id); residual misses mint
+a content-derived entity id (md5 of the normalized surface), so ids are
+stable across partitions, runs and cluster sizes.
 
 Scale shape: linking cost is proportional to DISTINCT mention surfaces,
 not total mentions — surfaces are deduplicated before scoring and the
-assignment is joined back onto the mention stream.  Only the alias
-dictionary (small by contract) is ever broadcast-hinted; surface-keyed
-sides are unbounded, so their join algorithm is left to AQE.
+assignment is joined back onto the mention stream.  Placement follows
+the input sizes alone:
+  * alias surfaces within MAX_ALIASES and distinct surfaces (and misses
+    x alias surfaces) within MAX_LOCAL_SURFACES: one bounded Arrow
+    collect of the surfaces, resolved on the driver in numpy; the
+    surface map comes back as an Arrow-built local frame (no Python
+    stage, no surface-keyed shuffle);
+  * alias surfaces within MAX_ALIASES only: the exact map is a
+    broadcast join and misses are scored by a broadcast pandas UDF —
+    the same scorer (_best_ids) the driver runs;
+  * over MAX_ALIASES: an inverted-index gram join, nothing alias-sized
+    on the driver.
 Canonicalization (dict_canonical_names) shares linking's one read of
 the dictionary (_alias_index).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -43,6 +53,20 @@ SIM_THRESHOLD = 0.60
 # connected components, driver RSS 0.9 GB; just over the cap the
 # dropped collect adds ~2 s.  Read at call time.
 MAX_ALIASES = 1_000_000
+# Driver-placement bound (in cap): at most this many distinct surfaces
+# are collected and resolved on the driver, and at most this many
+# (miss, alias surface) cosines are scored there; past it the collect
+# is dropped and the broadcast pandas UDF links in Spark.  Measured at
+# the bound (local[4], 4-core host, warm, median of 5 alternating runs,
+# link_surfaces plus one aggregate): 100,000 surfaces all missing a
+# one-surface dictionary 1.57 s on the driver vs 2.14 s in the UDF
+# placement (at 200,000 they tie: 2.57 vs 2.69 s); 200 misses x 500 alias
+# surfaces 0.36 vs 1.37 s; 100,000 exact hits on a 200,000-surface
+# dictionary 3.53 vs 10.58 s.  Just over the bound the dropped collect
+# costs 0.07-0.13 s.  Read at call time.
+MAX_LOCAL_SURFACES = 100_000
+# query rows x max(alias rows, SIM_DIM) cells per scoring block
+_SCORE_BLOCK = 1 << 22
 
 ALIAS_SCHEMA = T.StructType([
     T.StructField("alias", T.StringType()),
@@ -63,9 +87,7 @@ def build_alias_dict(spark: SparkSession, names: list[str]) -> DataFrame:
     truncation to the first two segments — enough to create alias
     collisions across entities so canonicalization has real work.
     """
-    import hashlib
-
-    rows = []
+    cols: dict[str, list] = {"alias": [], "entity_id": [], "canonical": []}
     for name in names:
         eid = "E" + hashlib.md5(name.encode()).hexdigest()[:12]
         variants = {name, name.replace("_", " ")}
@@ -73,40 +95,42 @@ def build_alias_dict(spark: SparkSession, names: list[str]) -> DataFrame:
         if len(parts) > 2:
             variants.add("_".join(parts[:2]))
         for v in variants:
-            rows.append((v, eid, name))
-    return spark.createDataFrame(rows, ALIAS_SCHEMA)
+            cols["alias"].append(v)
+            cols["entity_id"].append(eid)
+            cols["canonical"].append(name)
+    # an Arrow table becomes a LocalRelation: reading the dictionary
+    # starts no Python worker (a list of rows would be a parallelized RDD)
+    return spark.createDataFrame(
+        pa.table({c: pa.array(v, pa.string()) for c, v in cols.items()}),
+        ALIAS_SCHEMA)
 
 
-def _ngram_matrix(surfs, dim: int) -> np.ndarray:
-    """Hashed char-3gram count matrix [B, dim]: exact integer counts in
-    float32 (not normalized, so dot products of rows are exact integers).
+def _ngram_matrix(surfs, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(counts, norms): the hashed char-3gram count matrix [B, dim] —
+    exact integer counts in float32, not normalized, so dot products of
+    rows are exact integers — and its rows' float64 L2 norms, the same
+    values the distributed path's sqrt(sum(tf*tf)) yields.
 
-    Fully vectorized (rolling polynomial hash over a padded byte
-    matrix + one scatter-add): the per-surface python loop version was
-    the linking stage's hotspot at scale.
+    Fully vectorized over the concatenated '  s  ' byte strings (one
+    polynomial hash per position, grams crossing a surface boundary
+    masked out, one sort to count cells): no per-surface python loop,
+    and the norms come from the non-zero cells only.
     """
     enc = [("  " + (s or "") + "  ").encode("utf-8", "ignore") for s in surfs]
     n = len(enc)
-    if n == 0:
-        return np.zeros((0, dim), dtype=np.float32)
-    lens = np.fromiter((len(b) for b in enc), np.int64, n)
-    width = max(int(lens.max()), 3)
-    buf = np.zeros((n, width), dtype=np.uint32)
-    for i, b in enumerate(enc):
-        buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-    h = (buf[:, :-2] * 961 + buf[:, 1:-1] * 31 + buf[:, 2:]) % dim
-    valid = np.arange(width - 2)[None, :] < (lens - 2)[:, None]
     out = np.zeros((n, dim), dtype=np.float32)
-    rows = np.repeat(np.arange(n), width - 2)
-    flat = valid.ravel()
-    np.add.at(out, (rows[flat], h.ravel()[flat]), 1.0)
-    return out
-
-
-def _norms(counts: np.ndarray) -> np.ndarray:
-    """float64 L2 norms from exact integer sums of squared counts — the
-    same value the distributed path's sqrt(sum(tf*tf)) yields."""
-    return np.sqrt((counts * counts).sum(axis=1, dtype=np.float64))
+    if n == 0:
+        return out, np.zeros(0)
+    lens = np.fromiter(map(len, enc), np.int64, n)
+    buf = np.frombuffer(b"".join(enc), dtype=np.uint8).astype(np.int64)
+    h = (buf[:-2] * 961 + buf[1:-1] * 31 + buf[2:]) % dim
+    row = np.repeat(np.arange(n), lens)[:-2]
+    valid = np.arange(len(h)) + 2 < np.cumsum(lens)[row]
+    cells, counts = np.unique(row[valid] * dim + h[valid], return_counts=True)
+    out.ravel()[cells] = counts
+    sq = np.bincount(cells // dim, weights=counts.astype(np.float64) ** 2,
+                     minlength=n)
+    return out, np.sqrt(sq)
 
 
 def _raw_grams_udf():
@@ -201,10 +225,14 @@ def _candidate_pairs(m_raw: DataFrame, a_raw: DataFrame,
     else, and is candidate-only (scoring never drops grams, so both
     paths stay threshold-consistent on every generated pair).
     """
-    a_df = a_raw.groupBy("_rg").agg(F.count(F.lit(1)).alias("_df"))
+    # every join with an alias-gram table is pinned to a sort-merge
+    # join: AQE sizes a side by its compressed shuffle bytes, and a
+    # broadcast of one of these tables (millions of small int rows)
+    # overran a 3g driver at 100,000 names
+    a_df = a_raw.groupBy("_rg").agg(F.count(F.lit(1)).alias("_df")).hint("merge")
     a_idx = (a_raw.join(a_df.filter(F.col("_df") > max_gram_freq)
                         .select("_rg"), "_rg", "left_anti")
-             .select("_asurf", "_rg"))
+             .select("_asurf", "_rg").hint("merge"))
     # alias-absent grams (_df null) shave no candidate and carry no
     # shared mass — excluded from candidacy, the budget and the debit
     mg = m_raw.join(a_df, "_rg", "inner")
@@ -256,13 +284,16 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
     cand = _candidate_pairs(m_raw, a_raw, max_gram_freq)
 
     num = (cand.join(m_tf, "nsurf")
-           .join(a_tf.withColumnRenamed("_tf", "_atf"), ["_asurf", "_g"])
+           .join(a_tf.withColumnRenamed("_tf", "_atf").hint("merge"),
+                 ["_asurf", "_g"])
            .groupBy("nsurf", "_asurf")
            .agg(F.sum(F.col("_tf") * F.col("_atf")).alias("_dot")))
     scored = (num
               .join(m_norm, "nsurf")
-              .join(a_norm.withColumnRenamed("_norm", "_anorm"), "_asurf")
-              .join(alias_norm.withColumnRenamed("nsurf", "_asurf"), "_asurf")
+              .join(a_norm.withColumnRenamed("_norm", "_anorm").hint("merge"),
+                    "_asurf")
+              .join(alias_norm.withColumnRenamed("nsurf", "_asurf").hint("merge"),
+                    "_asurf")
               .withColumn("_cos", F.col("_dot")
                           / (F.col("_norm") * F.col("_anorm"))))
     w = Window.partitionBy("nsurf").orderBy(
@@ -307,32 +338,104 @@ def _alias_index(alias_dict: DataFrame):
     return surfaces, entries
 
 
+def _alias_matrix(alias_rows: pa.Table):
+    """(count matrix, float64 norms, entity ids) of the index's alias
+    rows, in their id order.  A null alias surface joins nothing, on
+    the distributed route too, so it is no scoring row."""
+    rows = alias_rows.filter(pc.is_valid(alias_rows["nsurf"]))
+    mat, norms = _ngram_matrix(rows["nsurf"].to_pylist(), SIM_DIM)
+    return mat, norms, rows["entity_id"].to_pylist()
+
+
+def _mint(surface: str) -> str:
+    """Stage 3's content-derived id, 'X' + md5(surface)[:12] — the value
+    of the distributed route's Spark expression."""
+    return "X" + hashlib.md5(surface.encode("utf-8")).hexdigest()[:12]
+
+
+def _best_ids(surfs: list, mat: np.ndarray, anorm: np.ndarray, ids: list) -> list:
+    """Stages 2-3 for missed surfaces, the one scorer of both in-cap
+    placements (driver and pandas UDF): cosine top-1 against the alias
+    rows, SIM_THRESHOLD, else the minted id.  The rows are sorted by
+    entity_id, so the first argmax is the smallest id on a tie.  Scores
+    one block of at most _SCORE_BLOCK cells at a time; a null surface
+    stays null."""
+    out: list = []
+    step = max(1, _SCORE_BLOCK // max(len(ids), SIM_DIM))
+    for lo in range(0, len(surfs), step):
+        block = surfs[lo:lo + step]
+        best = np.zeros(len(block), np.int64)
+        hit = np.zeros(len(block), bool)
+        if ids:
+            qs, qnorm = _ngram_matrix(block, SIM_DIM)
+            # integer dots are exact in float32; the division runs in
+            # float64 exactly as the distributed path's, so a tie is
+            # bit-equal whatever rows share the block
+            scores = (qs @ mat.T).astype(np.float64) / np.outer(qnorm, anorm)
+            best = scores.argmax(axis=1)
+            hit = scores[np.arange(len(best)), best] >= SIM_THRESHOLD
+        out += [None if s is None else
+                ids[b] if h and ids[b] is not None else _mint(s)
+                for s, b, h in zip(block, best.tolist(), hit.tolist())]
+    return out
+
+
+def _local_links(surfaces: DataFrame, index) -> pa.Table | None:
+    """In cap, every distinct surface resolved on the driver: ONE
+    bounded Arrow collect, then the exact map of the index and, for the
+    misses, _best_ids.  (nsurf, entity_id), or None when the surfaces
+    or misses x alias rows exceed MAX_LOCAL_SURFACES."""
+    tbl = surfaces.select("nsurf").limit(MAX_LOCAL_SURFACES + 1).toArrow()
+    if tbl.num_rows > MAX_LOCAL_SURFACES:
+        return None
+    alias_rows = index[0]
+    nsurf = tbl["nsurf"].combine_chunks()
+    exact = pc.take(alias_rows["entity_id"].combine_chunks(), pc.index_in(
+        nsurf, value_set=alias_rows["nsurf"].combine_chunks(), skip_nulls=True))
+    miss = pc.and_(pc.is_null(exact), pc.is_valid(nsurf))
+    missed = nsurf.filter(miss).to_pylist()
+    if len(missed) * alias_rows.num_rows > MAX_LOCAL_SURFACES:
+        return None
+    if missed:
+        exact = pc.replace_with_mask(exact, miss, pa.array(
+            _best_ids(missed, *_alias_matrix(alias_rows)), pa.string()))
+    return pa.table({"nsurf": nsurf, "entity_id": exact})
+
+
 def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """(nsurf) distinct normalized surfaces -> (nsurf, entity_id).
 
-    Stage 1: exact join on the normalized surface (broadcast-hinted
-    only when the inventory fits MAX_ALIASES).
+    Stage 1: exact match on the normalized surface, each surface to its
+    smallest entity id.
     Stage 2 (misses only): cosine top-1 against the alias char-3gram
-    inventory, routed by the inventory size alone —
-      * within MAX_ALIASES: the [A, SIM_DIM] count matrix is built from
-        the collected alias index and broadcast; scoring is a dense
-        matmul in a scalar pandas UDF;
-      * over it: an inverted-index gram join (_score_misses_distributed)
-        — the same hashes, the same tf vectors, the same float64 cosine
-        expression and the same threshold, so equal cosines are
-        bit-equal and both routes give the same mapping, ties included;
-        past the bounded probe nothing alias-sized reaches the driver.
+    inventory, routed by the input sizes alone —
+      * within MAX_ALIASES and MAX_LOCAL_SURFACES: on the driver, from
+        one collect of the surfaces (_local_links);
+      * within MAX_ALIASES only: the exact map is a broadcast join and
+        the [A, SIM_DIM] count matrix is broadcast to a scalar pandas
+        UDF; both call the same scorer (_best_ids);
+      * over MAX_ALIASES: an inverted-index gram join
+        (_score_misses_distributed) — the same hashes, the same tf
+        vectors, the same float64 cosine expression and the same
+        threshold, so equal cosines are bit-equal and every route gives
+        the same mapping, ties included; past the bounded probe nothing
+        alias-sized reaches the driver.
     Stage 3: residual -> content-derived new id 'X'+md5(surface)[:12].
 
     Linking cost is proportional to DISTINCT surfaces; callers join the
     result back onto mention/triple streams.
     """
-    return _link_surfaces(surfaces, alias_dict, _alias_index(alias_dict))
+    index = _alias_index(alias_dict)
+    links = None if index is None else _local_links(surfaces, index)
+    if links is None:
+        return _link_in_spark(surfaces, alias_dict, index, None)
+    return surfaces.sparkSession.createDataFrame(links, "nsurf string, entity_id string")
 
 
-def _link_surfaces(surfaces: DataFrame, alias_dict: DataFrame, index,
-                   cache_registry: list | None = None) -> DataFrame:
-    """link_surfaces over _alias_index; registers its broadcast."""
+def _link_in_spark(surfaces: DataFrame, alias_dict: DataFrame, index,
+                   cache_registry: list | None) -> DataFrame:
+    """The Spark placements of link_surfaces: the broadcast pandas UDF
+    within MAX_ALIASES, the gram join over it."""
     spark = surfaces.sparkSession
     if index is None:
         # over the cap the inventory is unbounded: no hint, AQE picks
@@ -341,68 +444,71 @@ def _link_surfaces(surfaces: DataFrame, alias_dict: DataFrame, index,
             alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
             .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id")))
     else:
-        # deterministic tie rule shared with the distributed path: the
-        # index is ordered by entity_id, so first-argmax == smallest id
-        alias_rows = index[0]
         alias_norm = F.broadcast(spark.createDataFrame(
-            alias_rows, "nsurf string, entity_id string"))
+            index[0], "nsurf string, entity_id string"))
     exact = surfaces.join(alias_norm, "nsurf", "left")
     misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
 
     if index is None:
-        scored = _score_misses_distributed(misses, alias_norm)
-    elif alias_rows.num_rows:
-        amat = _ngram_matrix(alias_rows["nsurf"].to_pylist(), SIM_DIM)
-        bc = spark.sparkContext.broadcast(
-            (amat, _norms(amat), alias_rows["entity_id"].to_pylist()))
+        new_id = F.concat(F.lit("X"), F.substring(F.md5(F.col("nsurf")), 1, 12))
+        resolved = _score_misses_distributed(misses, alias_norm).select(
+            "nsurf", F.coalesce(F.col("sim_id"), new_id).alias("miss_entity_id"))
+    else:
+        bc = spark.sparkContext.broadcast(_alias_matrix(index[0]))
         if cache_registry is not None:
             cache_registry.append(bc)
 
-        @F.pandas_udf(T.StructType([
-            T.StructField("sim_id", T.StringType()),
-            T.StructField("sim_score", T.DoubleType()),
-        ]))
-        def best_alias(surfs: pd.Series) -> pd.DataFrame:
+        @F.pandas_udf(T.StringType())
+        def best_alias(surfs: pd.Series) -> pd.Series:
             from phonlp_spark.kernel.runtime import tune_worker_runtime
             tune_worker_runtime()  # allocator fix (see kernel/runtime.py)
-            mat, anorm, ids = bc.value
-            qs = _ngram_matrix(list(surfs), SIM_DIM)
-            # integer dots are exact in float32; the division runs in
-            # float64 exactly as the distributed path's, so a tie is
-            # bit-equal whatever rows share the Arrow batch
-            scores = (qs @ mat.T).astype(np.float64) / np.outer(_norms(qs), anorm)
-            best = scores.argmax(axis=1)
-            return pd.DataFrame({
-                "sim_id": [ids[i] for i in best],
-                "sim_score": scores[np.arange(len(best)), best],
-            })
+            return pd.Series(_best_ids(surfs.tolist(), *bc.value), dtype=object)
 
-        scored = misses.withColumn("s", best_alias(F.col("nsurf"))).select(
-            "nsurf",
-            F.when(F.col("s.sim_score") >= SIM_THRESHOLD,
-                   F.col("s.sim_id")).alias("sim_id"),
-        )
-    else:
-        scored = misses.withColumn("sim_id", F.lit(None).cast("string"))
-
-    new_id = F.concat(F.lit("X"), F.substring(F.md5(F.col("nsurf")), 1, 12))
-    resolved_misses = scored.select(
-        "nsurf", F.coalesce(F.col("sim_id"), new_id).alias("miss_entity_id")
-    )
+        resolved = misses.select(
+            "nsurf", best_alias(F.col("nsurf")).alias("miss_entity_id"))
 
     # no forced broadcast: misses are a subset of DISTINCT surfaces,
     # which is unbounded at corpus scale — AQE broadcasts when small
     return (
-        exact.join(resolved_misses, "nsurf", "left")
+        exact.join(resolved, "nsurf", "left")
         .select("nsurf",
                 F.coalesce("entity_id", "miss_entity_id").alias("entity_id"))
     )
 
 
+def _graph_links(surfaces: DataFrame, alias_dict: DataFrame,
+                 cache_registry: list | None):
+    """The graph step's one read of the dictionary: (surf_map, canon),
+    surf_map = (nsurf, entity_id, canonical_id) for the distinct
+    surfaces and canon = dict_canonical_names(alias_dict).  In both caps
+    surf_map is an Arrow-built frame resolved on the driver (the
+    canonical id from canon's union-find); otherwise the linked surfaces
+    join canon in Spark, cached only for a caller that passes a
+    cache_registry to release it (the map feeds three joins)."""
+    index = _alias_index(alias_dict)
+    canon, ctbl = _canonical_names(alias_dict, index)
+    links = None if index is None else _local_links(surfaces, index)
+    if links is None:
+        surf_map = (_link_in_spark(surfaces, alias_dict, index, cache_registry)
+                    .join(canon.select("entity_id", "cid"), "entity_id", "left")
+                    .select("nsurf", "entity_id",
+                            F.coalesce("cid", "entity_id").alias("canonical_id")))
+        if cache_registry is not None:
+            surf_map = surf_map.cache()
+            cache_registry.append(surf_map)
+        return surf_map, canon
+    eid = links["entity_id"]
+    cid = pc.take(ctbl["cid"].combine_chunks(), pc.index_in(
+        eid, value_set=ctbl["entity_id"].combine_chunks(), skip_nulls=True))
+    return surfaces.sparkSession.createDataFrame(
+        links.append_column("canonical_id", pc.coalesce(cid, eid)),
+        "nsurf string, entity_id string, canonical_id string"), canon
+
+
 def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """mentions (doc_id, sent_id, start, end, type, text) -> + entity_id.
 
-    Thin wrapper: link the DISTINCT normalized surfaces, broadcast the
+    Thin wrapper: link the DISTINCT normalized surfaces, join the
     surface->entity map back onto the mention stream.
     """
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
@@ -434,13 +540,14 @@ def dict_canonical_names(alias_dict: DataFrame) -> DataFrame:
     its same-as component's minimum entity id and minimum canonical
     name.  Any id outside the dictionary (a minted X-id) is its own
     component."""
-    return _canonical_names(alias_dict, _alias_index(alias_dict))
+    return _canonical_names(alias_dict, _alias_index(alias_dict))[0]
 
 
-def _canonical_names(alias_dict: DataFrame, index) -> DataFrame:
-    """dict_canonical_names over _alias_index.  In cap: a driver
-    union-find (each entity to its surface's minimum id), hinted like
-    stage 1's exact map.  Over it: connected components, no hint."""
+def _canonical_names(alias_dict: DataFrame, index):
+    """(dict_canonical_names frame, its Arrow table or None) over
+    _alias_index.  In cap: a driver union-find (each entity to its
+    surface's minimum id), broadcast-hinted.  Over it: connected
+    components, no hint, no table."""
     if index is None:
         comp = cc.connected_components(same_as_edges(alias_dict))
         return (
@@ -449,7 +556,7 @@ def _canonical_names(alias_dict: DataFrame, index) -> DataFrame:
             .withColumn("cid", F.coalesce("component", "entity_id"))
             .select("entity_id", "cid", F.min("canonical").over(
                 Window.partitionBy("cid")).alias("dict_canonical"))
-        )
+        ), None
     ids, canons, hubs = (index[1][c].to_pylist()
                          for c in ("entity_id", "canonical", "hub"))
     # a null surface or id joins nothing (an equi-join never matches
@@ -460,7 +567,9 @@ def _canonical_names(alias_dict: DataFrame, index) -> DataFrame:
     for e, c in zip(ids, canons):
         if c is not None:
             names[cid[e]] = min(names.get(cid[e], c), c)
+    tbl = pa.table({"entity_id": pa.array(list(cid), pa.string()),
+                    "cid": pa.array(list(cid.values()), pa.string()),
+                    "dict_canonical": pa.array([names.get(r) for r in cid.values()],
+                                               pa.string())})
     return F.broadcast(alias_dict.sparkSession.createDataFrame(
-        pa.table({"entity_id": list(cid), "cid": list(cid.values()),
-                  "dict_canonical": [names.get(r) for r in cid.values()]}),
-        "entity_id string, cid string, dict_canonical string"))
+        tbl, "entity_id string, cid string, dict_canonical string")), tbl

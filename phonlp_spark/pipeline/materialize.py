@@ -14,10 +14,13 @@ doubles as snapshot metadata and resume checkpoint — SURVEY.md intro):
 Graph step (``build_graph``; ``run_kg`` shares its body): one read of
 the alias dictionary links the distinct mention surfaces and
 canonicalizes its same-as graph (``dict_canonical_names``): NO
-connected-components pass within MAX_ALIASES, one over it.  That one
-result gives every surface its canonical id (edges, linked mentions)
-and every component its display name (nodes), in memory and, for
-``run_kg``'s global nodes table, from disk.
+connected-components pass within MAX_ALIASES, one over it.  Within
+MAX_ALIASES and MAX_LOCAL_SURFACES the distinct surfaces are collected
+once and resolved on the driver, so the surface map is a local frame
+with no Python stage.  That one result gives every surface its
+canonical id (edges, linked mentions) and every component its display
+name (nodes), in memory and, for ``run_kg``'s global nodes table, from
+disk.
 
 Buckets are `pmod(xxhash64(doc_id), n_buckets)` — content-derived, so
 a resumed run (or a differently-sized cluster) maps every document to
@@ -46,8 +49,7 @@ from phonlp_spark.pipeline.annotate import (
     triples_df,
 )
 from phonlp_spark.pipeline.ingest import split_sentences
-from phonlp_spark.pipeline.linking import (
-    _alias_index, _canonical_names, _link_surfaces, norm_surface)
+from phonlp_spark.pipeline.linking import _graph_links, norm_surface
 
 # per-bucket fields only (the run's wall is in run_kg's stats); reads
 # give this schema, so older manifests' extra wall_ms column is ignored
@@ -112,19 +114,8 @@ def _graph_tables(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame
     dict_canonical_names(alias_dict) so run_kg can build its global
     nodes table from the same single read of the dictionary."""
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
-    index = _alias_index(alias_dict)
-    canon = _canonical_names(alias_dict, index)
-    surf_map = (
-        _link_surfaces(m.select("nsurf").distinct(), alias_dict, index,
-                       cache_registry)
-        .join(canon.select("entity_id", "cid"), "entity_id", "left")
-        .select("nsurf", "entity_id",
-                F.coalesce("cid", "entity_id").alias("canonical_id"))
-        .cache()
-    )
-    if cache_registry is not None:
-        cache_registry.append(surf_map)
-
+    surf_map, canon = _graph_links(m.select("nsurf").distinct(), alias_dict,
+                                   cache_registry)
     linked_canon = m.join(surf_map, "nsurf", "left").drop("nsurf")
 
     edges = (
@@ -151,15 +142,18 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
     Everything expensive happens once at SURFACE grain (distinct
     normalized mention texts): link, then resolve each surface's entity
     to its same-as component (dict_canonical_names: no connected-
-    components pass within MAX_ALIASES, one over it).  The
-    surface->canonical map joins back onto the mention and triple
-    streams with NO forced broadcast: distinct surfaces are unbounded
-    at corpus scale (a forced broadcast of hundreds of millions of rows
-    would OOM), so AQE decides.  ``nodes`` is lazy: no job until
-    consumed.
+    components pass within MAX_ALIASES, one over it).  Within the
+    linking bounds that is one bounded collect of the surfaces,
+    resolved on the driver.  The surface->canonical map joins back onto
+    the mention and triple streams with NO forced broadcast: distinct
+    surfaces are unbounded at corpus scale (a forced broadcast of
+    hundreds of millions of rows would OOM), so AQE decides.  ``nodes``
+    and ``edges`` are lazy.
 
-    Caches and broadcasts created here are appended to cache_registry
-    (if given) so callers can unpersist after their writes complete.
+    Past the linking bounds the surface map is cached only when
+    cache_registry is given; it and the in-cap pandas UDF's broadcast
+    are appended to it so callers can unpersist them after their
+    writes complete.  Without a registry nothing is cached.
     """
     linked_canon, canon, edges = _graph_tables(
         mentions, triples, alias_dict, cache_registry)

@@ -1,6 +1,6 @@
-"""Entity linking: exact broadcast hits, similarity fallback, minted
-ids; same-as edges and the dictionary's canonicalization on both
-routes."""
+"""Entity linking: exact hits, similarity fallback, minted ids on the
+driver, broadcast-UDF and distributed placements; same-as edges and
+the dictionary's canonicalization on both routes."""
 
 from pyspark.sql import functions as F
 
@@ -226,10 +226,13 @@ def test_broadcast_tie_is_independent_of_batch(spark, monkeypatch):  # noqa: F81
         return {r["nsurf"]: r["entity_id"]
                 for r in L.link_surfaces(df, alias).collect()}
 
-    assert link(["order small"])["order small"] == order_id
-    assert link(["order small"] + filler)["order small"] == order_id
-    monkeypatch.setattr(L, "MAX_ALIASES", 0)
-    assert link(["order small"] + filler)["order small"] == order_id
+    # driver placement, then the broadcast pandas UDF, then the gram join
+    for attr, cap in (("MAX_LOCAL_SURFACES", None), ("MAX_LOCAL_SURFACES", 0),
+                      ("MAX_ALIASES", 0)):
+        if cap is not None:
+            monkeypatch.setattr(L, attr, cap)
+        assert link(["order small"])["order small"] == order_id
+        assert link(["order small"] + filler)["order small"] == order_id
 
 
 def test_distributed_zero_candidate_miss_still_mints_id(spark, monkeypatch):  # noqa: F811
@@ -367,3 +370,87 @@ def test_distributed_broadcast_parity_randomized(spark, monkeypatch):  # noqa: F
     ds = {r["nsurf"]: r["entity_id"]
           for r in L.link_surfaces(surfaces, alias).collect()}
     assert ds == bc
+
+
+def test_alias_dict_is_a_local_relation(spark):  # noqa: F811
+    """The dictionary is built from an Arrow table: reading it runs no
+    Python worker, and its rows and schema are those of a row list."""
+    import hashlib
+
+    import phonlp_spark.pipeline.linking as L
+    names = NAMES + ["A_B_C"]
+    alias = L.build_alias_dict(spark, names)
+    assert alias._jdf.queryExecution().optimizedPlan().toString().startswith(
+        "LocalRelation")
+    want = []
+    for n in names:
+        eid = "E" + hashlib.md5(n.encode()).hexdigest()[:12]
+        parts = n.split("_")
+        want += [(v, eid, n) for v in
+                 {n, n.replace("_", " ")} | ({"_".join(parts[:2])} if len(parts) > 2
+                                             else set())]
+    assert sorted(tuple(r) for r in alias.collect()) == sorted(want)
+    assert alias.schema == L.ALIAS_SCHEMA
+    assert L.build_alias_dict(spark, []).count() == 0
+
+
+def test_link_placements_agree_randomized(spark, monkeypatch):  # noqa: F811
+    """Driver, broadcast-UDF and distributed placements give the same
+    surface -> entity map and the same build_graph edges and nodes on a
+    collision-dense dictionary: exact hits, near variants, the 'order
+    small' tie, noise that mints ids, a null and an empty surface, a
+    surface whose only alias rows have a null id, and a null alias."""
+    import numpy as np
+    import phonlp_spark.pipeline.linking as L
+    import phonlp_spark.pipeline.materialize as M
+
+    rng = np.random.default_rng(31)
+    vocab = ["".join(rng.choice(list("abcdefgh"))
+                     for _ in range(int(rng.integers(3, 7))))
+             for _ in range(30)]
+    names = sorted({"_".join(rng.choice(vocab, size=int(rng.integers(2, 4)),
+                                        replace=False)) for _ in range(80)})
+    alias = L.build_alias_dict(spark, names + ["order", "small"]).unionByName(
+        spark.createDataFrame([("mồ côi", None, "y"), (None, "Enoalias", "z")],
+                              L.ALIAS_SCHEMA))
+    surfs = {"order small", "mồ côi", ""}
+    for n in rng.choice(names, size=30, replace=False):
+        s = n.replace("_", " ")
+        i = int(rng.integers(0, len(s)))
+        surfs |= {s, s[:i] + s[i + 1:], s + " " + str(rng.choice(vocab))}
+    surfs |= {f"zz{np.base_repr(int(rng.integers(0, 36**8)), 36).lower()}"
+              for _ in range(8)}
+    texts = sorted(surfs) + [None]
+    surfaces = spark.createDataFrame([(t,) for t in texts], "nsurf string")
+    mentions = spark.createDataFrame(
+        [(f"d{i % 7}", i % 3, i, i + 1, "ORG", t) for i, t in enumerate(texts)],
+        "doc_id string, sent_id int, start int, end int, type string, text string")
+    pairs = rng.integers(0, len(texts) - 1, size=(60, 2))
+    triples = spark.createDataFrame(
+        [(f"d{i % 7}", i % 3, texts[a], "rel", texts[b])
+         for i, (a, b) in enumerate(pairs.tolist())],
+        "doc_id string, sent_id int, subj string, pred string, obj string")
+    edge_cols = ["subj_id", "pred", "obj_id", "doc_id", "sent_id"]
+    node_cols = ["entity_id", "canonical", "type", "mention_count"]
+
+    def run():
+        links = {r["nsurf"]: r["entity_id"]
+                 for r in L.link_surfaces(surfaces, alias).collect()}
+        _l, nodes, edges = M.build_graph(mentions, triples, alias)
+        return links, [
+            sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+            for df, cols in ((edges, edge_cols), (nodes, node_cols))]
+
+    driver = run()
+    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)  # broadcast pandas UDF
+    udf = run()
+    monkeypatch.setattr(L, "MAX_ALIASES", 0)         # distributed gram join
+    assert driver == udf == run()
+    links = driver[0]
+    order_id = alias.filter("alias = 'order'").first()["entity_id"]
+    assert links["order small"] == order_id
+    assert links[None] is None
+    assert links[""].startswith("X") and links["mồ côi"].startswith("X")
+    kinds = {v[0] for v in links.values() if v}
+    assert kinds == {"E", "X"}
+    assert len(driver[1][0]) > 0 and len(driver[1][1]) > 0

@@ -44,9 +44,13 @@ KG_PINS = {
 NOOP_RESUME_MAX_JOBS = 3
 
 # Spark jobs of an in-cap build_graph before its outputs are consumed:
-# the one bounded collect of the alias dictionary (its shuffle stage
-# and the collect), nothing else
-BUILD_GRAPH_MAX_JOBS = 2
+# two bounded collects, of the alias dictionary and of the distinct
+# mention surfaces (a shuffle stage and the collect each), nothing else
+BUILD_GRAPH_MAX_JOBS = 4
+# ... and of that build plus one aggregate over its edges: 7 measured
+# (4 + 3) on the 60-doc input below; the surface-map cache, UDF stage
+# and join-backs it replaced made 13-14 (2 + 11-12)
+BUILD_GRAPH_WITH_EDGES_MAX_JOBS = 7
 
 
 @pytest.fixture()
@@ -311,19 +315,26 @@ def test_build_graph_job_count(spark):  # noqa: F811
     from phonlp_spark.pipeline.annotate import mentions_df, triples_df
 
     ann, alias = _annotated(spark)
+    ann.count()  # count the graph step's jobs, not the kernel's
     try:
         mentions, triples = mentions_df(ann), triples_df(ann)
-        _out, n_jobs = _jobs_in(
+        (_l, _n, edges), n_jobs = _jobs_in(
             spark.sparkContext, f"build-graph-{os.getpid()}",
             lambda: M.build_graph(mentions, triples, alias))
         assert 0 < n_jobs <= BUILD_GRAPH_MAX_JOBS
+        r, n_edge_jobs = _jobs_in(
+            spark.sparkContext, f"build-graph-edges-{os.getpid()}",
+            lambda: edges.agg(F.count(F.lit(1))).first())
+        assert r[0] > 0
+        assert n_jobs + n_edge_jobs <= BUILD_GRAPH_WITH_EDGES_MAX_JOBS
     finally:
         ann.unpersist()
 
 
 def test_run_kg_releases_its_broadcasts(spark, monkeypatch, out_dir):  # noqa: F811
-    """Every broadcast created during run_kg (the in-cap n-gram matrix)
-    is unpersisted by the time it returns."""
+    """Every broadcast created during run_kg is unpersisted by the time
+    it returns.  The driver placement makes none; with its bound at 0
+    the broadcast pandas UDF makes the n-gram matrix one."""
     sc = spark.sparkContext
     real, made, released = sc.broadcast, [], set()
 
@@ -342,8 +353,33 @@ def test_run_kg_releases_its_broadcasts(spark, monkeypatch, out_dir):  # noqa: F
     monkeypatch.setattr(sc, "broadcast", recording)
     docs, alias = _inputs(spark, n=40)
     run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert not made
+    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)
+    run_kg(spark, docs, alias, out_dir + "-udf", n_buckets=4)
+    shutil.rmtree(out_dir + "-udf", ignore_errors=True)
     assert made
     assert all(id(bc) in released for bc in made)
+
+
+def test_build_graph_leaves_nothing_persisted(spark, monkeypatch):  # noqa: F811
+    """build_graph without a cache_registry persists nothing: three
+    builds and an edges count each leave the persisted-RDD count as it
+    was, on the driver placement and on the broadcast pandas UDF."""
+    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
+
+    ann, alias = _annotated(spark, n=30)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs
+    ann.count()
+    try:
+        for cap in (L.MAX_LOCAL_SURFACES, 0):
+            monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", cap)
+            before = persisted().size()
+            for _ in range(3):
+                _l, _n, edges = M.build_graph(mentions_df(ann), triples_df(ann), alias)
+                assert edges.count() > 0
+            assert persisted().size() == before
+    finally:
+        ann.unpersist()
 
 
 def test_over_cap_graph_forces_no_broadcast(spark, monkeypatch):  # noqa: F811

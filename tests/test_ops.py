@@ -1,6 +1,8 @@
 """Training-data ops: dedup, similarity, text stats, scoring — small
 deterministic inputs with hand-computable expectations."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -762,3 +764,21 @@ def test_fan_out_is_noop_on_wide_input(spark):  # noqa: F811
     out = fan_out(narrow)
     assert out.rdd.getNumPartitions() == w        # fanned to width
     assert sorted(r["id"] for r in out.collect()) == list(range(1000))
+
+
+def test_fan_out_probe_runs_no_job(spark):  # noqa: F811
+    """The width probe reads the plan: fanning out a frame whose plan
+    holds an exchange does not run that exchange's stage."""
+    from phonlp_spark.ops.fanout import fan_out, fan_width
+    sc = spark.sparkContext
+    df = spark.range(1000).repartition(3).selectExpr("id * 2 AS x")
+    group = f"fan-out-probe-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fan_out(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert out.rdd.getNumPartitions() == fan_width(df)
+    wide = df.repartition(fan_width(df))
+    assert fan_out(wide) is wide
