@@ -170,6 +170,9 @@ def align_tokens(gold: DataFrame, system: DataFrame) -> DataFrame:
             F.col("is_multiword").cast("boolean").alias("is_multiword"))
 
     def align(key, gpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
+        from phonlp_spark.kernel.runtime import drop_zip_importers
+        drop_zip_importers()  # cheap task setup (see kernel/runtime.py)
+
         def rows(pdf):
             pdf = pdf.sort_values("token_id")
             return list(zip(pdf["token_id"], pdf["word"], pdf["span_start"],

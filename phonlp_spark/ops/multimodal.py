@@ -74,7 +74,7 @@ def extract_media_features(media_with_payload: DataFrame) -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
-        from phonlp_spark.kernel.runtime import tune_worker_runtime
+        from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
         tune_worker_runtime()
         for pdf in it:
             feats, sizes, sums = [], [], []
@@ -93,6 +93,7 @@ def extract_media_features(media_with_payload: DataFrame) -> DataFrame:
                 "checksum": sums,
                 "features": feats,
             })
+        drop_zip_importers()
 
     return media_with_payload.mapInPandas(batches, schema=MEDIA_META_SCHEMA)
 
@@ -131,7 +132,7 @@ def resize_media(media_with_payload: DataFrame, width: int = 64,
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from phonlp_spark.kernel.runtime import tune_worker_runtime
+        from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
         tune_worker_runtime()
         for pdf in it:
             sums = []
@@ -147,6 +148,7 @@ def resize_media(media_with_payload: DataFrame, width: int = 64,
                 "height": [height] * len(pdf),
                 "thumb_checksum": sums,
             })
+        drop_zip_importers()
 
     return media_with_payload.mapInPandas(batches, schema=RESIZE_SCHEMA)
 
@@ -161,7 +163,7 @@ def sample_frames(media_with_payload: DataFrame, every_n: int = 1) -> DataFrame:
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from phonlp_spark.kernel.runtime import tune_worker_runtime
+        from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
         tune_worker_runtime()
         for pdf in it:
             docs, refs, idxs, sums = [], [], [], []
@@ -178,6 +180,7 @@ def sample_frames(media_with_payload: DataFrame, every_n: int = 1) -> DataFrame:
                     sums.append(_h60(data + f":f{k}".encode()))
             yield pd.DataFrame({"doc_id": docs, "media_ref": refs,
                                 "frame_idx": idxs, "frame_checksum": sums})
+        drop_zip_importers()
 
     return media_with_payload.mapInPandas(batches, schema=FRAME_SCHEMA)
 

@@ -166,6 +166,9 @@ def nfd_normalize(docs: DataFrame) -> DataFrame:
 
     def _nfd(s: pd.Series) -> pd.Series:
         import unicodedata
+
+        from phonlp_spark.kernel.runtime import drop_zip_importers
+        drop_zip_importers()
         return s.map(lambda x: unicodedata.normalize("NFD", x)
                      if x is not None else None)
 

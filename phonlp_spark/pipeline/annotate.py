@@ -112,6 +112,8 @@ def _make_annotate_fn(columns: tuple[str, ...], kernel_factory=None):
     factory_key = None if kernel_factory is None else _factory_key(kernel_factory)
 
     def annotate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from phonlp_spark.kernel.runtime import drop_zip_importers
+
         # one kernel (weights + memoized encoder) per python worker
         kernel = _worker_kernel(factory_key, kernel_factory)
         for pdf in batches:
@@ -134,6 +136,9 @@ def _make_annotate_fn(columns: tuple[str, ...], kernel_factory=None):
                 else:
                     data[c] = [a[c] for a in anns]
             yield pd.DataFrame(data)
+        # the worker's next task then re-reads no zip directory
+        # (see kernel/runtime.py)
+        drop_zip_importers()
 
     return annotate_batches
 

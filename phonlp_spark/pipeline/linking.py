@@ -143,8 +143,9 @@ def _raw_grams_udf():
     in the identical tf space."""
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def raw_grams(surfs: pd.Series) -> pd.Series:
-        from phonlp_spark.kernel.runtime import tune_worker_runtime
+        from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
         tune_worker_runtime()
+        drop_zip_importers()
         out = []
         for s0 in surfs:
             b = ("  " + (s0 or "") + "  ").encode("utf-8", "ignore")
@@ -460,8 +461,11 @@ def _link_in_spark(surfaces: DataFrame, alias_dict: DataFrame, index,
 
         @F.pandas_udf(T.StringType())
         def best_alias(surfs: pd.Series) -> pd.Series:
-            from phonlp_spark.kernel.runtime import tune_worker_runtime
-            tune_worker_runtime()  # allocator fix (see kernel/runtime.py)
+            from phonlp_spark.kernel.runtime import (
+                drop_zip_importers, tune_worker_runtime)
+            # allocator fix and cheap task setup (see kernel/runtime.py)
+            tune_worker_runtime()
+            drop_zip_importers()
             return pd.Series(_best_ids(surfs.tolist(), *bc.value), dtype=object)
 
         resolved = misses.select(

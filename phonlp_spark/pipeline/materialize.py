@@ -239,7 +239,6 @@ def run_kg(
         return df.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 
-    ann = with_bucket(annotations_long(annotated))
     # cache the narrow mention/triple streams: the linking + graph
     # plans reference them repeatedly and would otherwise re-explode
     # the annotation arrays once per consumer
@@ -250,14 +249,15 @@ def run_kg(
     linked_canon, canon, edges = _graph_tables(
         mentions, triples, alias_dict, caches)
 
-    # writes (bucket-partitioned; dynamic overwrite = idempotent re-run)
-    ann.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/annotations")
-    with_bucket(linked_canon).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/mentions")
-    with_bucket(triples).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/triples")
-    with_bucket(edges).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/edges")
+    # writes (bucket-partitioned; dynamic overwrite = idempotent re-run).
+    # Rebalancing on the bucket gives each bucket directory one file per
+    # AQE partition, not one per upstream task: AQE coalesces small
+    # buckets and splits skewed ones.
+    for name, df in (("annotations", annotations_long(annotated)),
+                     ("mentions", linked_canon), ("triples", triples),
+                     ("edges", edges)):
+        with_bucket(df).hint("rebalance", "bucket").write.mode("overwrite") \
+            .partitionBy("bucket").parquet(f"{out_dir}/{name}")
     # nodes is GLOBAL and non-partitioned: on a resumed run the
     # in-memory linked_canon covers only recomputed buckets, so rebuild
     # it from the full on-disk mentions table (all buckets) after the

@@ -54,10 +54,13 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        # keep python workers alive across jobs: respawning re-pays the
-        # host's lazy-memory warmup (~200MB of first-touch per worker)
+        # keep python workers alive across tasks and jobs: respawning
+        # re-pays the host's lazy-memory warmup (~200MB of first-touch
+        # per worker), and a reused worker keeps its imports and the
+        # importer cache drop_zip_importers trimmed (kernel/runtime.py),
+        # which keeps its next task's setup cheap.  Spark reaps idle
+        # pooled workers after a fixed 60 s.
         .config("spark.python.worker.reuse", "true")
-        .config("spark.python.worker.idleTimeoutSeconds", "0")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # input split sizing: the sandbox fixtures' only multi-row-group
         # files (lineitem 6 RGs / orders 2 RGs at sf1.0, ~130/26 MB) are

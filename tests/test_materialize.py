@@ -110,6 +110,20 @@ def test_full_run_writes_graph_and_manifest(spark, out_dir):  # noqa: F811
     assert mf.filter("docs <= 0").count() == 0
 
 
+def test_bucket_writes_one_file_per_bucket(spark, out_dir):  # noqa: F811
+    """The bucket-partitioned writes rebalance on the bucket: on a small
+    input each bucket directory holds one file, not one per task."""
+    docs, alias = _inputs(spark)
+    run_kg(spark, docs, alias, out_dir, n_buckets=8)
+    for table in ("annotations", "mentions", "triples", "edges"):
+        buckets = [d for d in os.listdir(f"{out_dir}/{table}") if d.startswith("bucket=")]
+        assert len(buckets) > 1, table
+        for d in buckets:
+            files = [f for f in os.listdir(f"{out_dir}/{table}/{d}")
+                     if f.endswith(".parquet")]
+            assert len(files) == 1, (table, d, files)
+
+
 def test_second_run_is_noop(spark, out_dir):  # noqa: F811
     docs, alias = _inputs(spark)
     run_kg(spark, docs, alias, out_dir, n_buckets=8)
