@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SENT_TOKENS = 12  # keep in sync with phonlp_spark.pipeline.ingest
+from phonlp_spark.pipeline.ingest import SENT_TOKENS
 N_ALIAS_NAMES = 40
 
 
@@ -96,9 +96,9 @@ def _alias_names(spark: SparkSession, sf_dir: str) -> list[str]:
     return [r["text"].replace(" ", "_") for r in rows]
 
 
-# caches and broadcasts made for the last _kg_graph call (build_graph's,
-# plus any a query adds on top of its tables): the next call releases
-# them, so a session holds one graph's worth however many kg queries run
+# caches made for the last _kg_graph call (build_graph's, plus any a
+# query adds on top of its tables): the next call releases them, so a
+# session holds one graph's worth however many kg queries run
 _KG_CACHES: list = []
 
 

@@ -11,16 +11,13 @@ Scale shape: linking cost is proportional to DISTINCT mention surfaces,
 not total mentions — surfaces are deduplicated before scoring and the
 assignment is joined back onto the mention stream.  Placement follows
 the input sizes alone:
-  * alias surfaces within MAX_ALIASES and distinct surfaces (and misses
-    x alias surfaces) within MAX_LOCAL_SURFACES: one bounded Arrow
-    collect of the surfaces, resolved on the driver in numpy; the
-    surface map comes back as an Arrow-built local frame (no Python
-    stage, no surface-keyed shuffle);
-  * alias surfaces within MAX_ALIASES only: the exact map is a
-    broadcast join and misses are scored by a broadcast pandas UDF —
-    the same scorer (_best_ids) the driver runs;
-  * over MAX_ALIASES: an inverted-index gram join, nothing alias-sized
-    on the driver.
+  * alias surfaces within MAX_ALIASES: one resolver (_Resolver: exact
+    map, _best_ids, canonical id) over the collected alias rows runs
+    on the driver from one bounded collect of the surfaces (within
+    MAX_LOCAL_SURFACES; an Arrow-built local frame, no Python stage)
+    or in one mapInArrow stage over them (past it; no join);
+  * over MAX_ALIASES: an exact-map join and an inverted-index gram
+    join, nothing alias-sized on the driver.
 Canonicalization (dict_canonical_names) shares linking's one read of
 the dictionary (_alias_index).
 """
@@ -42,28 +39,26 @@ from phonlp_spark.pipeline import cc
 
 SIM_DIM = 2048       # hashed char-3gram space
 SIM_THRESHOLD = 0.60
-# Broadcast-path sizing: the alias inventory is collect()ed to the
-# driver and its [A, SIM_DIM] float32 n-gram matrix is broadcast to
-# every executor (~8 KB/alias); 1M aliases ≈ 8 GB broadcast — the cap.
-# Inventories past the cap do NOT fail: linking stage 2 and
-# canonicalization go distributed; the one Arrow collect that decides
-# it (_alias_index) still brings MAX_ALIASES + 1 surfaces' entity lists
-# to the driver there.  Measured at 990,045 surfaces (2.38M rows,
-# local[4], 4-core host): in-cap dict_canonical_names 27 s vs 36 s for
-# connected components, driver RSS 0.9 GB; just over the cap the
-# dropped collect adds ~2 s.  Read at call time.
+# Alias-inventory cap.  It bounds the one Arrow collect of the alias
+# index (_alias_index brings MAX_ALIASES + 1 surfaces' entity lists to
+# the driver to decide) and the dense [A, SIM_DIM] float32 n-gram
+# matrix (~8 KB/alias: 8 GB at the cap) a resolver builds on its first
+# miss, on the driver or in one executor task.  Past the cap linking
+# and canonicalization go distributed.  Measured at 990,045 surfaces
+# (2.38M rows, local[4], 4-core host): in-cap dict_canonical_names 27 s
+# vs 36 s for connected components, driver RSS 0.9 GB; just over the
+# cap the dropped collect adds ~2 s.  Read at call time.
 MAX_ALIASES = 1_000_000
 # Driver-placement bound (in cap): at most this many distinct surfaces
 # are collected and resolved on the driver, and at most this many
-# (miss, alias surface) cosines are scored there; past it the collect
-# is dropped and the broadcast pandas UDF links in Spark.  Measured at
-# the bound (local[4], 4-core host, warm, median of 5 alternating runs,
-# link_surfaces plus one aggregate): 100,000 surfaces all missing a
-# one-surface dictionary 1.57 s on the driver vs 2.14 s in the UDF
-# placement (at 200,000 they tie: 2.57 vs 2.69 s); 200 misses x 500 alias
-# surfaces 0.36 vs 1.37 s; 100,000 exact hits on a 200,000-surface
-# dictionary 3.53 vs 10.58 s.  Just over the bound the dropped collect
-# costs 0.07-0.13 s.  Read at call time.
+# (miss, alias surface) cosines scored there; past it the resolver runs
+# in executor tasks.  tools/link_bound.py (local[4], 4-core host, warm,
+# median of 5 alternating runs), driver vs executor: 200 misses x 500
+# alias surfaces 0.28 vs 0.53 s; 100,000 surfaces all missing a
+# one-surface dictionary 1.36 vs 0.91 s (200,000: 2.33 vs 1.09 s);
+# 100,000 exact hits on a 200,000-surface dictionary 4.24 vs 4.24 s;
+# 120,000 surfaces, 12,000 missing it: executor 90-95 s (2 runs; no
+# driver run, the cell count overflows).  Read at call time.
 MAX_LOCAL_SURFACES = 100_000
 # query rows x max(alias rows, SIM_DIM) cells per scoring block
 _SCORE_BLOCK = 1 << 22
@@ -138,9 +133,9 @@ def _raw_grams_udf():
     24-bit byte codes (b0<<16 | b1<<8 | b2) over the same '  s  '
     padding _ngram_matrix uses.  Raw codes key CANDIDATE generation on
     a ~2^24 domain (a gram only matches surfaces that actually contain
-    it); the 2048-bucket hash the broadcast matrix scatter-adds is
-    derived from the code relationally (_hash_of_raw), so SCORING stays
-    in the identical tf space."""
+    it); the resolver's 2048-bucket hash is derived from the code
+    relationally (_hash_of_raw), so SCORING stays in the identical tf
+    space."""
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def raw_grams(surfs: pd.Series) -> pd.Series:
         from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
@@ -157,7 +152,7 @@ def _raw_grams_udf():
 
 
 def _hash_of_raw(rg):
-    """The broadcast path's hashed bucket, derived JVM-side from a raw
+    """The resolver's hashed bucket, derived JVM-side from a raw
     code: (b0*961 + b1*31 + b2) % SIM_DIM — bit-identical to
     _ngram_matrix's polynomial over the same bytes."""
     b0, b1, b2 = (F.shiftright(rg, 16).bitwiseAND(F.lit(255)),
@@ -169,7 +164,7 @@ def _hash_of_raw(rg):
 def _sparse_grams(df: DataFrame, key: str):
     """Per-surface gram tables for a one-column DataFrame of distinct
     surfaces: (key, _rg, _c) RAW-gram counts, (key, _g, _tf)
-    hashed-gram term frequencies (the broadcast matrix's tf vector),
+    hashed-gram term frequencies (the resolver matrix's tf vector),
     and (key, _norm) hashed-space L2 norms.  One UDF pass; everything
     downstream of the explode is JVM-side; all three shuffle on `key`
     once."""
@@ -188,11 +183,9 @@ def _candidate_pairs(m_raw: DataFrame, a_raw: DataFrame,
                      max_gram_freq: int = 100_000,
                      threshold: float = SIM_THRESHOLD) -> DataFrame:
     """(nsurf, _asurf) candidate pairs via a raw-gram inverted index
-    with an L2-mass prefix filter — the set-similarity-join layout
-    (VERDICT r5 #2): selectivity comes from the ~2^24 raw domain
-    (the 2048-bucket hash made every bucket's posting list ~A/2048
-    aliases, so candidates approached M*A cross-product scale exactly
-    in the >cap regime this path exists for).
+    with an L2-mass prefix filter — the set-similarity-join layout:
+    selectivity comes from the ~2^24 raw domain (a 2048-bucket posting
+    list would hold ~A/2048 aliases).
 
     Prefix filter (miss side, the standard lossless cosine bound):
     order each miss's grams most-common-first by alias-side document
@@ -204,27 +197,21 @@ def _candidate_pairs(m_raw: DataFrame, a_raw: DataFrame,
     lossless.  Up to (1 - t^2) = 64% of a surface's gram mass prunes
     away, so universal affixes ('công ty ', ' việt nam') drop out of
     candidate generation per surface without any global stop list.
-    (The bound is exact for the raw-gram cosine; the 2048-bucket
-    hashed cosine the scorer computes can exceed it only via
-    cross-gram hash collisions — reaching 0.6 from 1/2048-probability
-    collisions needs several simultaneous hits within one pair, and
-    the broadcast path would need the same accident to link; the
-    randomized distributed-vs-broadcast parity test pins the
+    (The bound is exact for the raw-gram cosine; the hashed cosine
+    the scorer computes can exceed it only via several 1/2048
+    cross-gram hash collisions within one pair, which the resolver
+    would need too; the randomized placement parity tests pin the
     equivalence empirically.)
 
     Grams carried by more than ``max_gram_freq`` aliases are dropped
     from the index unconditionally (hot-gram safety valve); their
     squared mass DEBITS the prefix budget, so the lossless bound
-    covers the union of both drop sets: total dropped mass stays
-    < t^2 ||x||^2 whenever the hot mass alone does.  A surface whose
-    hot grams already exceed the budget (a universal affix dominating
-    a short surface) gets NO further pruning — every remaining
-    alias-shared gram is kept so recall degrades only through the
-    valve itself, never through valve + budget compounding; the valve
-    loss needs >max_gram_freq-alias grams to carry over t^2 = 36% of
-    the surface's squared gram mass AND the pair to share nothing
-    else, and is candidate-only (scoring never drops grams, so both
-    paths stay threshold-consistent on every generated pair).
+    covers both drop sets.  A surface whose hot grams already exceed
+    the budget gets NO further pruning, so recall degrades only
+    through the valve itself: a pair is lost only when
+    >max_gram_freq-alias grams carry over t^2 = 36% of the surface's
+    squared gram mass AND it shares nothing else.  Scoring never
+    drops grams, so every generated pair is scored exactly.
     """
     # every join with an alias-gram table is pinned to a sort-merge
     # join: AQE sizes a side by its compressed shuffle bytes, and a
@@ -260,24 +247,20 @@ def _candidate_pairs(m_raw: DataFrame, a_raw: DataFrame,
 def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
                               max_gram_freq: int = 100_000) -> DataFrame:
     """Stage 2 without the driver: (nsurf) misses -> (nsurf, sim_id)
-    for alias dictionaries too large to collect+broadcast.  Two-phase
+    for alias dictionaries too large to collect.  Two-phase
     set-similarity join:
 
     1. CANDIDATES (_candidate_pairs): raw 24-bit gram inverted index +
        L2-mass prefix filter — candidate rows scale with true gram
-       overlap, never with |misses| x |aliases| / 2048 (the r5 plan's
-       failure at its own design point).
+       overlap, never with |misses| x |aliases| / 2048.
     2. SCORING: on surviving pairs only, the exact 2048-dim hashed-tf
-       cosine — the same hashes, tf vectors and FULL norms the
-       broadcast matrix path computes (no gram is ever dropped from a
-       dot product or a norm).  Dots and squared norms are exact integer
-       sums and both paths divide them in float64 as dot / (|q|·|a|),
-       so equal cosines are bit-equal and the two paths agree on every
-       scored pair, ties included.
+       cosine — the same hashes, tf vectors and FULL norms as the
+       resolver's matrix.  Dots and squared norms are exact integer
+       sums divided in float64 as dot / (|q|·|a|) on both routes, so
+       equal cosines are bit-equal, ties included.
 
-    Tie rule: equal cosines resolve to the smallest entity_id — the
-    same rule the broadcast path applies (alias matrix sorted by
-    entity_id, first argmax).
+    Tie rule: equal cosines resolve to the smallest entity_id, as in
+    the resolver (alias rows sorted by entity_id, first argmax).
     """
     a_raw, a_tf, a_norm = _sparse_grams(
         alias_norm.select(F.col("nsurf").alias("_asurf")), "_asurf")
@@ -307,7 +290,7 @@ def _score_misses_distributed(misses: DataFrame, alias_norm: DataFrame,
     # a miss with zero candidate pairs (no alias-shared gram, or only
     # hot-dropped grams) has no rows in top1 — re-attach it with a
     # NULL sim_id so the caller mints a new id, exactly as the
-    # broadcast path does for below-threshold misses
+    # resolver does for below-threshold misses
     return misses.join(top1, "nsurf", "left").select("nsurf", "sim_id")
 
 
@@ -355,12 +338,11 @@ def _mint(surface: str) -> str:
 
 
 def _best_ids(surfs: list, mat: np.ndarray, anorm: np.ndarray, ids: list) -> list:
-    """Stages 2-3 for missed surfaces, the one scorer of both in-cap
-    placements (driver and pandas UDF): cosine top-1 against the alias
-    rows, SIM_THRESHOLD, else the minted id.  The rows are sorted by
-    entity_id, so the first argmax is the smallest id on a tie.  Scores
-    one block of at most _SCORE_BLOCK cells at a time; a null surface
-    stays null."""
+    """Stages 2-3 for missed surfaces, the resolver's scorer: cosine
+    top-1 against the alias rows, SIM_THRESHOLD, else the minted id.
+    The rows are sorted by entity_id, so the first argmax is the
+    smallest id on a tie.  Scores one block of at most _SCORE_BLOCK
+    cells at a time; a null surface stays null."""
     out: list = []
     step = max(1, _SCORE_BLOCK // max(len(ids), SIM_DIM))
     for lo in range(0, len(surfs), step):
@@ -381,96 +363,114 @@ def _best_ids(surfs: list, mat: np.ndarray, anorm: np.ndarray, ids: list) -> lis
     return out
 
 
-def _local_links(surfaces: DataFrame, index) -> pa.Table | None:
-    """In cap, every distinct surface resolved on the driver: ONE
-    bounded Arrow collect, then the exact map of the index and, for the
-    misses, _best_ids.  (nsurf, entity_id), or None when the surfaces
-    or misses x alias rows exceed MAX_LOCAL_SURFACES."""
+class _Resolver:
+    """The one in-cap surface resolver, run on the driver and in
+    executor tasks: nsurf array -> (nsurf, entity_id[, canonical_id]).
+    The exact map of the alias rows (nulls never match), _best_ids for
+    the misses, then the canonical id from the union-find table, if
+    given; None when misses x alias rows exceed max_cells.  Each lookup
+    is hashed on first use and the n-gram matrix built on the first
+    miss, at most once per resolver."""
+
+    def __init__(self, alias_rows: pa.Table, canon: pa.Table | None = None):
+        self.alias_rows, self.canon = alias_rows, canon
+        self._exact = self._cid = self._matrix = None
+
+    def __call__(self, nsurf: pa.Array, max_cells: int | None = None) -> pa.Table | None:
+        self._exact = self._exact or _lookup(self.alias_rows, "nsurf", "entity_id")
+        eid = self._exact(nsurf)
+        miss = pc.and_(pc.is_null(eid), pc.is_valid(nsurf))
+        missed = nsurf.filter(miss).to_pylist()
+        if max_cells is not None and len(missed) * self.alias_rows.num_rows > max_cells:
+            return None
+        if missed:
+            self._matrix = self._matrix or _alias_matrix(self.alias_rows)
+            eid = pc.replace_with_mask(eid, miss, pa.array(
+                _best_ids(missed, *self._matrix), pa.string()))
+        out = pa.table({"nsurf": nsurf, "entity_id": eid})
+        if self.canon is None:
+            return out
+        self._cid = self._cid or _lookup(self.canon, "entity_id", "cid")
+        return out.append_column("canonical_id", pc.coalesce(self._cid(eid), eid))
+
+
+def _lookup(tbl: pa.Table, key: str, value: str):
+    """keys -> tbl's values at those distinct keys (null where null or
+    absent), hashed once (pd.Index), not per call as by pc.index_in."""
+    tbl = tbl.filter(pc.is_valid(tbl[key]))
+    index = pd.Index(tbl[key].combine_chunks().to_numpy(zero_copy_only=False))
+    values = tbl[value].combine_chunks()
+
+    def get(keys: pa.Array) -> pa.Array:
+        pos = index.get_indexer(keys.to_numpy(zero_copy_only=False))
+        return values.take(pa.array(pos, mask=pos < 0))
+    return get
+
+
+def _local_links(surfaces: DataFrame, resolve: _Resolver) -> pa.Table | None:
+    """The driver placement: ONE bounded Arrow collect of the distinct
+    surfaces and one resolver call, or None when the surfaces or misses
+    x alias rows exceed MAX_LOCAL_SURFACES."""
     tbl = surfaces.select("nsurf").limit(MAX_LOCAL_SURFACES + 1).toArrow()
     if tbl.num_rows > MAX_LOCAL_SURFACES:
         return None
-    alias_rows = index[0]
-    nsurf = tbl["nsurf"].combine_chunks()
-    exact = pc.take(alias_rows["entity_id"].combine_chunks(), pc.index_in(
-        nsurf, value_set=alias_rows["nsurf"].combine_chunks(), skip_nulls=True))
-    miss = pc.and_(pc.is_null(exact), pc.is_valid(nsurf))
-    missed = nsurf.filter(miss).to_pylist()
-    if len(missed) * alias_rows.num_rows > MAX_LOCAL_SURFACES:
-        return None
-    if missed:
-        exact = pc.replace_with_mask(exact, miss, pa.array(
-            _best_ids(missed, *_alias_matrix(alias_rows)), pa.string()))
-    return pa.table({"nsurf": nsurf, "entity_id": exact})
+    return resolve(tbl["nsurf"].combine_chunks(), MAX_LOCAL_SURFACES)
+
+
+def _in_cap_links(surfaces: DataFrame, alias_rows: pa.Table,
+                  canon: pa.Table | None = None) -> tuple[DataFrame, bool]:
+    """(surface map, resolved on the driver?) from one _Resolver over
+    the alias index: on the driver (_local_links), else one mapInArrow
+    stage over the surfaces with one resolver per task.  That stage
+    ships the alias rows, not a matrix."""
+    schema = "nsurf string, entity_id string" + (
+        "" if canon is None else ", canonical_id string")
+    links = _local_links(surfaces, _Resolver(alias_rows, canon))
+    if links is not None:
+        return surfaces.sparkSession.createDataFrame(links, schema), True
+
+    def resolve_batches(batches):
+        from phonlp_spark.kernel.runtime import drop_zip_importers, tune_worker_runtime
+        tune_worker_runtime()  # allocator fix (see kernel/runtime.py)
+        resolve = _Resolver(alias_rows, canon)
+        for batch in batches:
+            yield from resolve(batch.column("nsurf")).to_batches()
+        drop_zip_importers()  # the worker's next task re-reads no zip
+    return surfaces.select("nsurf").mapInArrow(resolve_batches, schema), False
 
 
 def link_surfaces(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """(nsurf) distinct normalized surfaces -> (nsurf, entity_id).
+    """(nsurf) distinct normalized surfaces -> (nsurf, entity_id):
+    stage 1, exact match on the normalized surface (each surface to its
+    smallest entity id); stage 2, for misses, cosine top-1 against the
+    alias char-3gram inventory; stage 3, residual -> content-derived
+    new id 'X'+md5(surface)[:12].
 
-    Stage 1: exact match on the normalized surface, each surface to its
-    smallest entity id.
-    Stage 2 (misses only): cosine top-1 against the alias char-3gram
-    inventory, routed by the input sizes alone —
-      * within MAX_ALIASES and MAX_LOCAL_SURFACES: on the driver, from
-        one collect of the surfaces (_local_links);
-      * within MAX_ALIASES only: the exact map is a broadcast join and
-        the [A, SIM_DIM] count matrix is broadcast to a scalar pandas
-        UDF; both call the same scorer (_best_ids);
-      * over MAX_ALIASES: an inverted-index gram join
-        (_score_misses_distributed) — the same hashes, the same tf
-        vectors, the same float64 cosine expression and the same
-        threshold, so equal cosines are bit-equal and every route gives
-        the same mapping, ties included; past the bounded probe nothing
-        alias-sized reaches the driver.
-    Stage 3: residual -> content-derived new id 'X'+md5(surface)[:12].
-
-    Linking cost is proportional to DISTINCT surfaces; callers join the
-    result back onto mention/triple streams.
+    Within MAX_ALIASES one _Resolver runs all three, on the driver
+    (within MAX_LOCAL_SURFACES) or mapped over the surfaces (past it).
+    Over it stage 1 is a join and stage 2 an inverted-index gram join
+    (_score_misses_distributed) with the same hashes, tf vectors,
+    float64 cosine and threshold: equal cosines are bit-equal, so every
+    placement gives the same mapping, ties included.
     """
     index = _alias_index(alias_dict)
-    links = None if index is None else _local_links(surfaces, index)
-    if links is None:
-        return _link_in_spark(surfaces, alias_dict, index, None)
-    return surfaces.sparkSession.createDataFrame(links, "nsurf string, entity_id string")
-
-
-def _link_in_spark(surfaces: DataFrame, alias_dict: DataFrame, index,
-                   cache_registry: list | None) -> DataFrame:
-    """The Spark placements of link_surfaces: the broadcast pandas UDF
-    within MAX_ALIASES, the gram join over it."""
-    spark = surfaces.sparkSession
     if index is None:
-        # over the cap the inventory is unbounded: no hint, AQE picks
-        # the stage-1 join algorithm from runtime sizes
-        alias_norm = (
-            alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
-            .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id")))
-    else:
-        alias_norm = F.broadcast(spark.createDataFrame(
-            index[0], "nsurf string, entity_id string"))
+        return _link_in_spark(surfaces, alias_dict)
+    return _in_cap_links(surfaces, index[0])[0]
+
+
+def _link_in_spark(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """link_surfaces over MAX_ALIASES: the exact map is a join (no
+    hint: the inventory is unbounded, AQE picks the algorithm) and
+    misses go to the gram join."""
+    alias_norm = (
+        alias_dict.select(norm_surface(F.col("alias")).alias("nsurf"), "entity_id")
+        .groupBy("nsurf").agg(F.min("entity_id").alias("entity_id")))
     exact = surfaces.join(alias_norm, "nsurf", "left")
     misses = exact.filter(F.col("entity_id").isNull()).select("nsurf")
-
-    if index is None:
-        new_id = F.concat(F.lit("X"), F.substring(F.md5(F.col("nsurf")), 1, 12))
-        resolved = _score_misses_distributed(misses, alias_norm).select(
-            "nsurf", F.coalesce(F.col("sim_id"), new_id).alias("miss_entity_id"))
-    else:
-        bc = spark.sparkContext.broadcast(_alias_matrix(index[0]))
-        if cache_registry is not None:
-            cache_registry.append(bc)
-
-        @F.pandas_udf(T.StringType())
-        def best_alias(surfs: pd.Series) -> pd.Series:
-            from phonlp_spark.kernel.runtime import (
-                drop_zip_importers, tune_worker_runtime)
-            # allocator fix and cheap task setup (see kernel/runtime.py)
-            tune_worker_runtime()
-            drop_zip_importers()
-            return pd.Series(_best_ids(surfs.tolist(), *bc.value), dtype=object)
-
-        resolved = misses.select(
-            "nsurf", best_alias(F.col("nsurf")).alias("miss_entity_id"))
-
+    new_id = F.concat(F.lit("X"), F.substring(F.md5(F.col("nsurf")), 1, 12))
+    resolved = _score_misses_distributed(misses, alias_norm).select(
+        "nsurf", F.coalesce(F.col("sim_id"), new_id).alias("miss_entity_id"))
     # no forced broadcast: misses are a subset of DISTINCT surfaces,
     # which is unbounded at corpus scale — AQE broadcasts when small
     return (
@@ -484,29 +484,26 @@ def _graph_links(surfaces: DataFrame, alias_dict: DataFrame,
                  cache_registry: list | None):
     """The graph step's one read of the dictionary: (surf_map, canon),
     surf_map = (nsurf, entity_id, canonical_id) for the distinct
-    surfaces and canon = dict_canonical_names(alias_dict).  In both caps
-    surf_map is an Arrow-built frame resolved on the driver (the
-    canonical id from canon's union-find); otherwise the linked surfaces
-    join canon in Spark, cached only for a caller that passes a
-    cache_registry to release it (the map feeds three joins)."""
+    surfaces and canon = dict_canonical_names(alias_dict).  Within
+    MAX_ALIASES the resolver takes the canonical id from canon's
+    union-find table; over it the linked surfaces join canon.  Unless
+    resolved on the driver, surf_map is cached for a caller that passes
+    a cache_registry to release it (the map feeds three joins)."""
     index = _alias_index(alias_dict)
     canon, ctbl = _canonical_names(alias_dict, index)
-    links = None if index is None else _local_links(surfaces, index)
-    if links is None:
-        surf_map = (_link_in_spark(surfaces, alias_dict, index, cache_registry)
-                    .join(canon.select("entity_id", "cid"), "entity_id", "left")
-                    .select("nsurf", "entity_id",
-                            F.coalesce("cid", "entity_id").alias("canonical_id")))
-        if cache_registry is not None:
-            surf_map = surf_map.cache()
-            cache_registry.append(surf_map)
-        return surf_map, canon
-    eid = links["entity_id"]
-    cid = pc.take(ctbl["cid"].combine_chunks(), pc.index_in(
-        eid, value_set=ctbl["entity_id"].combine_chunks(), skip_nulls=True))
-    return surfaces.sparkSession.createDataFrame(
-        links.append_column("canonical_id", pc.coalesce(cid, eid)),
-        "nsurf string, entity_id string, canonical_id string"), canon
+    if index is None:
+        surf_map, local = (
+            _link_in_spark(surfaces, alias_dict)
+            .join(canon.select("entity_id", "cid"), "entity_id", "left")
+            .select("nsurf", "entity_id",
+                    F.coalesce("cid", "entity_id").alias("canonical_id"))), False
+    else:
+        surf_map, local = _in_cap_links(surfaces, index[0],
+                                        ctbl.select(["entity_id", "cid"]))
+    if cache_registry is not None and not local:
+        surf_map = surf_map.cache()
+        cache_registry.append(surf_map)
+    return surf_map, canon
 
 
 def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:

@@ -15,12 +15,13 @@ Graph step (``build_graph``; ``run_kg`` shares its body): one read of
 the alias dictionary links the distinct mention surfaces and
 canonicalizes its same-as graph (``dict_canonical_names``): NO
 connected-components pass within MAX_ALIASES, one over it.  Within
-MAX_ALIASES and MAX_LOCAL_SURFACES the distinct surfaces are collected
-once and resolved on the driver, so the surface map is a local frame
-with no Python stage.  That one result gives every surface its
-canonical id (edges, linked mentions) and every component its display
-name (nodes), in memory and, for ``run_kg``'s global nodes table, from
-disk.
+MAX_ALIASES one resolver gives each distinct surface its entity and
+canonical id: on the driver from one collect (within
+MAX_LOCAL_SURFACES; the surface map is a local frame with no Python
+stage) or in one mapInArrow stage over the surfaces (past it; no
+join).  That one result gives every surface its canonical id (edges,
+linked mentions) and every component its display name (nodes), in
+memory and, for ``run_kg``'s global nodes table, from disk.
 
 Buckets are `pmod(xxhash64(doc_id), n_buckets)` — content-derived, so
 a resumed run (or a differently-sized cluster) maps every document to
@@ -142,18 +143,20 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
     Everything expensive happens once at SURFACE grain (distinct
     normalized mention texts): link, then resolve each surface's entity
     to its same-as component (dict_canonical_names: no connected-
-    components pass within MAX_ALIASES, one over it).  Within the
-    linking bounds that is one bounded collect of the surfaces,
-    resolved on the driver.  The surface->canonical map joins back onto
+    components pass within MAX_ALIASES, one over it).  Within
+    MAX_ALIASES one resolver maps each surface to its entity and
+    canonical id, on the driver from one bounded collect (within
+    MAX_LOCAL_SURFACES) or in one mapInArrow stage over the surfaces
+    (past it).  The surface->canonical map joins back onto
     the mention and triple streams with NO forced broadcast: distinct
     surfaces are unbounded at corpus scale (a forced broadcast of
     hundreds of millions of rows would OOM), so AQE decides.  ``nodes``
     and ``edges`` are lazy.
 
-    Past the linking bounds the surface map is cached only when
-    cache_registry is given; it and the in-cap pandas UDF's broadcast
-    are appended to it so callers can unpersist them after their
-    writes complete.  Without a registry nothing is cached.
+    Unless it was resolved on the driver, the surface map is cached
+    only when cache_registry is given, and appended to it so callers
+    can unpersist it after their writes complete.  Without a registry
+    nothing is cached.
     """
     linked_canon, canon, edges = _graph_tables(
         mentions, triples, alias_dict, cache_registry)
@@ -180,7 +183,8 @@ def run_kg(
 
     Pre-work is two driver collects: the per-bucket fingerprint
     aggregate and the manifest rows for this input+layout; a run whose
-    buckets are all done returns after them.  The graph step runs no
+    buckets are all done returns after them.  Every cache the run makes
+    is released when it returns or raises.  The graph step runs no
     connected-components pass within MAX_ALIASES (one over it), and its
     canonicalization serves the edges and the global nodes table.
 
@@ -244,49 +248,48 @@ def run_kg(
     # the annotation arrays once per consumer
     mentions = mentions_df(annotated).cache()
     triples = triples_df(annotated).cache()
-    caches = [mentions, triples]
+    caches = [annotated, mentions, triples]
+    try:
+        linked_canon, canon, edges = _graph_tables(
+            mentions, triples, alias_dict, caches)
 
-    linked_canon, canon, edges = _graph_tables(
-        mentions, triples, alias_dict, caches)
+        # writes (bucket-partitioned; dynamic overwrite = idempotent re-run).
+        # Rebalancing on the bucket gives each bucket directory one file per
+        # AQE partition, not one per upstream task: AQE coalesces small
+        # buckets and splits skewed ones.
+        for name, df in (("annotations", annotations_long(annotated)),
+                         ("mentions", linked_canon), ("triples", triples),
+                         ("edges", edges)):
+            with_bucket(df).hint("rebalance", "bucket").write.mode("overwrite") \
+                .partitionBy("bucket").parquet(f"{out_dir}/{name}")
+        # nodes is GLOBAL and non-partitioned: on a resumed run the
+        # in-memory linked_canon covers only recomputed buckets, so rebuild
+        # it from the full on-disk mentions table (all buckets) after the
+        # per-bucket writes commit — otherwise a partial resume would
+        # silently replace the table with a subset-derived one.  canon is
+        # the canonicalization the edges used: no second dictionary read.
+        nodes_from_linked(spark.read.parquet(f"{out_dir}/mentions"), canon) \
+            .write.mode("overwrite").parquet(f"{out_dir}/nodes")
 
-    # writes (bucket-partitioned; dynamic overwrite = idempotent re-run).
-    # Rebalancing on the bucket gives each bucket directory one file per
-    # AQE partition, not one per upstream task: AQE coalesces small
-    # buckets and splits skewed ones.
-    for name, df in (("annotations", annotations_long(annotated)),
-                     ("mentions", linked_canon), ("triples", triples),
-                     ("edges", edges)):
-        with_bucket(df).hint("rebalance", "bucket").write.mode("overwrite") \
-            .partitionBy("bucket").parquet(f"{out_dir}/{name}")
-    # nodes is GLOBAL and non-partitioned: on a resumed run the
-    # in-memory linked_canon covers only recomputed buckets, so rebuild
-    # it from the full on-disk mentions table (all buckets) after the
-    # per-bucket writes commit — otherwise a partial resume would
-    # silently replace the table with a subset-derived one.  canon is
-    # the canonicalization the edges used: no second dictionary read.
-    nodes_from_linked(spark.read.parquet(f"{out_dir}/mentions"), canon) \
-        .write.mode("overwrite").parquet(f"{out_dir}/nodes")
-
-    # per-bucket lineage metrics; doc counts come from the fingerprint
-    # aggregate, so only the annotated side needs a job
-    ann_counts = {
-        int(r["bucket"]): (int(r["sentences"]), int(r["triples"] or 0))
-        for r in with_bucket(annotated.select("doc_id", F.size("triples").alias("nt")))
-        .groupBy("bucket").agg(F.count(F.lit(1)).alias("sentences"),
-                               F.sum("nt").alias("triples")).collect()
-    }
-    stats = {b: (n, *ann_counts.get(b, (0, 0))) for b, n in sorted(todo_docs.items())}
-    manifest_rows = [
-        (run_id, b, "done", n, sents, trips,
-         prior_attempts.get(b, 0) + 1, fp, n_buckets)
-        for b, (n, sents, trips) in stats.items()
-    ]
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA) \
-        .write.mode("append").parquet(f"{out_dir}/manifest")
-
-    annotated.unpersist()
-    for df in caches:  # release executor storage memory for later jobs
-        df.unpersist()
+        # per-bucket lineage metrics; doc counts come from the fingerprint
+        # aggregate, so only the annotated side needs a job
+        ann_counts = {
+            int(r["bucket"]): (int(r["sentences"]), int(r["triples"] or 0))
+            for r in with_bucket(annotated.select("doc_id", F.size("triples").alias("nt")))
+            .groupBy("bucket").agg(F.count(F.lit(1)).alias("sentences"),
+                                   F.sum("nt").alias("triples")).collect()
+        }
+        stats = {b: (n, *ann_counts.get(b, (0, 0))) for b, n in sorted(todo_docs.items())}
+        manifest_rows = [
+            (run_id, b, "done", n, sents, trips,
+             prior_attempts.get(b, 0) + 1, fp, n_buckets)
+            for b, (n, sents, trips) in stats.items()
+        ]
+        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA) \
+            .write.mode("append").parquet(f"{out_dir}/manifest")
+    finally:  # release executor storage memory, also when a write fails
+        for df in caches:
+            df.unpersist()
     n_docs, n_sents, n_triples = (sum(col) for col in zip(*stats.values()))
     return {
         "run_id": run_id,

@@ -1,6 +1,7 @@
 """Entity linking: exact hits, similarity fallback, minted ids on the
-driver, broadcast-UDF and distributed placements; same-as edges and
-the dictionary's canonicalization on both routes."""
+driver, executor and distributed placements; the one in-cap resolver
+and its past-the-bound plan; same-as edges and the dictionary's
+canonicalization on both routes."""
 
 from pyspark.sql import functions as F
 
@@ -226,7 +227,7 @@ def test_broadcast_tie_is_independent_of_batch(spark, monkeypatch):  # noqa: F81
         return {r["nsurf"]: r["entity_id"]
                 for r in L.link_surfaces(df, alias).collect()}
 
-    # driver placement, then the broadcast pandas UDF, then the gram join
+    # driver placement, then the executor resolver, then the gram join
     for attr, cap in (("MAX_LOCAL_SURFACES", None), ("MAX_LOCAL_SURFACES", 0),
                       ("MAX_ALIASES", 0)):
         if cap is not None:
@@ -395,7 +396,7 @@ def test_alias_dict_is_a_local_relation(spark):  # noqa: F811
 
 
 def test_link_placements_agree_randomized(spark, monkeypatch):  # noqa: F811
-    """Driver, broadcast-UDF and distributed placements give the same
+    """Driver, executor and distributed placements give the same
     surface -> entity map and the same build_graph edges and nodes on a
     collision-dense dictionary: exact hits, near variants, the 'order
     small' tie, noise that mints ids, a null and an empty surface, a
@@ -442,7 +443,7 @@ def test_link_placements_agree_randomized(spark, monkeypatch):  # noqa: F811
             for df, cols in ((edges, edge_cols), (nodes, node_cols))]
 
     driver = run()
-    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)  # broadcast pandas UDF
+    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)  # executor resolver
     udf = run()
     monkeypatch.setattr(L, "MAX_ALIASES", 0)         # distributed gram join
     assert driver == udf == run()
@@ -454,3 +455,74 @@ def test_link_placements_agree_randomized(spark, monkeypatch):  # noqa: F811
     kinds = {v[0] for v in links.values() if v}
     assert kinds == {"E", "X"}
     assert len(driver[1][0]) > 0 and len(driver[1][1]) > 0
+
+
+def test_past_bound_all_hits_build_no_matrix(spark, monkeypatch):  # noqa: F811
+    """Past MAX_LOCAL_SURFACES, surfaces that all hit the exact map link
+    with no n-gram matrix built on the driver and no broadcast made."""
+    import phonlp_spark.pipeline.linking as L
+
+    def boom(*_a, **_k):
+        raise AssertionError("n-gram matrix or broadcast for all-hit surfaces")
+
+    alias = L.build_alias_dict(spark, NAMES + ["A_B_C", "A_B_D"])
+    want = {}
+    for r in alias.collect():
+        s = r["alias"].replace("_", " ").lower()
+        want[s] = min(want.get(s, r["entity_id"]), r["entity_id"])
+    surfaces = spark.createDataFrame([(s,) for s in want], "nsurf string")
+    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)
+    monkeypatch.setattr(L, "_alias_matrix", boom)
+    monkeypatch.setattr(spark.sparkContext, "broadcast", boom)
+    got = {r["nsurf"]: r["entity_id"]
+           for r in L.link_surfaces(surfaces, alias).collect()}
+    assert got == want
+
+
+def test_resolver_builds_each_table_once(spark, monkeypatch):  # noqa: F811
+    """One resolver hashes the alias rows once and builds the n-gram
+    matrix on its first miss only, however many batches it maps; a
+    null surface never matches, not even a null alias surface."""
+    import pyarrow as pa
+
+    import phonlp_spark.pipeline.linking as L
+    alias = L.build_alias_dict(spark, NAMES).unionByName(spark.createDataFrame(
+        [(None, "Enull", "z")], L.ALIAS_SCHEMA))
+    index = L._alias_index(alias)
+    ids = dict(zip(*(index[0][c].to_pylist() for c in ("nsurf", "entity_id"))))
+    built = {"lookup": 0, "matrix": 0}
+
+    def counting(name, real):
+        def wrapped(*args):
+            built[name] += 1
+            return real(*args)
+        return wrapped
+
+    monkeypatch.setattr(L, "_lookup", counting("lookup", L._lookup))
+    monkeypatch.setattr(L, "_alias_matrix", counting("matrix", L._alias_matrix))
+    resolve = L._Resolver(index[0])
+    hits = pa.array(["hà nội", None, "nguyễn văn an"])
+    got = resolve(hits)
+    assert got["entity_id"].to_pylist() == [ids["hà nội"], None, ids["nguyễn văn an"]]
+    assert built == {"lookup": 1, "matrix": 0}
+    for _ in range(3):
+        got = resolve(pa.array(["công ty fpt softwar", "hà nội"]))
+        assert got["entity_id"].to_pylist() == [ids["công ty fpt software"],
+                                                ids["hà nội"]]
+    assert built == {"lookup": 1, "matrix": 1}
+    assert resolve(pa.array(["zzz qqq"]), max_cells=len(ids) - 1) is None
+
+
+def test_past_bound_plan_is_one_arrow_map(spark, monkeypatch):  # noqa: F811
+    """Past MAX_LOCAL_SURFACES, link_surfaces is one Python map-in-Arrow
+    stage over the surfaces: no pandas UDF (ArrowEvalPython) and no join
+    of the surfaces with the alias map."""
+    import phonlp_spark.pipeline.linking as L
+    monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)
+    alias = L.build_alias_dict(spark, NAMES)
+    surfaces = spark.createDataFrame([("hà nội",), ("zz",)], "nsurf string")
+    plan = (L.link_surfaces(surfaces, alias)._jdf.queryExecution()
+            .executedPlan().toString())
+    assert plan.count("MapInArrow") == 1
+    assert "ArrowEvalPython" not in plan
+    assert "Join" not in plan

@@ -346,39 +346,56 @@ def test_build_graph_job_count(spark):  # noqa: F811
 
 
 def test_run_kg_releases_its_broadcasts(spark, monkeypatch, out_dir):  # noqa: F811
-    """Every broadcast created during run_kg is unpersisted by the time
-    it returns.  The driver placement makes none; with its bound at 0
-    the broadcast pandas UDF makes the n-gram matrix one."""
+    """run_kg makes no broadcast on either in-cap placement: the driver
+    resolver, and with its bound at 0 the executor resolver, which
+    ships the alias rows in its task, not an n-gram matrix."""
     sc = spark.sparkContext
-    real, made, released = sc.broadcast, [], set()
+    real, made = sc.broadcast, []
 
     def recording(value):
-        bc = real(value)
-        made.append(bc)
-        unpersist = bc.unpersist
-
-        def recorded(*args, **kwargs):
-            released.add(id(bc))
-            return unpersist(*args, **kwargs)
-
-        bc.unpersist = recorded
-        return bc
+        made.append(value)
+        return real(value)
 
     monkeypatch.setattr(sc, "broadcast", recording)
     docs, alias = _inputs(spark, n=40)
     run_kg(spark, docs, alias, out_dir, n_buckets=4)
     assert not made
     monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", 0)
-    run_kg(spark, docs, alias, out_dir + "-udf", n_buckets=4)
-    shutil.rmtree(out_dir + "-udf", ignore_errors=True)
-    assert made
-    assert all(id(bc) in released for bc in made)
+    run_kg(spark, docs, alias, out_dir + "-executor", n_buckets=4)
+    shutil.rmtree(out_dir + "-executor", ignore_errors=True)
+    assert not made
+
+
+def test_run_kg_releases_its_caches_when_a_write_fails(spark, monkeypatch,  # noqa: F811
+                                                       out_dir):
+    """A failing write propagates, and run_kg still unpersists what it
+    cached (annotations, mentions, triples and, past the driver bound,
+    the surface map): the persisted-RDD count is what it was."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path.endswith("/edges"):
+            raise RuntimeError("edges write failed")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    docs, alias = _inputs(spark, n=40)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs
+    for cap in (L.MAX_LOCAL_SURFACES, 0):
+        monkeypatch.setattr(L, "MAX_LOCAL_SURFACES", cap)
+        before = persisted().size()
+        with pytest.raises(RuntimeError, match="edges write failed"):
+            run_kg(spark, docs, alias, f"{out_dir}-{cap}", n_buckets=4)
+        assert persisted().size() == before
+        shutil.rmtree(f"{out_dir}-{cap}", ignore_errors=True)
 
 
 def test_build_graph_leaves_nothing_persisted(spark, monkeypatch):  # noqa: F811
     """build_graph without a cache_registry persists nothing: three
     builds and an edges count each leave the persisted-RDD count as it
-    was, on the driver placement and on the broadcast pandas UDF."""
+    was, on the driver placement and on the executor resolver."""
     from phonlp_spark.pipeline.annotate import mentions_df, triples_df
 
     ann, alias = _annotated(spark, n=30)
